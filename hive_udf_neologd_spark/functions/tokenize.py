@@ -31,7 +31,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer, Mode
-from hive_udf_neologd_spark.tokenizer.dictionary import fetch_user_dict_url
+from hive_udf_neologd_spark.tokenizer.dictionary import (
+    UserDictionary,
+    fetch_user_dict_url,
+)
 from hive_udf_neologd_spark.version import VERSION
 
 # Per-worker analyzer cache, keyed by frozen config (O10).
@@ -73,6 +76,25 @@ def _resolve_user_dict(user_dict) -> tuple | None:
     )
 
 
+def _config_key(mode=None, stop_words=None, stop_tags=None, user_dict=None) -> tuple:
+    """Resolve and validate a tokenizer config on the driver, before any
+    Spark job runs — the reference's fail-at-plan-time ``initialize``
+    (SURVEY.md §3) — into the frozen per-worker engine-cache key (O10).
+    Raises ``ValueError`` on a bad mode (O3), ``TypeError`` on a bad
+    user_dict type, and ``UserDictionaryError`` on URL/CSV failures
+    (O6/O7)."""
+    parsed_mode = Mode.parse(mode)
+    frozen_user = _resolve_user_dict(user_dict)
+    if frozen_user is not None:
+        UserDictionary.from_rows(list(frozen_user))
+    return (
+        parsed_mode.value,
+        tuple(stop_words) if stop_words is not None else None,
+        tuple(stop_tags) if stop_tags is not None else None,
+        frozen_user,
+    )
+
+
 def tokenize_ja(
     mode: str | None = None,
     stop_words: list[str] | None = None,
@@ -81,23 +103,12 @@ def tokenize_ja(
 ):
     """Build the tokenizer pandas UDF.
 
-    All config validation happens here, before any Spark job runs — the
-    same fail-at-plan-time property as the reference's ``initialize``
-    (SURVEY.md §3).  Raises ``ValueError`` on a bad mode (the analog of
+    All config validation happens here, before any Spark job runs (see
+    ``_config_key``): ``ValueError`` on a bad mode (the analog of
     ``UDFArgumentException``), ``TypeError`` on a bad user_dict type, and
     ``UserDictionaryError`` on URL/CSV failures.
     """
-    parsed_mode = Mode.parse(mode)  # O3: validate now
-    frozen_stop_words = tuple(stop_words) if stop_words is not None else None
-    frozen_stop_tags = tuple(stop_tags) if stop_tags is not None else None
-    frozen_user = _resolve_user_dict(user_dict)  # O6/O7: fetch/parse-check now
-    if frozen_user is not None:
-        # Validate CSV now so malformed dicts fail on the driver.
-        from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionary
-
-        UserDictionary.from_rows(list(frozen_user))
-
-    key = (parsed_mode.value, frozen_stop_words, frozen_stop_tags, frozen_user)
+    key = _config_key(mode, stop_words, stop_tags, user_dict)
 
     @pandas_udf(ArrayType(StringType()))
     def _tokenize(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -126,16 +137,7 @@ def tokenize_ja_rich(
     pipeline builds one engine)."""
     from pyspark.sql.types import BooleanType, StructField, StructType
 
-    parsed_mode = Mode.parse(mode)
-    frozen_stop_words = tuple(stop_words) if stop_words is not None else None
-    frozen_stop_tags = tuple(stop_tags) if stop_tags is not None else None
-    frozen_user = _resolve_user_dict(user_dict)
-    if frozen_user is not None:
-        from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionary
-
-        UserDictionary.from_rows(list(frozen_user))
-
-    key = (parsed_mode.value, frozen_stop_words, frozen_stop_tags, frozen_user)
+    key = _config_key(mode, stop_words, stop_tags, user_dict)
     schema = ArrayType(
         StructType(
             [
@@ -215,7 +217,7 @@ def register_udfs(spark: SparkSession) -> None:
 
     # Same frozen default config (and worker-side engine cache key) as
     # tokenize_ja() with no arguments.
-    key = (Mode.parse(None).value, None, None, None)
+    key = _config_key()
 
     # One-slot worker-side cache so the hot path is a single bound-method
     # call: list-cell (not a dict lookup + tuple hash per row).  The cell

@@ -699,9 +699,8 @@ _MAX_CC_ITERS = 10
 # Per-intermediate-vertex fan-out cap for the one-time edge squaring (round
 # 13 skew guard): hubs keep their cap smallest neighbors, bounding the
 # squared edge count at cap x |E|.  Far above any dup-cluster occupancy the
-# LSH band join can produce on sane corpora (sf0.1 max degree: 18); env-
-# overridable for production tuning.
-_CC_SQUARE_CAP = int(__import__("os").environ.get("SPARK_GRAFT_CC_SQUARE_CAP", "64"))
+# LSH band join can produce on sane corpora (sf0.1 max degree: 18).
+_CC_SQUARE_CAP = 64
 
 
 def d07_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

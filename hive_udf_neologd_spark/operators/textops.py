@@ -21,6 +21,7 @@ aggregates map-side first.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from hive_udf_neologd_spark.functions.tokenize import tokenize_ja
 from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import local_frame, read_table
+from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, METRICS, values_sql
 
 
 def ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -1340,77 +1342,59 @@ T21_SQL = __import__(
 ).t21_values_sql()
 
 
-def t22_segmentation_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL segmentation-parity metric (VERDICT r6 next-round #1): the
-    pinned multi-register corpus (tokenizer/parity.py — expected
-    segmentations hand-derived from MeCab/IPADIC + NEologd behavior, the
-    reference's own goldens seeding the NE register) scored as token-span
-    F1 per register plus a __total__ row.
+def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXTERNAL parity metric for one axis of tokenizer/parity_harness.py
+    (t22 spans, t25 modes, t27 lemmas, t28 readings, t29 user dict, t30
+    POS): per-register counts plus a ``__total__`` row and the axis
+    metric, over a held-out corpus whose expectations were hand-derived
+    and committed before measurement.
 
-    Shape: a constant ~110-row frame through one narrow pandas UDF — no
-    shuffle beyond the 10-group aggregate, constant at any cluster scale
-    (the 100 TB shape of this harness is broadcast-corpus vs sampled
-    engine output; same plan).  Oracle replays the recorded aggregates
-    (T22_EXPECTED, recapture protocol) as a VALUES table with the same
-    IEEE f1 expression — full hash check."""
+    Shape: a constant (row, register) frame through one narrow
+    iterator-form pandas UDF that resolves the axis on the worker and
+    scores each sentence with ``parity_harness.score`` — the same scorer
+    the in-process recapture uses — then one rollup aggregate.
+    Constant at any cluster scale (the 100 TB shape of this harness is
+    broadcast-corpus vs sampled engine output; same plan).  The oracle
+    replays the recorded aggregates as a VALUES table with the same IEEE
+    metric expression (``parity_harness.values_sql``) — full hash check."""
     prepare(spark)
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
 
-    from hive_udf_neologd_spark.tokenizer.parity import (
-        PARITY_CORPUS,
-        expected_spans,
-    )
-
-    rows = [
-        (sid, register, text, expected_spans(text, surfaces))
-        for sid, register, text, surfaces in PARITY_CORPUS
-    ]
+    a = AXES[axis]
+    metric = METRICS[a.metric]
+    cols = list(metric.columns)
     df = local_frame(
-        spark, rows, "sid long, register string, text string, exp_spans array<long>"
+        spark,
+        [(i, row[1]) for i, row in enumerate(a.corpus)],
+        "row long, register string",
     )
 
-    @pandas_udf(ArrayType(LongType()))
-    def _pred_spans(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from hive_udf_neologd_spark.tokenizer.parity import predicted_spans
+    @pandas_udf(", ".join(f"{c} long" for c in cols))
+    def _score(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, score
 
-        for series in batches:
-            yield series.map(predicted_spans)
+        ax = AXES[axis]
+        for rows in batches:
+            yield pd.DataFrame(
+                [score(ax, ax.corpus[i]) for i in rows], columns=cols, dtype="int64"
+            )
 
-    pred = df.select(
-        "register", "exp_spans", _pred_spans("text").alias("pred_spans")
-    )
-    per = pred.select(
-        "register",
-        F.size("exp_spans").alias("n_exp_row"),
-        F.size(F.array_intersect("pred_spans", "exp_spans")).alias("tp_row"),
-        F.size("pred_spans").alias("n_pred_row"),
-    )
+    per = df.select("register", _score("row").alias("s"))
     # rollup: per-register rows AND the grand total from ONE aggregation
-    # over ONE ArrowEvalPython pass (plan-audited round 9: the previous
-    # by_reg/total unionByName embedded the scoring subtree twice, so
-    # the union's second branch re-tokenized the corpus; NULL register =
-    # the rollup grand total = __total__).
+    # over ONE ArrowEvalPython pass (a by_reg/total unionByName would embed
+    # the scoring subtree twice and re-tokenize the corpus; NULL register =
+    # the rollup grand total = __total__; plan-asserted in
+    # tests/test_r13_optimizations.py).
     return (
         per.rollup("register")
         .agg(
             F.count(F.lit(1)).alias("n_sent"),
-            F.sum("tp_row").alias("tp"),
-            F.sum("n_pred_row").alias("n_pred"),
-            F.sum("n_exp_row").alias("n_exp"),
+            *[F.sum(f"s.{c}").alias(c) for c in cols],
         )
         .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn(
-            "f1",
-            (F.col("tp") * 2).cast("double") / (F.col("n_pred") + F.col("n_exp")),
-        )
+        .withColumn(a.metric, F.expr(metric.sql))
         .orderBy("register")
     )
-
-
-T22_SQL = __import__(
-    "hive_udf_neologd_spark.tokenizer.parity", fromlist=["t22_values_sql"]
-).t22_values_sql()
 
 
 def t23_ja_search_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1515,87 +1499,6 @@ GROUP BY p.pid ORDER BY p.pid
 T24_SQL = _t24_sql()
 
 
-def t25_mode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL mode-parity metric (VERDICT r8 next-round #1): the held-out
-    SEARCH/EXTENDED corpus (tokenizer/mode_parity.py — see that module
-    for the current sentence/register counts; expected emissions
-    hand-derived from the documented mode semantics and committed before
-    measurement) scored as per-sentence
-    EXACT token-sequence match — stricter than t22's span F1, because
-    SEARCH's compound-as-synonym emission is an ORDER contract (Lucene
-    5.5.5 Mode.SEARCH javadoc; reference KuromojiNEologdUDF.java:171-192
-    pins the mode surface, 306-316 drains every emitted term).
-
-    Shape: a constant-size frame through one narrow iterator-form
-    pandas UDF, per-register aggregate — constant at any cluster scale
-    (t22's 100 TB argument: broadcast corpus vs sampled engine output,
-    same plan).  Oracle replays the recorded aggregates (T25_EXPECTED,
-    recapture protocol) as a VALUES table with the same IEEE acc
-    expression — full hash check."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.mode_parity import MODE_PARITY_CORPUS
-
-    rows = [
-        (sid, register, mode, text, list(surfaces))
-        for sid, register, mode, text, surfaces in MODE_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark,
-        rows,
-        "sid long, register string, mode string, text string, exp array<string>",
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.mode_parity import predicted_surfaces
-
-        for frame in batches:
-            preds = [
-                predicted_surfaces(t, m)
-                for t, m in zip(frame["text"], frame["mode"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "mode", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    # rollup grand total = __total__ (one ArrowEvalPython pass — see
-    # t22's plan-audit note).
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t25_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.mode_parity import t25_values_sql
-
-    return t25_values_sql()
-
-
-T25_SQL = _t25_sql()
-
-
 def t26_ja_rich_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-analysis throughput gate (round 9): t18's twin through
     ``tokenize_ja_rich`` — the per-token struct path (term/surface/POS/
@@ -1668,335 +1571,6 @@ GROUP BY p.pid ORDER BY p.pid
 
 
 T26_SQL = _t26_sql()
-
-
-def t27_lemma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL lemma-parity metric (round 9, third axis): the held-out
-    lemma corpus (tokenizer/lemma_parity.py — see that module for the
-    current sentence/register counts; expected OUTPUT TERMS of the full
-    default analyzer chain, hand-derived and committed before
-    measurement) scored by exact
-    term-sequence match.  Covers what t22's spans and t25's raw
-    emissions cannot see: base-form lemmatization (incl. the
-    same-surface noun/verb tie class audit 148 documented as
-    gate-blind), lemma-level stopword removal, width folding, katakana
-    stemming, lowercasing.  Same constant-frame shape and VALUES-oracle
-    pattern as t22/t25."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-        LEMMA_PARITY_CORPUS,
-    )
-
-    rows = [
-        (sid, register, text, list(terms))
-        for sid, register, text, terms in LEMMA_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark, rows, "sid long, register string, text string, exp array<string>"
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-            predicted_terms,
-        )
-
-        for frame in batches:
-            preds = [predicted_terms(t) for t in frame["text"]]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    # rollup grand total = __total__ (one ArrowEvalPython pass — see
-    # t22's plan-audit note).
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t27_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.lemma_parity import t27_values_sql
-
-    return t27_values_sql()
-
-
-T27_SQL = _t27_sql()
-
-
-def t28_reading_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL reading-parity metric (round 10, fourth axis — VERDICT r9
-    next-round #4): the held-out reading corpus
-    (tokenizer/reading_parity.py — see that module for the current
-    sentence/register counts; expected (surface, reading) pairs of the
-    default-chain rich output, derived from public IPADIC reading facts
-    + committed row provenance and committed before measurement) scored
-    by exact pair-sequence match.  Covers the one analyzer output the
-    other three axes cannot see: IPADIC column-11 readings — authored
-    lemma tier, per-row conjugated derivation (行っ → イッ), rendaku
-    compounds, and the None discipline for unauthored/OOV surfaces
-    (never fabricate).  Same constant-frame shape and VALUES-oracle
-    pattern as t22/t25/t27.
-
-    Scale: constant-size in-memory frame through one iterator-form
-    pandas UDF + rollup aggregate — sf-invariant, one ArrowEvalPython
-    pass (the t27 plan shape)."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.reading_parity import (
-        READING_PARITY_CORPUS,
-        encode_pair,
-    )
-
-    rows = [
-        (sid, register, text, [encode_pair(s, r) for s, r in pairs])
-        for sid, register, text, pairs in READING_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark, rows, "sid long, register string, text string, exp array<string>"
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            encode_pair,
-            predicted_pairs,
-        )
-
-        for frame in batches:
-            preds = [
-                [encode_pair(s, r) for s, r in predicted_pairs(t)]
-                for t in frame["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t28_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.reading_parity import t28_values_sql
-
-    return t28_values_sql()
-
-
-T28_SQL = _t28_sql()
-
-
-def t29_userdict_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL user-dictionary parity metric (round 10, fifth axis —
-    VERDICT r9 next-round #5): the held-out user-dict corpus
-    (tokenizer/userdict_parity.py — see that module for the current
-    sentence/register counts; per-sentence inline user dictionaries +
-    modes, expected (surface, reading) pairs derived from the DOCUMENTED
-    override semantics — KuromojiNEologdUDFTest.java:261-302,342-381 —
-    and committed before measurement) scored by exact pair-sequence
-    match.  Pins segmentation override, reading pass-through (incl.
-    empty-readings → None and user-reading-beats-dictionary), stop-tag /
-    stop-word interaction on user tokens, and the ALL-modes
-    no-decompound exclusion, externally.
-
-    Scale: constant-size in-memory frame through one iterator-form
-    pandas UDF + rollup aggregate — sf-invariant (the t27/t28 plan
-    shape; per-config analyzers are lru-cached per worker)."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-        UD_PARITY_CORPUS,
-        encode_pair,
-    )
-
-    rows = [
-        (sid, register, mode, list(ud_rows),
-         [encode_pair(s, r) for s, r in pairs], text)
-        for sid, register, mode, ud_rows, text, pairs in UD_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark,
-        rows,
-        "sid long, register string, mode string, ud array<string>, "
-        "exp array<string>, text string",
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            encode_pair,
-            predicted_pairs,
-        )
-
-        for frame in batches:
-            preds = [
-                [
-                    encode_pair(s, r)
-                    for s, r in predicted_pairs(mode, tuple(ud), text)
-                ]
-                for mode, ud, text in zip(
-                    frame["mode"], frame["ud"], frame["text"]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("mode", "ud", "text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t29_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-        t29_values_sql,
-    )
-
-    return t29_values_sql()
-
-
-T29_SQL = _t29_sql()
-
-
-def t30_pos_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL POS-parity metric (round 10, sixth axis): the held-out
-    POS corpus (tokenizer/pos_parity.py — see that module for the
-    current sentence/register counts; expected (surface, pos) pairs
-    derived from the committed rows' POS strings + documented unknown
-    classes, committed before measurement) scored by exact
-    pair-sequence match.  Pins the one analyzer output where a wrong
-    ROW selection can hide with term/span/lemma/reading all identical:
-    POS subtype (一般 vs サ変接続 vs 固有名詞-地域…), the input to
-    stop-tag filtering and POS-based pipeline stages (t26's 名詞
-    aggregation).  Same constant-frame shape and VALUES-oracle pattern
-    as the other five axes."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.pos_parity import (
-        POS_PARITY_CORPUS,
-        encode_pair,
-    )
-
-    rows = [
-        (sid, register, text, [encode_pair(s, p) for s, p in pairs])
-        for sid, register, text, pairs in POS_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark, rows, "sid long, register string, text string, exp array<string>"
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.pos_parity import (
-            encode_pair,
-            predicted_pairs,
-        )
-
-        for frame in batches:
-            preds = [
-                [encode_pair(s, p) for s, p in predicted_pairs(t)]
-                for t in frame["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t30_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.pos_parity import t30_values_sql
-
-    return t30_values_sql()
-
-
-T30_SQL = _t30_sql()
 
 
 # --- sql03: SQL-registered tokenizer throughput ----------------------------
@@ -2075,16 +1649,16 @@ TEXT_QUERIES = {
     "t19_training_pipeline": t19_training_pipeline,
     "t20_stratified_sample": t20_stratified_sample,
     "t21_connection_matrix": t21_connection_matrix,
-    "t22_segmentation_parity": t22_segmentation_parity,
+    "t22_segmentation_parity": partial(parity_query, "t22"),
     "t23_ja_search_throughput": t23_ja_search_throughput,
     "t24_ja_extended_throughput": t24_ja_extended_throughput,
     "sql03_sql_udf_throughput": sql03_sql_udf_throughput,
-    "t25_mode_parity": t25_mode_parity,
+    "t25_mode_parity": partial(parity_query, "t25"),
     "t26_ja_rich_throughput": t26_ja_rich_throughput,
-    "t27_lemma_parity": t27_lemma_parity,
-    "t28_reading_parity": t28_reading_parity,
-    "t29_userdict_parity": t29_userdict_parity,
-    "t30_pos_parity": t30_pos_parity,
+    "t27_lemma_parity": partial(parity_query, "t27"),
+    "t28_reading_parity": partial(parity_query, "t28"),
+    "t29_userdict_parity": partial(parity_query, "t29"),
+    "t30_pos_parity": partial(parity_query, "t30"),
 }
 
 # t08's oracle is a constant-literal VALUES table (see T08_SQL): DuckDB
@@ -2115,14 +1689,14 @@ TEXT_ORACLES = {
     "t19_training_pipeline": T19_SQL,
     "t20_stratified_sample": T20_SQL,
     "t21_connection_matrix": T21_SQL,
-    "t22_segmentation_parity": T22_SQL,
+    "t22_segmentation_parity": values_sql("t22"),
     "t23_ja_search_throughput": T23_SQL,
     "t24_ja_extended_throughput": T24_SQL,
     "sql03_sql_udf_throughput": SQL03_SQL,
-    "t25_mode_parity": T25_SQL,
+    "t25_mode_parity": values_sql("t25"),
     "t26_ja_rich_throughput": T26_SQL,
-    "t27_lemma_parity": T27_SQL,
-    "t28_reading_parity": T28_SQL,
-    "t29_userdict_parity": T29_SQL,
-    "t30_pos_parity": T30_SQL,
+    "t27_lemma_parity": values_sql("t27"),
+    "t28_reading_parity": values_sql("t28"),
+    "t29_userdict_parity": values_sql("t29"),
+    "t30_pos_parity": values_sql("t30"),
 }

@@ -57,9 +57,8 @@ def prepare(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Arrow createDataFrame/toPandas (guide §6): sources.local_frame relies
-    # on it to embed constant corpora as LocalRelations instead of pickled
-    # Python RDDs; identical values either way — this only picks the path.
+    # Arrow createDataFrame/toPandas (guide §6); identical values either
+    # way — this only picks the path (sources.local_frame also sets it).
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     # Externally-created sessions (the driver's harness) default to 200
     # shuffle partitions — size to the actual parallelism; AQE coalesces

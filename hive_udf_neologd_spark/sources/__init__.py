@@ -113,11 +113,13 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     identical schema and identical values (pinned by the oracle hashes of
     every caller).  Guide §4: eliminate the Python boundary.  Only for
     CONSTANT corpora/centroid frames (bounded size at any scale factor);
-    real inputs keep going through read_table.
+    real inputs keep going through read_table.  Sets the Arrow conf
+    itself: without it Spark silently falls back to the pickled-RDD path.
     """
     import pandas as pd
     from pyspark.sql.types import StructType
 
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     struct = StructType.fromDDL(schema)
     pdf = pd.DataFrame([tuple(r) for r in rows], columns=struct.fieldNames())
     return spark.createDataFrame(pdf, schema=struct)

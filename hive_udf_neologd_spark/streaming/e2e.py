@@ -107,9 +107,7 @@ atexit.register(_cleanup_scratch)
 # one state partition per advisory chunk of source bytes.  Deliberately
 # core-count-independent — the driver benches at several SPARK_GRAFT_CPUS
 # values and this derivation gives the same partition count at each.
-_STREAM_ADVISORY_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_ADVISORY_BYTES", str(64 * 1024 * 1024))
-)
+_STREAM_ADVISORY_BYTES = 64 * 1024 * 1024
 _STREAM_MAX_PARTITIONS = 32768  # runaway guard for pathological derivations
 
 

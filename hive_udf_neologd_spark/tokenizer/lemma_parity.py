@@ -58,8 +58,6 @@ default-chain ``JapaneseAnalyzer().tokenize(text)`` output in order.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 LEMMA_PARITY_CORPUS: tuple[tuple[int, str, str, tuple[str, ...]], ...] = (
     # --- ll_onbin ------------------------------------------------------
     (1, "ll_onbin", "昨日手紙を書いた。", ("昨日", "手紙", "書く")),
@@ -225,68 +223,6 @@ LEMMA_PARITY_CORPUS: tuple[tuple[int, str, str, tuple[str, ...]], ...] = (
 )
 
 
-@lru_cache(maxsize=1)
-def _analyzer():
-    from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-    return JapaneseAnalyzer()
-
-
-def predicted_terms(text: str, analyzer=None) -> list[str]:
-    a = analyzer if analyzer is not None else _analyzer()
-    return a.tokenize(text)
-
-
-def compute_expected(dictionary=None) -> dict[str, tuple[int, int, int, int]]:
-    """Per-register (n_sent, n_match, n_tok_exp, n_tok_pred) — recapture
-    source for ``T27_EXPECTED``; same contract as T22/T25.  ``dictionary``
-    scores the axis on an alternate Dictionary (dress-rehearsal hook)."""
-    ana = None
-    if dictionary is not None:
-        from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-        ana = JapaneseAnalyzer(dictionary=dictionary)
-    agg: dict[str, list[int]] = {}
-    for _sid, register, text, terms in LEMMA_PARITY_CORPUS:
-        pred = predicted_terms(text, analyzer=ana)
-        row = agg.setdefault(register, [0, 0, 0, 0])
-        row[0] += 1
-        row[1] += 1 if list(terms) == pred else 0
-        row[2] += len(terms)
-        row[3] += len(pred)
-    total = [0, 0, 0, 0]
-    for row in agg.values():
-        for i in range(4):
-            total[i] += row[i]
-    agg["__total__"] = total
-    return {k: tuple(v) for k, v in sorted(agg.items())}
-
-
-def accuracy(expected: dict[str, tuple[int, int, int, int]] | None = None) -> float:
-    exp = expected if expected is not None else compute_expected()
-    n, match, _, _ = exp["__total__"]
-    return match / n if n else 1.0
-
-
-def mismatches() -> list[tuple[int, str, str, tuple[str, ...], list[str]]]:
-    out = []
-    for sid, register, text, terms in LEMMA_PARITY_CORPUS:
-        pred = predicted_terms(text)
-        if list(terms) != pred:
-            out.append((sid, register, text, terms, pred))
-    return out
-
-
-if __name__ == "__main__":
-    exp = compute_expected()
-    for reg, (n, m, te, tp) in exp.items():
-        flag = "" if m == n else "  <-- MISMATCH"
-        print(f"{reg:16s} n={n:3d} match={m:3d} tok_exp={te:4d} tok_pred={tp:4d}{flag}")
-    print(f"exact-match accuracy: {accuracy(exp):.6f}")
-    for sid, reg, text, want, got in mismatches():
-        print(f"\n#{sid} [{reg}] {text}\n  want: {'|'.join(want)}\n  got:  {'|'.join(got)}")
-
-
 # CI floor (tests/test_parity.py): exact-match accuracy over the held-out
 # lemma corpus — same contract as T25_ACC_FLOOR.  Restored to 1.0 by the
 # round-13 audit-170 fix wave (the カ行促音便 paradigm + いい adjective
@@ -295,7 +231,7 @@ if __name__ == "__main__":
 T27_ACC_FLOOR = 1.0
 
 # RECORDED aggregates — the t27 oracle constants; recapture with
-# ``python -m hive_udf_neologd_spark.tokenizer.lemma_parity`` after any
+# ``python -m hive_udf_neologd_spark.tokenizer.parity_harness t27`` after any
 # dictionary/matrix/filter change (tests/test_parity.py guards the
 # constants against the live engine).  Recorded round 9 at 65 sentences /
 # 19 registers — tranche 2 (voice/aspect morphology, 23 sentences)
@@ -340,19 +276,3 @@ T27_EXPECTED: dict[str, tuple[int, int, int, int]] = {
     "ll_width_lower": (4, 4, 8, 8),
 }
 
-
-def t27_values_sql() -> str:
-    rows = []
-    for register, (n_sent, n_match, n_tok_exp, n_tok_pred) in sorted(
-        T27_EXPECTED.items()
-    ):
-        rows.append(f"('{register}', {n_sent}, {n_match}, {n_tok_exp}, {n_tok_pred})")
-    values = ",\n  ".join(rows)
-    return f"""
-SELECT register, n_sent, n_match, n_tok_exp, n_tok_pred,
-       CAST(n_match AS DOUBLE) / n_sent AS acc
-FROM (VALUES
-  {values}
-) AS v(register, n_sent, n_match, n_tok_exp, n_tok_pred)
-ORDER BY register
-"""

@@ -97,8 +97,6 @@ full raw emission in order.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 MODE_PARITY_CORPUS: tuple[tuple[int, str, str, str, tuple[str, ...]], ...] = (
     # --- ms_kanji4_split: 4-kanji, both 2-kanji halves in dict ------------
     (1, "ms_kanji4_split", "search", "機械学習を学ぶ。",
@@ -523,7 +521,7 @@ def validate_emission(text: str, surfaces: tuple[str, ...]) -> list[tuple[int, i
     text at its span, the maximal (non-nested) spans tile the non-punct
     text, and nested spans exactly tile their container (compound →
     parts).  A typo in an expected token fails HERE, loudly, not silently
-    in the metric — the mode-corpus analog of parity.expected_spans."""
+    in the metric — the mode-corpus analog of parity_harness.surface_spans."""
 
     n = len(text)
 
@@ -581,70 +579,6 @@ def validate_emission(text: str, surfaces: tuple[str, ...]) -> list[tuple[int, i
     return got
 
 
-# --- engine side -------------------------------------------------------------
-
-
-@lru_cache(maxsize=4)
-def _raw_lattice(mode: str):
-    from hive_udf_neologd_spark.tokenizer.dictionary import builtin_dictionary
-    from hive_udf_neologd_spark.tokenizer.lattice import Lattice
-
-    return Lattice(builtin_dictionary(), None, mode)
-
-
-def predicted_surfaces(text: str, mode: str, lattice=None) -> list[str]:
-    """Raw mode-specific emission (punctuation already discarded by the
-    lattice) — the same altitude parity.predicted_spans scores NORMAL at,
-    so the metric isolates the MODE axis from the filter chain.
-    ``lattice`` overrides the cached engine (1M dress-rehearsal hook)."""
-    lat = lattice if lattice is not None else _raw_lattice(mode)
-    return [t.surface for t in lat.segment(text)]
-
-
-def compute_expected(dictionary=None) -> dict[str, tuple[int, int, int, int]]:
-    """Per-register (n_sent, n_match, n_tok_exp, n_tok_pred) by running the
-    live engine — the recapture source for ``T25_EXPECTED`` and the
-    consistency gate in tests.  ``dictionary`` scores the axis on an
-    alternate Dictionary (VERDICT r10 #2 dress rehearsal)."""
-    lats: dict[str, object] = {}
-    if dictionary is not None:
-        from hive_udf_neologd_spark.tokenizer.lattice import Lattice
-
-        lats = {
-            m: Lattice(dictionary, None, m)
-            for m in {row[2] for row in MODE_PARITY_CORPUS}
-        }
-    agg: dict[str, list[int]] = {}
-    for _sid, register, mode, text, surfaces in MODE_PARITY_CORPUS:
-        pred = predicted_surfaces(text, mode, lattice=lats.get(mode))
-        row = agg.setdefault(register, [0, 0, 0, 0])
-        row[0] += 1
-        row[1] += 1 if list(surfaces) == pred else 0
-        row[2] += len(surfaces)
-        row[3] += len(pred)
-    total = [0, 0, 0, 0]
-    for row in agg.values():
-        for i in range(4):
-            total[i] += row[i]
-    agg["__total__"] = total
-    return {k: tuple(v) for k, v in sorted(agg.items())}
-
-
-def accuracy(expected: dict[str, tuple[int, int, int, int]] | None = None) -> float:
-    exp = expected if expected is not None else compute_expected()
-    n, match, _, _ = exp["__total__"]
-    return match / n if n else 1.0
-
-
-def mismatches() -> list[tuple[int, str, str, str, tuple[str, ...], list[str]]]:
-    out = []
-    for sid, register, mode, text, surfaces in MODE_PARITY_CORPUS:
-        pred = predicted_surfaces(text, mode)
-        if list(surfaces) != pred:
-            out.append((sid, register, mode, text, surfaces, pred))
-    return out
-
-
 # CI floor (tests/test_parity.py): exact-match accuracy over the held-out
 # mode corpus.  Saturated at 1.0 after the wave-419 adjudication; a
 # dictionary/matrix/lattice change that regresses ANY sentence fails the
@@ -654,9 +588,9 @@ T25_ACC_FLOOR = 1.0
 
 # RECORDED aggregates — the t25 oracle constants, same recapture protocol
 # as T22_EXPECTED (parity.py): regenerate with
-# ``python -m hive_udf_neologd_spark.tokenizer.mode_parity`` after any
-# dictionary/matrix/lattice change and paste here; tests/test_parity.py's
-# mode-parity gate asserts compute_expected() == T25_EXPECTED so a
+# ``python -m hive_udf_neologd_spark.tokenizer.parity_harness t25`` after
+# any dictionary/matrix/lattice change and paste here; tests/test_parity.py's
+# mode-parity gate asserts compute_expected("t25") == T25_EXPECTED so a
 # re-segmentation can never silently desynchronize the oracle.  Recorded
 # round 9 at 143 sentences / 27 registers (third tranche — the round's
 # new/removed rows pinned across modes — measured 8/8 clean pre-fix): the second mode tranche
@@ -701,29 +635,3 @@ T25_EXPECTED: dict[str, tuple[int, int, int, int]] = {
     'ms_suffix_split': (2, 2, 12, 12),
 }
 
-
-def t25_values_sql() -> str:
-    rows = []
-    for register, (n_sent, n_match, n_tok_exp, n_tok_pred) in sorted(
-        T25_EXPECTED.items()
-    ):
-        rows.append(f"('{register}', {n_sent}, {n_match}, {n_tok_exp}, {n_tok_pred})")
-    values = ",\n  ".join(rows)
-    return f"""
-SELECT register, n_sent, n_match, n_tok_exp, n_tok_pred,
-       CAST(n_match AS DOUBLE) / n_sent AS acc
-FROM (VALUES
-  {values}
-) AS v(register, n_sent, n_match, n_tok_exp, n_tok_pred)
-ORDER BY register
-"""
-
-
-if __name__ == "__main__":
-    exp = compute_expected()
-    for reg, (n, m, te, tp) in exp.items():
-        flag = "" if m == n else "  <-- MISMATCH"
-        print(f"{reg:22s} n={n:3d} match={m:3d} tok_exp={te:4d} tok_pred={tp:4d}{flag}")
-    print(f"exact-match accuracy: {accuracy(exp):.6f}")
-    for sid, reg, mode, text, want, got in mismatches():
-        print(f"\n#{sid} [{reg}/{mode}] {text}\n  want: {'|'.join(want)}\n  got:  {'|'.join(got)}")

@@ -37,8 +37,6 @@ pp_katakana_dict / pp_unknown_ascii.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 POS_PARITY_CORPUS: tuple[
     tuple[int, str, str, tuple[tuple[str, str], ...]], ...
 ] = (
@@ -181,71 +179,6 @@ POS_PARITY_CORPUS: tuple[
 )
 
 
-@lru_cache(maxsize=1)
-def _analyzer():
-    from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-    return JapaneseAnalyzer()
-
-
-def predicted_pairs(text: str, analyzer=None) -> list[tuple[str, str]]:
-    a = analyzer if analyzer is not None else _analyzer()
-    return [(tok["surface"], tok["pos"]) for tok in a.analyze_rich(text)]
-
-
-def compute_expected(dictionary=None) -> dict[str, tuple[int, int, int, int]]:
-    """Per-register (n_sent, n_match, n_tok_exp, n_tok_pred) — recapture
-    source for ``T30_EXPECTED``; same contract as the other axes.
-    ``dictionary`` scores the axis on an alternate Dictionary
-    (dress-rehearsal hook)."""
-    ana = None
-    if dictionary is not None:
-        from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-        ana = JapaneseAnalyzer(dictionary=dictionary)
-    agg: dict[str, list[int]] = {}
-    for _sid, register, text, pairs in POS_PARITY_CORPUS:
-        pred = predicted_pairs(text, analyzer=ana)
-        row = agg.setdefault(register, [0, 0, 0, 0])
-        row[0] += 1
-        row[1] += 1 if list(pairs) == pred else 0
-        row[2] += len(pairs)
-        row[3] += len(pred)
-    total = [0, 0, 0, 0]
-    for row in agg.values():
-        for i in range(4):
-            total[i] += row[i]
-    agg["__total__"] = total
-    return {k: tuple(v) for k, v in sorted(agg.items())}
-
-
-def accuracy(expected: dict[str, tuple[int, int, int, int]] | None = None) -> float:
-    exp = expected if expected is not None else compute_expected()
-    n, match, _, _ = exp["__total__"]
-    return match / n if n else 1.0
-
-
-def mismatches() -> list[tuple]:
-    out = []
-    for sid, register, text, pairs in POS_PARITY_CORPUS:
-        pred = predicted_pairs(text)
-        if list(pairs) != pred:
-            out.append((sid, register, text, pairs, pred))
-    return out
-
-
-if __name__ == "__main__":
-    exp = compute_expected()
-    for reg, (n, m, te, tp) in exp.items():
-        flag = "" if m == n else "  <-- MISMATCH"
-        print(f"{reg:18s} n={n:3d} match={m:3d} tok_exp={te:4d} tok_pred={tp:4d}{flag}")
-    print(f"exact-match accuracy: {accuracy(exp):.6f}")
-    for sid, reg, text, want, got in mismatches():
-        w = "|".join(f"{s}:{p}" for s, p in want)
-        g = "|".join(f"{s}:{p}" for s, p in got)
-        print(f"\n#{sid} [{reg}] {text}\n  want: {w}\n  got:  {g}")
-
-
 # CI floor (tests/test_parity.py): exact-match accuracy over the held-out
 # POS corpus — same contract as the other five axis floors.  Restored to
 # 1.0 by the round-13 audit-170 fix wave; the tranche-16 pre-fix floor
@@ -253,7 +186,7 @@ if __name__ == "__main__":
 T30_ACC_FLOOR = 1.0
 
 # RECORDED aggregates — the t30 oracle constants; recapture with
-# ``python -m hive_udf_neologd_spark.tokenizer.pos_parity`` after any
+# ``python -m hive_udf_neologd_spark.tokenizer.parity_harness t30`` after any
 # dictionary/lattice change.  Recorded round 10 at 25 sentences / 17
 # registers.  Honest measurements: tranche 1 **17/17 clean on the first
 # run**, tranche 2 **8/8 clean** — POS-subtype row selection was already
@@ -293,25 +226,3 @@ T30_EXPECTED: dict[str, tuple[int, int, int, int]] = {
     "pp_unknown_ascii": (2, 2, 7, 7),
 }
 
-
-def t30_values_sql() -> str:
-    rows = []
-    for register, (n_sent, n_match, n_tok_exp, n_tok_pred) in sorted(
-        T30_EXPECTED.items()
-    ):
-        rows.append(f"('{register}', {n_sent}, {n_match}, {n_tok_exp}, {n_tok_pred})")
-    values = ",\n  ".join(rows)
-    return f"""
-SELECT register, n_sent, n_match, n_tok_exp, n_tok_pred,
-       CAST(n_match AS DOUBLE) / n_sent AS acc
-FROM (VALUES
-  {values}
-) AS v(register, n_sent, n_match, n_tok_exp, n_tok_pred)
-ORDER BY register
-"""
-
-
-def encode_pair(surface: str, pos: str) -> str:
-    """Stable pair encoding for the t30 Spark scorer (same shape as
-    reading_parity.encode_pair)."""
-    return f"{surface}\x1f{pos}"

@@ -60,8 +60,6 @@ silent rather than fabricate.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 READING_PARITY_CORPUS: tuple[
     tuple[int, str, str, tuple[tuple[str, str | None], ...]], ...
 ] = (
@@ -628,77 +626,12 @@ READING_PARITY_CORPUS: tuple[
 )
 
 
-@lru_cache(maxsize=1)
-def _analyzer():
-    from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-    return JapaneseAnalyzer()
-
-
-def predicted_pairs(text: str, analyzer=None) -> list[tuple[str, str | None]]:
-    a = analyzer if analyzer is not None else _analyzer()
-    return [(tok["surface"], tok["reading"]) for tok in a.analyze_rich(text)]
-
-
-def compute_expected(dictionary=None) -> dict[str, tuple[int, int, int, int]]:
-    """Per-register (n_sent, n_match, n_tok_exp, n_tok_pred) — recapture
-    source for ``T28_EXPECTED``; same contract as T22/T25/T27.
-    ``dictionary`` scores the axis on an alternate Dictionary
-    (dress-rehearsal hook)."""
-    ana = None
-    if dictionary is not None:
-        from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-        ana = JapaneseAnalyzer(dictionary=dictionary)
-    agg: dict[str, list[int]] = {}
-    for _sid, register, text, pairs in READING_PARITY_CORPUS:
-        pred = predicted_pairs(text, analyzer=ana)
-        row = agg.setdefault(register, [0, 0, 0, 0])
-        row[0] += 1
-        row[1] += 1 if list(pairs) == pred else 0
-        row[2] += len(pairs)
-        row[3] += len(pred)
-    total = [0, 0, 0, 0]
-    for row in agg.values():
-        for i in range(4):
-            total[i] += row[i]
-    agg["__total__"] = total
-    return {k: tuple(v) for k, v in sorted(agg.items())}
-
-
-def accuracy(expected: dict[str, tuple[int, int, int, int]] | None = None) -> float:
-    exp = expected if expected is not None else compute_expected()
-    n, match, _, _ = exp["__total__"]
-    return match / n if n else 1.0
-
-
-def mismatches() -> list[tuple]:
-    out = []
-    for sid, register, text, pairs in READING_PARITY_CORPUS:
-        pred = predicted_pairs(text)
-        if list(pairs) != pred:
-            out.append((sid, register, text, pairs, pred))
-    return out
-
-
-if __name__ == "__main__":
-    exp = compute_expected()
-    for reg, (n, m, te, tp) in exp.items():
-        flag = "" if m == n else "  <-- MISMATCH"
-        print(f"{reg:18s} n={n:3d} match={m:3d} tok_exp={te:4d} tok_pred={tp:4d}{flag}")
-    print(f"exact-match accuracy: {accuracy(exp):.6f}")
-    for sid, reg, text, want, got in mismatches():
-        w = "|".join(f"{s}:{r}" for s, r in want)
-        g = "|".join(f"{s}:{r}" for s, r in got)
-        print(f"\n#{sid} [{reg}] {text}\n  want: {w}\n  got:  {g}")
-
-
 # CI floor (tests/test_parity.py): exact-match accuracy over the held-out
 # reading corpus — same contract as T22/T25/T27 floors.
 T28_ACC_FLOOR = 1.0
 
 # RECORDED aggregates — the t28 oracle constants; recapture with
-# ``python -m hive_udf_neologd_spark.tokenizer.reading_parity`` after any
+# ``python -m hive_udf_neologd_spark.tokenizer.parity_harness t28`` after any
 # dictionary/reading-tier change (tests/test_parity.py guards the
 # constants against the live engine).  Recorded round 10 at 35 sentences /
 # 11 registers.  Honest pre-fix accuracy 0.085714 (3/35) with every
@@ -788,26 +721,3 @@ T28_EXPECTED: dict[str, tuple[int, int, int, int]] = {
     'rr_unknown_null': (2, 2, 6, 6),
 }
 
-
-def t28_values_sql() -> str:
-    rows = []
-    for register, (n_sent, n_match, n_tok_exp, n_tok_pred) in sorted(
-        T28_EXPECTED.items()
-    ):
-        rows.append(f"('{register}', {n_sent}, {n_match}, {n_tok_exp}, {n_tok_pred})")
-    values = ",\n  ".join(rows)
-    return f"""
-SELECT register, n_sent, n_match, n_tok_exp, n_tok_pred,
-       CAST(n_match AS DOUBLE) / n_sent AS acc
-FROM (VALUES
-  {values}
-) AS v(register, n_sent, n_match, n_tok_exp, n_tok_pred)
-ORDER BY register
-"""
-
-
-def encode_pair(surface: str, reading: str | None) -> str:
-    """Stable string encoding of one (surface, reading) pair for the t28
-    Spark scorer (array<string> travels Arrow cheaply; None reading →
-    empty field; \\x1f never appears in corpus text)."""
-    return f"{surface}\x1f{reading if reading is not None else ''}"

@@ -65,8 +65,6 @@ default-chain ``analyze_rich`` output under that config.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 UD_PARITY_CORPUS: tuple[
     tuple[int, str, str, tuple[str, ...], str,
           tuple[tuple[str, str | None], ...]], ...
@@ -247,96 +245,12 @@ UD_PARITY_CORPUS: tuple[
 )
 
 
-@lru_cache(maxsize=64)
-def _analyzer(mode: str, ud_rows: tuple[str, ...]):
-    # maxsize covers the full corpus's distinct (mode, user-dict) configs
-    # (31 registers as of round 12 — a 16-entry LRU thrashed on the
-    # sequential sweep); since round 12 each analyzer shares the cached
-    # builtin Dictionary, so a cached entry is just a Lattice + the tiny
-    # user-dict index.
-    from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-    return JapaneseAnalyzer(
-        mode=mode, user_dict_rows=list(ud_rows) if ud_rows else None
-    )
-
-
-def predicted_pairs(
-    mode: str, ud_rows: tuple[str, ...], text: str, analyzer=None
-) -> list[tuple[str, str | None]]:
-    a = analyzer if analyzer is not None else _analyzer(mode, ud_rows)
-    return [(tok["surface"], tok["reading"]) for tok in a.analyze_rich(text)]
-
-
-def compute_expected(dictionary=None) -> dict[str, tuple[int, int, int, int]]:
-    """Per-register (n_sent, n_match, n_tok_exp, n_tok_pred) — recapture
-    source for ``T29_EXPECTED``; same contract as T22/T25/T27/T28.
-    ``dictionary`` scores the axis on an alternate Dictionary — analyzers
-    are built per (mode, user-dict) config against it, mirroring the
-    cached default path (dress-rehearsal hook)."""
-    local: dict[tuple[str, tuple[str, ...]], object] = {}
-    if dictionary is not None:
-        from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-
-        for _sid, _reg, mode, ud_rows, _text, _pairs in UD_PARITY_CORPUS:
-            key = (mode, ud_rows)
-            if key not in local:
-                local[key] = JapaneseAnalyzer(
-                    mode=mode,
-                    user_dict_rows=list(ud_rows) if ud_rows else None,
-                    dictionary=dictionary,
-                )
-    agg: dict[str, list[int]] = {}
-    for _sid, register, mode, ud_rows, text, pairs in UD_PARITY_CORPUS:
-        pred = predicted_pairs(
-            mode, ud_rows, text, analyzer=local.get((mode, ud_rows))
-        )
-        row = agg.setdefault(register, [0, 0, 0, 0])
-        row[0] += 1
-        row[1] += 1 if list(pairs) == pred else 0
-        row[2] += len(pairs)
-        row[3] += len(pred)
-    total = [0, 0, 0, 0]
-    for row in agg.values():
-        for i in range(4):
-            total[i] += row[i]
-    agg["__total__"] = total
-    return {k: tuple(v) for k, v in sorted(agg.items())}
-
-
-def accuracy(expected: dict[str, tuple[int, int, int, int]] | None = None) -> float:
-    exp = expected if expected is not None else compute_expected()
-    n, match, _, _ = exp["__total__"]
-    return match / n if n else 1.0
-
-
-def mismatches() -> list[tuple]:
-    out = []
-    for sid, register, mode, ud_rows, text, pairs in UD_PARITY_CORPUS:
-        pred = predicted_pairs(mode, ud_rows, text)
-        if list(pairs) != pred:
-            out.append((sid, register, text, pairs, pred))
-    return out
-
-
-if __name__ == "__main__":
-    exp = compute_expected()
-    for reg, (n, m, te, tp) in exp.items():
-        flag = "" if m == n else "  <-- MISMATCH"
-        print(f"{reg:20s} n={n:3d} match={m:3d} tok_exp={te:4d} tok_pred={tp:4d}{flag}")
-    print(f"exact-match accuracy: {accuracy(exp):.6f}")
-    for sid, reg, text, want, got in mismatches():
-        w = "|".join(f"{s}:{r}" for s, r in want)
-        g = "|".join(f"{s}:{r}" for s, r in got)
-        print(f"\n#{sid} [{reg}] {text}\n  want: {w}\n  got:  {g}")
-
-
 # CI floor (tests/test_parity.py): exact-match accuracy over the held-out
 # user-dict corpus — same contract as the T22/T25/T27/T28 floors.
 T29_ACC_FLOOR = 1.0
 
 # RECORDED aggregates — the t29 oracle constants; recapture with
-# ``python -m hive_udf_neologd_spark.tokenizer.userdict_parity`` after
+# ``python -m hive_udf_neologd_spark.tokenizer.parity_harness t29`` after
 # any dictionary/user-dict/filter change (tests/test_parity.py guards
 # the constants against the live engine).  Recorded round 10 at 26
 # sentences / 14 registers.  Honest pre-fix measurement: **26/26 clean
@@ -366,25 +280,3 @@ T29_EXPECTED: dict[str, tuple[int, int, int, int]] = {
     "ud_whole": (2, 2, 3, 3),
 }
 
-
-def t29_values_sql() -> str:
-    rows = []
-    for register, (n_sent, n_match, n_tok_exp, n_tok_pred) in sorted(
-        T29_EXPECTED.items()
-    ):
-        rows.append(f"('{register}', {n_sent}, {n_match}, {n_tok_exp}, {n_tok_pred})")
-    values = ",\n  ".join(rows)
-    return f"""
-SELECT register, n_sent, n_match, n_tok_exp, n_tok_pred,
-       CAST(n_match AS DOUBLE) / n_sent AS acc
-FROM (VALUES
-  {values}
-) AS v(register, n_sent, n_match, n_tok_exp, n_tok_pred)
-ORDER BY register
-"""
-
-
-def encode_pair(surface: str, reading: str | None) -> str:
-    """Same stable pair encoding as reading_parity.encode_pair (t29's
-    Spark scorer ships (surface, reading) sequences as array<string>)."""
-    return f"{surface}\x1f{reading if reading is not None else ''}"

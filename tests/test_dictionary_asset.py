@@ -330,36 +330,14 @@ class TestFullCsvRoundTrip:
                 assert b.reading == a.reading, s
 
     def test_parity_f1_is_1_on_reloaded_dictionary(self):
-        from hive_udf_neologd_spark.tokenizer.lattice import Lattice
-        from hive_udf_neologd_spark.tokenizer.parity import (
-            PARITY_CORPUS,
-            encode_span,
-            expected_spans,
-        )
+        from hive_udf_neologd_spark.tokenizer.parity_harness import mismatches
 
-        lat = Lattice(self.csv_dict, None, "normal")
-        for sid, _register, text, surfaces in PARITY_CORPUS:
-            exp = set(expected_spans(text, surfaces))
-            spans = []
-            cursor = 0
-            for tok in lat.segment(text):
-                idx = text.index(tok.surface, cursor)
-                spans.append(encode_span(idx, idx + len(tok.surface)))
-                cursor = idx + len(tok.surface)
-            assert set(spans) == exp, f"s{sid}: {text}"
+        assert mismatches("t22", dictionary=self.csv_dict) == []
 
     def test_mode_parity_exact_on_reloaded_dictionary(self):
-        from hive_udf_neologd_spark.tokenizer.lattice import Lattice
-        from hive_udf_neologd_spark.tokenizer.mode_parity import (
-            MODE_PARITY_CORPUS,
-        )
+        from hive_udf_neologd_spark.tokenizer.parity_harness import mismatches
 
-        lats = {
-            m: Lattice(self.csv_dict, None, m) for m in ("search", "extended")
-        }
-        for sid, _reg, mode, text, surfaces in MODE_PARITY_CORPUS:
-            got = [t.surface for t in lats[mode].segment(text)]
-            assert got == list(surfaces), f"#{sid}: {text}"
+        assert mismatches("t25", dictionary=self.csv_dict) == []
 
     def test_reference_goldens_byte_identical(self):
         from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer

@@ -297,32 +297,14 @@ class TestRealisticMillionEntry:
         (sum+100 compounds, +100 twins, strict-< ties) checked over 355
         real sentences instead of trusted."""
         from hive_udf_neologd_spark.tokenizer.dictionary import DictEntry
-        from hive_udf_neologd_spark.tokenizer.lattice import Lattice
         from hive_udf_neologd_spark.tokenizer.lexicon import BUILTIN_ENTRIES
-        from hive_udf_neologd_spark.tokenizer.parity import (
-            PARITY_CORPUS,
-            encode_span,
-            expected_spans,
-        )
+        from hive_udf_neologd_spark.tokenizer.parity_harness import mismatches
 
         entries = [DictEntry(s, p, c, b, n)
                    for (s, p, c, b, n) in BUILTIN_ENTRIES]
         entries.extend(realistic_entries)
-        lat = Lattice(Dictionary(entries), None, "normal")
-        tp = n_pred = n_exp = 0
-        for _sid, _reg, text, surfaces in PARITY_CORPUS:
-            exp = set(expected_spans(text, surfaces))
-            pred = set()
-            cursor = 0
-            for tok in lat.segment(text):
-                idx = text.index(tok.surface, cursor)
-                pred.add(encode_span(idx, idx + len(tok.surface)))
-                cursor = idx + len(tok.surface)
-            tp += len(exp & pred)
-            n_pred += len(pred)
-            n_exp += len(exp)
-        f1 = 2.0 * tp / (n_pred + n_exp)
-        assert f1 == 1.0, f"parity micro-F1 {f1:.6f} under 1M dictionary"
+        bad = mismatches("t22", dictionary=Dictionary(entries))
+        assert not bad, f"{len(bad)} parity sentences re-segment under 1M"
 
     def test_goldens_unchanged_at_1m(self, realistic_entries):
         from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
@@ -379,6 +361,20 @@ def csv_swap_dictionary():
     return Dictionary(entries)
 
 
+def _axis_unchanged(axis):
+    """Dress rehearsal for one parity axis: scored on the CSV-loaded 1M
+    asset, it must reproduce the recorded aggregates exactly."""
+
+    def test(self, csv_swap_dictionary):
+        from hive_udf_neologd_spark.tokenizer import parity_harness as H
+
+        assert H.compute_expected(
+            axis, dictionary=csv_swap_dictionary
+        ) == H.AXES[axis].recorded
+
+    return test
+
+
 @pytest.mark.slow
 class TestFullFidelityMillionEntrySwap:
     def test_asset_shape_is_neologd_faithful(self, csv_swap_dictionary):
@@ -403,47 +399,12 @@ class TestFullFidelityMillionEntrySwap:
         # fabricate them), so the floor is 20k, not a majority.
         assert n_read > 20_000, "readings did not survive the load"
 
-    def test_t22_span_axis(self, csv_swap_dictionary):
-        from hive_udf_neologd_spark.tokenizer import parity
-
-        assert parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == parity.T22_EXPECTED
-
-    def test_t25_mode_axis(self, csv_swap_dictionary):
-        from hive_udf_neologd_spark.tokenizer import mode_parity
-
-        assert mode_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == mode_parity.T25_EXPECTED
-
-    def test_t27_lemma_axis(self, csv_swap_dictionary):
-        from hive_udf_neologd_spark.tokenizer import lemma_parity
-
-        assert lemma_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == lemma_parity.T27_EXPECTED
-
-    def test_t28_reading_axis(self, csv_swap_dictionary):
-        from hive_udf_neologd_spark.tokenizer import reading_parity
-
-        assert reading_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == reading_parity.T28_EXPECTED
-
-    def test_t29_userdict_axis(self, csv_swap_dictionary):
-        from hive_udf_neologd_spark.tokenizer import userdict_parity
-
-        assert userdict_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == userdict_parity.T29_EXPECTED
-
-    def test_t30_pos_axis(self, csv_swap_dictionary):
-        from hive_udf_neologd_spark.tokenizer import pos_parity
-
-        assert pos_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == pos_parity.T30_EXPECTED
+    test_t22_span_axis = _axis_unchanged("t22")
+    test_t25_mode_axis = _axis_unchanged("t25")
+    test_t27_lemma_axis = _axis_unchanged("t27")
+    test_t28_reading_axis = _axis_unchanged("t28")
+    test_t29_userdict_axis = _axis_unchanged("t29")
+    test_t30_pos_axis = _axis_unchanged("t30")
 
     def test_goldens_and_anchors(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer

@@ -1,20 +1,13 @@
-"""External segmentation-parity corpus (tokenizer/parity.py, VERDICT r6
-next-round #1): corpus integrity, recorded-aggregate consistency, and the
-gated micro-F1 floor."""
+"""The six external parity axes (tokenizer/parity_harness.py): per-corpus
+integrity, and — shared over the axis table — recorded-aggregate
+consistency, the gated floors and the Spark catalog entries."""
 
 from __future__ import annotations
 
 import pytest
 
-from hive_udf_neologd_spark.tokenizer.parity import (
-    PARITY_CORPUS,
-    T22_EXPECTED,
-    T22_F1_FLOOR,
-    compute_expected,
-    expected_spans,
-    micro_f1,
-    predicted_spans,
-)
+from hive_udf_neologd_spark.tokenizer import parity_harness as H
+from hive_udf_neologd_spark.tokenizer.parity import PARITY_CORPUS
 
 # Characters allowed BETWEEN expected tokens (discarded by the tokenizer):
 # Japanese/ASCII punctuation and whitespace only.
@@ -34,7 +27,7 @@ class TestCorpusIntegrity:
         punctuation/whitespace — a typo in an expected segmentation fails
         HERE, not silently in the F1."""
         for sid, _register, text, surfaces in PARITY_CORPUS:
-            spans = expected_spans(text, surfaces)  # raises if out of order
+            spans = H.surface_spans(text, surfaces)  # raises if out of order
             cursor = 0
             for span in spans:
                 start, end = divmod(span, 1000)
@@ -52,8 +45,11 @@ class TestCorpusIntegrity:
 
     def test_predicted_spans_partition_like_expected(self):
         """Engine spans obey the same no-overlap in-order invariant."""
-        for sid, _register, text, _surfaces in PARITY_CORPUS:
-            spans = predicted_spans(text)
+        t22 = H.AXES["t22"]
+        lattice = t22.build("normal", None)
+        for row in PARITY_CORPUS:
+            sid = row[0]
+            spans = t22.predict(row, lattice)
             last_end = 0
             for span in spans:
                 start, end = divmod(span, 1000)
@@ -107,51 +103,59 @@ class TestAllModesOverCorpus:
                        for c in residue), (mode, sid, residue)
 
 
-class TestRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        """The recapture guard: T22_EXPECTED (the t22 oracle constants)
-        must equal a live recomputation — a dictionary/matrix change that
-        re-segments the corpus fails here until the constants are
-        re-recorded (and the F1 floor re-checked)."""
-        assert compute_expected() == T22_EXPECTED
+class _RecordedAxis:
+    """Recorded-aggregate checks shared by every axis of the harness table;
+    each subclass names its axis."""
 
-    def test_micro_f1_floor(self):
-        f1 = micro_f1(T22_EXPECTED)
-        assert f1 >= T22_F1_FLOOR, (
-            f"external segmentation parity regressed: micro-F1 {f1:.6f} "
-            f"< floor {T22_F1_FLOOR}"
+    axis: str
+
+    def test_recorded_matches_live_engine(self):
+        """The recapture guard: the recorded aggregates (the oracle
+        constants) must equal a live recomputation — a dictionary/matrix/
+        filter change that re-scores the corpus fails here until the
+        constants are re-recorded (and the floor re-checked)."""
+        assert H.compute_expected(self.axis) == H.AXES[self.axis].recorded
+
+    def test_accuracy_floor(self):
+        a = H.AXES[self.axis]
+        value = H.accuracy(self.axis, a.recorded)
+        assert value >= a.floor, (
+            f"external {self.axis} parity regressed: {a.metric} "
+            f"{value:.6f} < floor {a.floor}"
         )
 
     def test_total_row_is_register_sum(self):
-        total = T22_EXPECTED["__total__"]
+        recorded = H.AXES[self.axis].recorded
         sums = [0, 0, 0, 0]
-        for reg, row in T22_EXPECTED.items():
+        for reg, row in recorded.items():
             if reg == "__total__":
                 continue
             for i in range(4):
                 sums[i] += row[i]
-        assert tuple(sums) == total
+        assert tuple(sums) == recorded["__total__"]
+
+
+def _check_catalog_matches_recorded(spark, sf_dir, axis):
+    """The Spark entry reproduces the recorded aggregates exactly (same
+    check the driver's DuckDB oracle performs), metric column included."""
+    from hive_udf_neologd_spark.operators.textops import parity_query
+
+    a = H.AXES[axis]
+    metric = H.METRICS[a.metric]
+    cols = ("n_sent", *metric.columns)
+    rows = parity_query(axis, spark, sf_dir).collect()
+    assert {r["register"]: tuple(r[c] for c in cols) for r in rows} == a.recorded
+    for r in rows:
+        assert r[a.metric] == pytest.approx(metric.value(*(r[c] for c in cols)))
+
+
+class TestRecordedAggregates(_RecordedAxis):
+    axis = "t22"
 
 
 class TestT22Catalog:
-    def test_t22_matches_oracle_values(self, spark):
-        """The Spark entry reproduces the recorded aggregates exactly
-        (same check the driver's DuckDB oracle performs)."""
-        from hive_udf_neologd_spark.operators.textops import (
-            t22_segmentation_parity,
-        )
-
-        rows = t22_segmentation_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (r["n_sent"], r["tp"], r["n_pred"], r["n_exp"])
-            for r in rows
-        }
-        assert got == T22_EXPECTED
-        for r in rows:
-            n, tp, n_pred, n_exp = (
-                r["n_sent"], r["tp"], r["n_pred"], r["n_exp"],
-            )
-            assert r["f1"] == pytest.approx(2 * tp / (n_pred + n_exp))
+    def test_t22_matches_oracle_values(self, spark, sf_dir):
+        _check_catalog_matches_recorded(spark, sf_dir, "t22")
 
 
 # --- held-out SEARCH/EXTENDED mode-parity corpus (VERDICT r8 #1) -----------
@@ -215,82 +219,20 @@ class TestModeCorpusIntegrity:
                         )
 
 
-class TestModeRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        """Recapture guard — identical contract to T22_EXPECTED."""
-        from hive_udf_neologd_spark.tokenizer.mode_parity import (
-            T25_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T25_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.mode_parity import (
-            T25_ACC_FLOOR,
-            T25_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T25_EXPECTED)
-        assert acc >= T25_ACC_FLOOR, (
-            f"held-out mode parity regressed: accuracy {acc:.6f} "
-            f"< floor {T25_ACC_FLOOR}"
-        )
-
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.mode_parity import T25_EXPECTED
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T25_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T25_EXPECTED["__total__"]
+class TestModeRecordedAggregates(_RecordedAxis):
+    axis = "t25"
 
 
 class TestT25Catalog:
-    def test_t25_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import t25_mode_parity
-        from hive_udf_neologd_spark.tokenizer.mode_parity import T25_EXPECTED
-
-        rows = t25_mode_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T25_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t25_matches_oracle_values(self, spark, sf_dir):
+        _check_catalog_matches_recorded(spark, sf_dir, "t25")
 
 
 # --- held-out LEMMA-parity corpus (round 9, third axis) --------------------
 
 
-class TestLemmaRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-            T27_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T27_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-            T27_ACC_FLOOR,
-            T27_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T27_EXPECTED)
-        assert acc >= T27_ACC_FLOOR, (
-            f"held-out lemma parity regressed: accuracy {acc:.6f} "
-            f"< floor {T27_ACC_FLOOR}"
-        )
+class TestLemmaRecordedAggregates(_RecordedAxis):
+    axis = "t27"
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.lemma_parity import (
@@ -308,59 +250,17 @@ class TestLemmaRecordedAggregates:
             for t in terms:
                 assert t == t.strip() and t
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import T27_EXPECTED
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T27_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T27_EXPECTED["__total__"]
-
 
 class TestT27Catalog:
-    def test_t27_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import t27_lemma_parity
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import T27_EXPECTED
-
-        rows = t27_lemma_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T27_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t27_matches_oracle_values(self, spark, sf_dir):
+        _check_catalog_matches_recorded(spark, sf_dir, "t27")
 
 
 # --- held-out READING-parity corpus (round 10, fourth axis) ----------------
 
 
-class TestReadingRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T28_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_ACC_FLOOR,
-            T28_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T28_EXPECTED)
-        assert acc >= T28_ACC_FLOOR, (
-            f"held-out reading parity regressed: accuracy {acc:.6f} "
-            f"< floor {T28_ACC_FLOOR}"
-        )
+class TestReadingRecordedAggregates(_RecordedAxis):
+    axis = "t28"
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.reading_parity import (
@@ -382,65 +282,17 @@ class TestReadingRecordedAggregates:
                         for c in reading
                     ), (surface, reading)
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_EXPECTED,
-        )
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T28_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T28_EXPECTED["__total__"]
-
 
 class TestT28Catalog:
-    def test_t28_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import (
-            t28_reading_parity,
-        )
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_EXPECTED,
-        )
-
-        rows = t28_reading_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T28_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t28_matches_oracle_values(self, spark, sf_dir):
+        _check_catalog_matches_recorded(spark, sf_dir, "t28")
 
 
 # --- held-out USER-DICT parity corpus (round 10, fifth axis) ---------------
 
 
-class TestUserdictRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T29_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_ACC_FLOOR,
-            T29_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T29_EXPECTED)
-        assert acc >= T29_ACC_FLOOR, (
-            f"held-out user-dict parity regressed: accuracy {acc:.6f} "
-            f"< floor {T29_ACC_FLOOR}"
-        )
+class TestUserdictRecordedAggregates(_RecordedAxis):
+    axis = "t29"
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.userdict_parity import (
@@ -460,65 +312,17 @@ class TestUserdictRecordedAggregates:
                 assert len(parts) >= 4
                 assert "".join(parts[1].split()) == parts[0]
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_EXPECTED,
-        )
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T29_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T29_EXPECTED["__total__"]
-
 
 class TestT29Catalog:
-    def test_t29_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import (
-            t29_userdict_parity,
-        )
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_EXPECTED,
-        )
-
-        rows = t29_userdict_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T29_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t29_matches_oracle_values(self, spark, sf_dir):
+        _check_catalog_matches_recorded(spark, sf_dir, "t29")
 
 
 # --- held-out POS parity corpus (round 10, sixth axis) ---------------------
 
 
-class TestPosRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.pos_parity import (
-            T30_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T30_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.pos_parity import (
-            T30_ACC_FLOOR,
-            T30_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T30_EXPECTED)
-        assert acc >= T30_ACC_FLOOR, (
-            f"held-out POS parity regressed: accuracy {acc:.6f} "
-            f"< floor {T30_ACC_FLOOR}"
-        )
+class TestPosRecordedAggregates(_RecordedAxis):
+    axis = "t30"
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.pos_parity import (
@@ -535,30 +339,7 @@ class TestPosRecordedAggregates:
                 # POS strings are hyphen-joined IPADIC levels.
                 assert pos and " " not in pos
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.pos_parity import T30_EXPECTED
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T30_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T30_EXPECTED["__total__"]
-
 
 class TestT30Catalog:
-    def test_t30_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import t30_pos_parity
-        from hive_udf_neologd_spark.tokenizer.pos_parity import T30_EXPECTED
-
-        rows = t30_pos_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T30_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t30_matches_oracle_values(self, spark, sf_dir):
+        _check_catalog_matches_recorded(spark, sf_dir, "t30")

@@ -164,27 +164,52 @@ def test_local_frame_is_local_relation_and_value_identical(spark):
     assert "ExistingRDD" not in plan
 
 
+def test_local_frame_does_not_rely_on_prepare(spark):
+    """local_frame sets the Arrow conf itself: with it switched off (a
+    session that never ran prepare), the frame still plans as a
+    LocalTableScan instead of silently falling back to a pickled RDD."""
+    from hive_udf_neologd_spark.sources import local_frame
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = local_frame(spark, [(1, "a"), (2, "b")], "k long, v string")
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        spark.conf.set(key, before)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
 def test_parity_frames_scan_locally(spark):
     """Every constant-corpus catalog entry plans its frame as a
-    LocalTableScan — no applySchemaToPythonRDD deserialization tasks."""
+    LocalTableScan — no applySchemaToPythonRDD deserialization tasks —
+    and each parity entry scores its corpus in exactly one
+    ArrowEvalPython pass (per-register rows and the __total__ row come
+    from one rollup, not a union that re-tokenizes the corpus)."""
     from hive_udf_neologd_spark.catalog import QUERIES
 
-    for name in (
-        "t08_tokenize_modes",
-        "t21_connection_matrix",
+    parity = (
         "t22_segmentation_parity",
         "t25_mode_parity",
         "t27_lemma_parity",
         "t28_reading_parity",
         "t29_userdict_parity",
         "t30_pos_parity",
-    ):
+    )
+    for name in ("t08_tokenize_modes", "t21_connection_matrix", *parity):
         df = QUERIES[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         assert "applySchemaToPythonRDD" not in plan, name
         assert "LocalTableScan" in plan, name
+        if name in parity:
+            tree = df._jdf.queryExecution().executedPlan().toString()
+            assert tree.count("ArrowEvalPython") == 1, (name, tree)
 
 
 def _uf_components(pairs):

@@ -6,6 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark import register_udfs, tokenize_ja, tokenize_ja_version
+from hive_udf_neologd_spark.functions.tokenize import tokenize_ja_rich
+from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionaryError
 from hive_udf_neologd_spark.version import VERSION
 
 
@@ -42,12 +44,18 @@ def test_udf_with_user_dict(spark, docs):
     assert row["t"] == ["日本", "経済", "新聞"]
 
 
-def test_udf_construction_errors_are_plan_time(spark):
-    # Fail-at-plan-time like the reference's initialize (SURVEY.md §3).
+@pytest.mark.parametrize(
+    "factory", [tokenize_ja, tokenize_ja_rich], ids=["tokenize_ja", "tokenize_ja_rich"]
+)
+def test_udf_construction_errors_are_plan_time(spark, factory):
+    # Fail-at-plan-time like the reference's initialize (SURVEY.md §3),
+    # for both factories: they share one driver-side config path.
     with pytest.raises(ValueError):
-        tokenize_ja(mode="unsupported mode")
+        factory(mode="unsupported mode")
     with pytest.raises(TypeError):
-        tokenize_ja(user_dict=123)
+        factory(user_dict=123)
+    with pytest.raises(UserDictionaryError):
+        factory(user_dict=["日本経済新聞,日本 新聞,ニホン シンブン,名詞"])
 
 
 def test_sql_registration(spark, docs):

@@ -1050,12 +1050,14 @@ class TestMechanicalTupleClasses:
         override; an ordinary 未然形 after 音便 stays unrewarded (the
         retired coarse rule rewarded ALL of VERB_CONJ)."""
         from hive_udf_neologd_spark.tokenizer import connection as C
-        from hive_udf_neologd_spark.tokenizer.parity import _raw_lattice
+        from hive_udf_neologd_spark.tokenizer.dictionary import builtin_dictionary
+        from hive_udf_neologd_spark.tokenizer.lattice import Lattice
 
         m = C.dense_matrix()
         assert m[C.VERB_ONBIN][C._KAGYO_MIZEN] == -1000
         assert m[C.VERB_ONBIN][C.VERB_CONJ] == 0
-        toks = [t.surface for t in _raw_lattice().segment(
+        lat = Lattice(builtin_dictionary(), None, "normal")
+        toks = [t.surface for t in lat.segment(
             "明日までにやっとかないと間に合わないよ。")]
         assert toks[3:6] == ["やっ", "とか", "ない"]
 

@@ -18,8 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_udf_neologd_spark.tokenizer import chardef, connection
 from hive_udf_neologd_spark.tokenizer.dictionary import builtin_dictionary
-from hive_udf_neologd_spark.tokenizer.lattice import _CONN2D, _EOS_COSTS
-from hive_udf_neologd_spark.tokenizer.parity import _raw_lattice
+from hive_udf_neologd_spark.tokenizer.lattice import _CONN2D, _EOS_COSTS, Lattice
 
 _CLASS_NAMES = {
     v: k
@@ -90,7 +89,7 @@ def main() -> int:
         print(f"  {t!r:20s} {label:30s} wc={cost:6d} conn({prc}->{lc})="
               f"{conn:6d} rc={rc}")
     # Engine path for comparison.
-    lat = _raw_lattice()
+    lat = Lattice(builtin_dictionary(), None, "normal")
     pred = [tk.surface for tk in lat.segment(text)]
     print(f"engine path: {'|'.join(pred)}")
     return 0

@@ -1,9 +1,10 @@
-"""Per-sentence parity report: engine segmentation vs the pinned corpus.
+"""Parity report over the six external axes (t22 t25 t27 t28 t29 t30).
 
-Usage: python tools/parity_report.py [--all]
-Prints every sentence whose predicted spans differ from the expected ones
-(or all with --all), with aligned token lists — the authoring loop for
-dictionary waves driven by measured F1 failures (VERDICT r6 #8).
+Usage: python tools/parity_report.py [AXIS ...]
+Prints, per axis, the live aggregates (the recapture dict), the metric,
+and every sentence whose engine output differs from its expectation —
+the authoring loop for dictionary waves driven by measured failures —
+then the reading-tier coverage of the corpus vocabulary.
 """
 
 from __future__ import annotations
@@ -13,52 +14,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hive_udf_neologd_spark.tokenizer.parity import (  # noqa: E402
-    PARITY_CORPUS,
-    _raw_lattice,
-    compute_expected,
-    expected_spans,
-    micro_f1,
-    predicted_spans,
-)
+from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, report  # noqa: E402
 
 
 def main() -> int:
-    show_all = "--all" in sys.argv
-    n_diff = 0
-    for sid, register, text, surfaces in PARITY_CORPUS:
-        exp = expected_spans(text, surfaces)
-        pred = predicted_spans(text)
-        if set(exp) == set(pred) and not show_all:
-            continue
-        if set(exp) != set(pred):
-            n_diff += 1
-        pred_surf = [t.surface for t in _raw_lattice().segment(text)]
-        print(f"--- {sid} [{register}] {text}")
-        print(f"  exp : {'|'.join(surfaces)}")
-        print(f"  pred: {'|'.join(pred_surf)}")
-    agg = compute_expected()
-    n, tp, n_pred, n_exp = agg["__total__"]
-    print(f"\nsentences={n} differing={n_diff} tp={tp} n_pred={n_pred} n_exp={n_exp}")
-    print(f"micro-F1={micro_f1(agg):.6f}  P={tp/n_pred:.4f}  R={tp/n_exp:.4f}")
-    for reg, (ns, t, p, e) in agg.items():
-        if reg != "__total__":
-            print(f"  {reg:8s} n={ns:3d} f1={2*t/(p+e):.4f}")
-    # Mode-parity corpus (round 9, tokenizer/mode_parity.py) — the
-    # SEARCH/EXTENDED axis in the same report.
-    from hive_udf_neologd_spark.tokenizer.mode_parity import (  # noqa: E402
-        accuracy,
-        compute_expected as mode_expected,
-        mismatches,
-    )
-
-    for sid, reg, mode, text, want, got in mismatches():
-        print(f"--- mode #{sid} [{reg}/{mode}] {text}")
-        print(f"  exp : {'|'.join(want)}")
-        print(f"  pred: {'|'.join(got)}")
-    magg = mode_expected()
-    mn, mm, _, _ = magg["__total__"]
-    print(f"mode-parity: sentences={mn} matched={mm} accuracy={accuracy(magg):.6f}")
+    for axis in sys.argv[1:] or AXES:
+        report(axis)
 
     # Reading-tier coverage stats (VERDICT r10 #4): how much of the live
     # corpus vocabulary the authored tier covers, and the head of the
@@ -67,22 +28,12 @@ def main() -> int:
     from collections import Counter
 
     from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
-    from hive_udf_neologd_spark.tokenizer.lemma_parity import (  # noqa: E402
-        LEMMA_PARITY_CORPUS,
-    )
-    from hive_udf_neologd_spark.tokenizer.mode_parity import (  # noqa: E402
-        MODE_PARITY_CORPUS,
-    )
     from hive_udf_neologd_spark.tokenizer.readings import LEMMA_READINGS
 
     analyzer = JapaneseAnalyzer()
     covered: Counter = Counter()
     uncovered: Counter = Counter()
-    texts = (
-        [t for _, _, t, _ in PARITY_CORPUS]
-        + [t for _, _, t, _ in LEMMA_PARITY_CORPUS]
-        + [row[3] for row in MODE_PARITY_CORPUS]
-    )
+    texts = [row[-2] for axis in ("t22", "t27", "t25") for row in AXES[axis].corpus]
     for t in texts:
         for tok in analyzer.analyze_rich(t):
             if tok["unknown"]:
