@@ -761,12 +761,16 @@ def _cc_fixpoint(edges: DataFrame) -> DataFrame:
     # there (result identity re-proven by collect-compare + oracles).
     # The window's (u)-keyed exchange+sort satisfies the join's y-side
     # requirement, so the guard adds no extra shuffle of edges —
-    # measured +0.2 s at sf0.1 (guide §2.5, deliberate insurance).
+    # measured +0.2 s at sf0.1 (guide §2.5, deliberate insurance).  The
+    # MERGE hint keeps it that way: on small inputs AQE would otherwise
+    # flip the join to a broadcast (it did at sf0.01 and sf0.1), leaving
+    # that exchange as pure overhead.
     wy = Window.partitionBy("u").orderBy("v")
     y_capped = (
         edges.withColumn("rn", F.row_number().over(wy))
         .filter(F.col("rn") <= _CC_SQUARE_CAP)
         .drop("rn")
+        .hint("merge")
     )
     two_hop = (
         edges.alias("x")

@@ -9,7 +9,11 @@ generic Hive external tables.
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,15 +84,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def scratch_root(name: str, min_free_bytes: int = 256 << 20) -> str:
     """Scratch directory root for harness fixtures: tmpfs when it exists
-    AND has headroom, else /tmp.
+    AND has ``min_free_bytes`` free, else /tmp.
 
-    Existence alone was the round-12 rule; judge ADVICE r12 #2 points out
-    containers commonly mount a SMALL tmpfs at /dev/shm (Docker defaults
-    to 64 MB), where staging a multi-MB fixture fails with ENOSPC while
-    /tmp would have worked — so the choice is gated on statvfs free bytes
-    (floor 256 MB, callers pass a larger estimate when they know the
-    fixture size).  Decided per call, not at import: free space changes as
-    fixtures accumulate."""
+    Existence alone is not enough: containers commonly mount a SMALL tmpfs
+    at /dev/shm (Docker defaults to 64 MB), where staging a multi-MB
+    fixture fails with ENOSPC while /tmp would have worked.  Called once
+    per process, at first use of the scratch helpers below, and always as
+    this module's attribute with this signature: replacing it before first
+    use redirects all scratch."""
     if os.path.isdir("/dev/shm"):
         try:
             st = os.statvfs("/dev/shm")
@@ -97,6 +100,95 @@ def scratch_root(name: str, min_free_bytes: int = 256 << 20) -> str:
         except OSError:
             pass
     return f"/tmp/{name}"
+
+
+# --- per-process scratch: staged fixtures and stream checkpoints -----------
+# One directory, <scratch_root>/<pid>, holds every fixture the io and
+# streaming entries stage and every checkpoint their streams keep.  Its root
+# is chosen once, at first use, and never again: a resumed stream must find
+# its checkpoint, and a fixture staged once must be read back from where it
+# was written.  Headroom for that one choice: peak scratch over io01-io05 and
+# s03-s11, three runs each (warm-up + best of 2), measured 8.55x (sf0.01)
+# and 7.84x (sf0.1) the bytes of the sf_dir they read.
+_SCRATCH_RATIO = 9
+_scratch: tuple[int, str] | None = None  # (owner pid, directory)
+_scratch_lock = threading.Lock()
+_run_ids = itertools.count()
+_staged: dict[str, tuple[int, int, int] | None] = {}
+
+
+def _fingerprint(path: str) -> tuple[int, int, int] | None:
+    """(file count, total bytes, newest mtime_ns) of a file or directory
+    tree; None when it cannot be read."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (1, st.st_size, st.st_mtime_ns)
+        n = total = newest = 0
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                n += 1
+                total += st.st_size
+                newest = max(newest, st.st_mtime_ns)
+        return (n, total, newest)
+    except OSError:
+        return None
+
+
+def _scratch_dir(sf_dir: str) -> str:
+    """This process's scratch directory, resolved on first call."""
+    global _scratch
+    with _scratch_lock:
+        pid = os.getpid()
+        if _scratch is None or _scratch[0] != pid:
+            if _scratch is None:  # a forked child inherits the handler
+                atexit.register(_cleanup_scratch)
+            sf_bytes = (_fingerprint(sf_dir) or (0, 0, 0))[1]
+            root = scratch_root("spark_graft", max(256 << 20, _SCRATCH_RATIO * sf_bytes))
+            path = os.path.join(root, str(pid))
+            # Only a killed process with this pid can have left it behind;
+            # its checkpoints would make a new stream skip its input.
+            shutil.rmtree(path, ignore_errors=True)
+            _scratch = (pid, path)
+        return _scratch[1]
+
+
+def _cleanup_scratch() -> None:
+    """Remove this process's scratch directory at exit (on tmpfs it is
+    RAM).  A no-op in a forked child, which does not own it."""
+    if _scratch is not None and _scratch[0] == os.getpid():
+        shutil.rmtree(_scratch[1], ignore_errors=True)
+
+
+def _sf_name(sf_dir: str) -> str:
+    return os.path.basename(sf_dir.rstrip("/"))
+
+
+def run_dir(sf_dir: str, name: str) -> str:
+    """A path no other call in this process returns:
+    ``<scratch>/<sf name>/<name>_<n>``, with ``n`` from one counter shared
+    by every caller, so a stream query named after it is unique in the
+    session."""
+    return f"{_scratch_dir(sf_dir)}/{_sf_name(sf_dir)}/{name}_{next(_run_ids)}"
+
+
+def stage_once(sf_dir: str, source: str, name: str, write_fn) -> str:
+    """Stage an input fixture once per process and return its path.
+
+    For fixtures that are a pure function of ``<sf_dir>/<source>.parquet``
+    and never written after staging: re-writing one per run would time
+    fixture construction, not the operator that reads it, so a warm-up run
+    pays the write and timed runs reuse it.  A change to the source's
+    fingerprint (a regenerated sf_dir) restages.  ``write_fn(path)`` must
+    leave a complete fixture at ``path`` even over an interrupted earlier
+    write (``mode("overwrite")`` writers)."""
+    stage = f"{_scratch_dir(sf_dir)}/{_sf_name(sf_dir)}/{name}"
+    fp = _fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
+    if fp is None or _staged.get(stage) != fp:
+        write_fn(stage)
+        _staged[stage] = fp
+    return stage
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:

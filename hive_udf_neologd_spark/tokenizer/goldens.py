@@ -147,17 +147,6 @@ T18_TOKENS: dict[int, tuple[str, ...]] = {
 }
 
 
-def t18_values_rows() -> str:
-    rows = []
-    for pid in range(len(T18_POOL)):
-        toks = T18_TOKENS[pid]
-        rows.append(
-            f"  (CAST({pid} AS BIGINT), '{'|'.join(toks)}', "
-            f"CAST({len(toks)} AS INTEGER))"
-        )
-    return ",\n".join(rows)
-
-
 # pid → exact SEARCH-mode sequence for T18_POOL[pid] (t23, VERDICT r6
 # next-round #5: the compound-as-synonym emission path had no throughput
 # gate — t18 runs NORMAL).  SEARCH additionally emits each long compound
@@ -173,17 +162,6 @@ T23_TOKENS: dict[int, tuple[str, ...]] = {
     6: ('子供', '図書室', '図書', '室', '本', '借りる', '宿題', '済ませる', '校庭', '遊ぶ', '放課後', '教室', '合唱', '練習', '行う'),  # 図書室 decompounds once 室 ships (audit-135 counter tier) — exactly Lucene's SEARCH semantics: parts emit only when part rows exist
     7: ('台風', '接近', '伴う', '気象庁', '大雨', '警戒', '呼び掛ける', '避難所', '場所', '確認', '非常食', '懐中電灯', '準備', 'ほしい'),
 }
-
-
-def t23_values_rows() -> str:
-    rows = []
-    for pid in range(len(T18_POOL)):
-        toks = T23_TOKENS[pid]
-        rows.append(
-            f"  (CAST({pid} AS BIGINT), '{'|'.join(toks)}', "
-            f"CAST({len(toks)} AS INTEGER))"
-        )
-    return ",\n".join(rows)
 
 
 # pid → exact EXTENDED-mode sequence for T18_POOL[pid] (t24): EXTENDED
@@ -205,10 +183,15 @@ T24_TOKENS: dict[int, tuple[str, ...]] = {
 }
 
 
-def t24_values_rows() -> str:
+MODE_TOKENS = {"normal": T18_TOKENS, "search": T23_TOKENS, "extended": T24_TOKENS}
+
+
+def values_rows(tokens: dict[int, tuple[str, ...]]) -> str:
+    """VALUES rows (pid, tokens_str, n_tokens_per_doc) of one mode's pool
+    goldens, for the t18/t23/t24 oracles."""
     rows = []
     for pid in range(len(T18_POOL)):
-        toks = T24_TOKENS[pid]
+        toks = tokens[pid]
         rows.append(
             f"  (CAST({pid} AS BIGINT), '{'|'.join(toks)}', "
             f"CAST({len(toks)} AS INTEGER))"

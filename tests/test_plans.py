@@ -267,6 +267,34 @@ def test_d10_band_join_not_all_pairs(spark):
     assert "band" in plan and "bucket" in plan
 
 
+def test_d07_squaring_join_is_never_broadcast(spark, monkeypatch):
+    """The _cc_fixpoint edge-squaring join must stay a shuffle join after
+    AQE re-plans it: a broadcast flip would leave the skew guard's u-keyed
+    window exchange, which doubles as the join's y-side shuffle, as pure
+    overhead.  A small graph is the case where AQE would flip it."""
+    import re
+
+    from hive_udf_neologd_spark.operators import dedup as D
+
+    pairs = [(0, i) for i in range(1, 31)] + [(i, i + 1) for i in range(100, 140)]
+    edges = spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "u long, v long")
+    # The squared edge table is the first frame _cc_fixpoint checkpoints.
+    checkpointed = []
+    frame_cls = type(edges)
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    D._cc_fixpoint(edges).collect()
+    plan = checkpointed[0]._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    joins = re.findall(r"\b(\w+Join)\b", plan.split("== Initial Plan ==")[0])
+    assert joins and set(joins) <= {"SortMergeJoin", "ShuffledHashJoin"}, joins
+
+
 def test_d11_broadcasts_eval_grams_corpus_unshuffled(spark):
     plan = _plan(spark, "d11_benchmark_decontaminate")
     # Eval n-gram set broadcast; corpus grams flagged map-side.  The

@@ -179,24 +179,25 @@ def test_sort_samples_checkpoint_not_pipeline(spark, name):
         assert marker not in plan
 
 
-def test_io_input_fixture_staged_once(spark):
-    """io03-io05 stage their PURE input fixtures once per process (the
-    round-11 s04 staging protocol extended to the io tier): a second
-    builder invocation must reuse the staged layout byte-for-byte (no
-    rewrite — parquet part files keep their mtimes) and return identical
-    rows, and a fingerprint change must force a restage."""
+def test_io_input_fixture_staged_once(spark, monkeypatch):
+    """io03-io05 stage their PURE input fixtures once per process through
+    sources.stage_once: a second builder invocation must reuse the staged
+    layout byte-for-byte (no rewrite — parquet part files keep their
+    mtimes) and return identical rows, and a fingerprint change must force
+    a restage."""
     import glob
     import os
 
+    from hive_udf_neologd_spark import sources
     from hive_udf_neologd_spark.operators import io as io_ops
 
-    io_ops._STAGED_INPUTS.clear()
+    def must_not_write(path):
+        raise AssertionError(f"restaged {path}")
+
+    monkeypatch.setattr(sources, "_staged", {})
     df1 = io_ops.io04_small_file_compaction(spark, SF_DIR)
     rows1 = sorted(map(tuple, df1.collect()))
-    sprayed = (
-        f"{io_ops._stage_root()}/{os.path.basename(SF_DIR)}/"
-        f"events_sprayed_{os.getpid()}"
-    )
+    sprayed = sources.stage_once(SF_DIR, "events", "events_sprayed", must_not_write)
     parts = sorted(glob.glob(f"{sprayed}/*.parquet"))
     assert parts, "sprayed fixture missing after first build"
     mtimes = [os.path.getmtime(p) for p in parts]
@@ -209,7 +210,7 @@ def test_io_input_fixture_staged_once(spark):
     assert [os.path.getmtime(p) for p in parts2] == mtimes  # no rewrite
 
     # A fingerprint mismatch (regenerated sf_dir) must restage.
-    io_ops._STAGED_INPUTS[sprayed] = ("stale",)
+    sources._staged[sprayed] = ("stale",)
     io_ops.io04_small_file_compaction(spark, SF_DIR)
     parts3 = sorted(glob.glob(f"{sprayed}/*.parquet"))
     assert [os.path.getmtime(p) for p in parts3] != mtimes  # rewritten

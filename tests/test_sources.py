@@ -4,6 +4,8 @@ partition pruning on read-back."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -117,3 +119,96 @@ def test_compact_parquet(spark, tmp_path):
 
     assert len(glob.glob(f"{out}/*.parquet")) == 1
     assert spark.read.parquet(out).count() == docs.count()
+
+
+# --- per-process scratch (sources.run_dir / stage_once) ---------------------
+@pytest.fixture
+def fresh_scratch(monkeypatch):
+    """The scratch state of a process that has not used scratch yet."""
+    from hive_udf_neologd_spark import sources
+
+    monkeypatch.setattr(sources, "_scratch", None)
+    monkeypatch.setattr(sources, "_staged", {})
+    return sources
+
+
+def _run_io04_s04(spark, io04_runs: int = 1) -> None:
+    from hive_udf_neologd_spark.operators.io import io04_small_file_compaction
+    from hive_udf_neologd_spark.streaming.e2e import s04_streaming_term_counts_e2e
+
+    for _ in range(io04_runs):
+        io04_small_file_compaction(spark, SF_DIR).collect()
+    s04_streaming_term_counts_e2e(spark, SF_DIR).collect()
+
+
+def _scratch_entries(root) -> list[str]:
+    base = root / "spark_graft" / str(os.getpid()) / os.path.basename(SF_DIR)
+    return sorted(p.name.rstrip("0123456789") for p in base.iterdir())
+
+
+def test_scratch_root_patch_redirects_io_and_streaming(
+    spark, fresh_scratch, monkeypatch, tmp_path
+):
+    """Replacing sources.scratch_root before first use, with the
+    ``(name, min_free_bytes=0)`` signature, moves all of io04's and s04's
+    scratch (how a caller keeps scratch inside its own directory)."""
+    monkeypatch.setattr(
+        fresh_scratch, "scratch_root", lambda name, min_free_bytes=0: str(tmp_path / name)
+    )
+    _run_io04_s04(spark)
+    assert _scratch_entries(tmp_path) == [
+        "documents",
+        "events_compacted_",
+        "events_sprayed",
+        "s04_sink_",  # the stream's checkpoint
+    ]
+
+
+def test_scratch_root_is_resolved_once_per_process(
+    spark, fresh_scratch, monkeypatch, tmp_path
+):
+    """A root choice that would change between calls (free space moving
+    across the tmpfs threshold) must not move scratch: two io04 runs and
+    s04's stage and checkpoint all land under the first root."""
+    calls = []
+
+    def moving_root(name, min_free_bytes=0):
+        calls.append(min_free_bytes)
+        return str(tmp_path / f"root{len(calls)}" / name)
+
+    monkeypatch.setattr(fresh_scratch, "scratch_root", moving_root)
+    _run_io04_s04(spark, io04_runs=2)
+    assert len(calls) == 1
+    assert [p.name for p in tmp_path.iterdir()] == ["root1"]
+    assert _scratch_entries(tmp_path / "root1") == [
+        "documents",
+        "events_compacted_",
+        "events_compacted_",
+        "events_sprayed",
+        "s04_sink_",
+    ]
+
+
+def test_scratch_cleanup_only_in_owning_process(fresh_scratch, monkeypatch, tmp_path):
+    """Exit cleanup removes the process directory, and is a no-op in a
+    forked child, which inherits the handler but not the directory."""
+    monkeypatch.setattr(
+        fresh_scratch, "scratch_root", lambda name, min_free_bytes=0: str(tmp_path / name)
+    )
+    run = fresh_scratch.run_dir(SF_DIR, "x")
+    os.makedirs(run)
+    own = tmp_path / "spark_graft" / str(os.getpid())
+    assert run.startswith(f"{own}/")
+    child = os.fork()
+    if child == 0:
+        code = 1
+        try:
+            fresh_scratch._cleanup_scratch()
+            code = 0
+        finally:
+            os._exit(code)
+    _, status = os.waitpid(child, 0)
+    assert os.waitstatus_to_exitcode(status) == 0
+    assert os.path.isdir(run)
+    fresh_scratch._cleanup_scratch()
+    assert not own.exists()

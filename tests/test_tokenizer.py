@@ -15,6 +15,7 @@ from hive_udf_neologd_spark.tokenizer.dictionary import (
     UserDictionary,
     UserDictionaryError,
 )
+from hive_udf_neologd_spark.tokenizer.goldens import MODE_TOKENS, T18_POOL
 
 GOLDEN_SENTENCE = (
     "10日放送の「中居正広のミになる図書館」（テレビ朝日系）で、"
@@ -471,35 +472,16 @@ class TestSharedGoldenMatrix:
             assert row[2] in t17
 
 
-def test_t18_pool_matches_shared_goldens():
-    # Same single-source contract as t08/t17: the t18 VALUES oracle is
-    # built from T18_TOKENS, so the analyzer must reproduce those exact
-    # sequences — a dictionary change that re-segments a pool text fails
-    # HERE, not just in the driver's oracle run.
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, T18_TOKENS
-
-    analyzer = JapaneseAnalyzer()
+@pytest.mark.parametrize("mode, tokens", MODE_TOKENS.items(), ids=list(MODE_TOKENS))
+def test_pool_matches_mode_goldens(mode, tokens):
+    # Same single-source contract as t08/t17: the t18/t23/t24 VALUES
+    # oracles are built from these goldens, so the analyzer must reproduce
+    # those exact sequences in each mode — a dictionary change that
+    # re-segments a pool text fails HERE, not just in the driver's oracle
+    # run.
+    analyzer = JapaneseAnalyzer(mode=mode)
     for pid, text in enumerate(T18_POOL):
-        assert tuple(analyzer.tokenize(text)) == T18_TOKENS[pid], pid
-
-
-def test_t23_pool_matches_search_goldens():
-    # t23 (round 7): the SEARCH-mode twin — compound-as-synonym emission
-    # over the same pool, pinned the same way.
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, T23_TOKENS
-
-    analyzer = JapaneseAnalyzer(mode="search")
-    for pid, text in enumerate(T18_POOL):
-        assert tuple(analyzer.tokenize(text)) == T23_TOKENS[pid], pid
-
-
-def test_t24_pool_matches_extended_goldens():
-    # t24 (round 7): EXTENDED completes the mode matrix.
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, T24_TOKENS
-
-    analyzer = JapaneseAnalyzer(mode="extended")
-    for pid, text in enumerate(T18_POOL):
-        assert tuple(analyzer.tokenize(text)) == T24_TOKENS[pid], pid
+        assert tuple(analyzer.tokenize(text)) == tokens[pid], pid
 
 
 class TestConnectionMatrix:
