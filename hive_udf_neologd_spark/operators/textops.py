@@ -1062,7 +1062,7 @@ def mode_throughput(mode: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     time for docs/sec; dictionary growth that regresses the hot kernel
     fails a BASELINE gate instead of slipping through (t01's corpus is
     pure-ASCII and never touches the lattice).  SEARCH re-scans
-    ``prefix_matches`` per chosen node for compound-as-synonym emission;
+    ``prefix_surfaces`` per chosen node for compound-as-synonym emission;
     EXTENDED lowers decompound thresholds and 1-grams unknown runs, the
     highest-token-count path through the lattice.
 

@@ -26,6 +26,7 @@ import hashlib
 import io
 import marshal
 import os
+import re
 import urllib.request
 from dataclasses import dataclass, field
 from functools import lru_cache
@@ -53,6 +54,10 @@ SNAPSHOT_BIN_PATH = SNAPSHOT_PATH[:-4] + ".marshal"
 CONNECT_TIMEOUT_SEC = 10.0
 READ_TIMEOUT_SEC = 60.0
 MAX_INPUT_STREAM_SIZE = 32 * 1024 * 1024
+
+# Surfaces that can match inside a pure alnum-ASCII line
+# (Dictionary.ascii_matchable_surfaces).
+_ASCII_SURFACE_RE = re.compile(r"[A-Za-z0-9 ]+")
 
 
 class DictEntry(NamedTuple):
@@ -87,17 +92,19 @@ class DictEntry(NamedTuple):
 
 
 class Dictionary:
-    """Surface-hash prefix dictionary with per-first-char length sets.
+    """Surface-hash prefix dictionary with a two-character length index.
 
-    ``prefix_matches`` does one dict probe per DISTINCT surface length
-    registered under the position's first character — O(1) in dictionary
-    size.  The previous first-char-indexed linear scan was adequate at
-    ~500 entries but at the 59k-entry snapshot the worst buckets reach
-    594 same-first-char entries (見), i.e. 594 ``startswith`` calls per
-    lattice position (measured round 6; VERDICT r5 stale-comment note);
-    here the same position costs ≤ len(length-set) ≈ 2-8 hash probes of
-    short strings, independent of how many entries share the first char —
-    the structure a real NEologd-sized (~3M surface) load needs.
+    ``prefix_surfaces`` does one dict probe per DISTINCT surface length
+    registered under the position's first TWO characters, plus one probe
+    for the single character — O(1) in dictionary size.  Keying the
+    length sets by one character instead made every position pay for all
+    the lengths its first character starts (4.97 probes per position on
+    generated NEologd-style documents, 17% of them hits); two characters
+    cut that to about 2 while the index stays a third the size of a full
+    prefix table (21k keys vs 93k at the packaged snapshot), which would
+    grow with every prefix of every surface at NEologd scale.  The
+    earlier first-char-indexed linear scan reached 594 ``startswith``
+    calls per position (見) at the 59k-entry snapshot.
 
     Match order is preserved exactly: longest surface first, registration
     order within one surface (Viterbi's strict ``<`` relaxation makes the
@@ -107,7 +114,9 @@ class Dictionary:
         from hive_udf_neologd_spark.tokenizer.connection import entry_classes
 
         by_surface: dict[str, list[DictEntry]] = {}
-        lens_by_first: dict[str, set[int]] = {}
+        # Surface lengths >= 2 as a bit set per first two chars (ints, so
+        # the 21k-key build allocates no containers for the GC to scan).
+        len_bits: dict[str, int] = {}
         max_len = 0
         from hive_udf_neologd_spark.tokenizer.chardef import kana_reading
         from hive_udf_neologd_spark.tokenizer.readings import derive_reading
@@ -134,7 +143,9 @@ class Dictionary:
             bucket = by_surface.get(s)
             if bucket is None:
                 by_surface[s] = [e]
-                lens_by_first.setdefault(s[0], set()).add(len(s))
+                if len(s) > 1:
+                    p = s[:2]
+                    len_bits[p] = len_bits.get(p, 0) | 1 << len(s)
                 if len(s) > max_len:
                     max_len = len(s)
             else:
@@ -190,26 +201,39 @@ class Dictionary:
                 if not merged:
                     bucket.append(e)
         self._by_surface = by_surface
-        # Longest-first per first char (tuples: stable, iteration-cheap).
-        self._lens_by_first: dict[str, tuple[int, ...]] = {
-            ch: tuple(sorted(lens, reverse=True)) for ch, lens in lens_by_first.items()
+        # Lengths >= 2 by first two chars, longest first, one shared tuple
+        # per distinct length set; length-1 surfaces are probed in
+        # _by_surface.
+        lens_of = {
+            bits: tuple(n for n in range(bits.bit_length() - 1, 1, -1) if bits >> n & 1)
+            for bits in set(len_bits.values())
+        }
+        self._lens_by_prefix: dict[str, tuple[int, ...]] = {
+            p: lens_of[bits] for p, bits in len_bits.items()
         }
         self.max_len = max_len
 
-    def prefix_matches(self, text: str, pos: int) -> list[DictEntry]:
-        lens = self._lens_by_first.get(text[pos])
-        if lens is None:
-            return []
-        out: list[DictEntry] = []
+    def prefix_surfaces(self, text: str, pos: int) -> list[str]:
+        """Surfaces of this dictionary that ``text`` holds at ``pos``,
+        longest first — the one lookup behind every prefix match."""
         by_surface = self._by_surface
-        remaining = len(text) - pos
-        for ln in lens:
-            if ln > remaining:
-                continue
-            hit = by_surface.get(text[pos : pos + ln])
-            if hit is not None:
-                out.extend(hit)
+        out = []
+        lens = self._lens_by_prefix.get(text[pos : pos + 2])
+        if lens is not None:
+            remaining = len(text) - pos
+            for ln in lens:
+                if ln <= remaining:
+                    s = text[pos : pos + ln]
+                    if s in by_surface:
+                        out.append(s)
+        s = text[pos]
+        if s in by_surface:
+            out.append(s)
         return out
+
+    def prefix_matches(self, text: str, pos: int) -> list[DictEntry]:
+        by_surface = self._by_surface
+        return [e for s in self.prefix_surfaces(text, pos) for e in by_surface[s]]
 
     def ascii_matchable_surfaces(self) -> tuple[str, ...]:
         """Surfaces consisting entirely of [A-Za-z0-9 ] — the only entries
@@ -222,11 +246,7 @@ class Dictionary:
         construction-frozen, so the sweep is a pure function of self."""
         cached = getattr(self, "_ascii_surfaces", None)
         if cached is None:
-            import re
-
-            cached = tuple(
-                s for s in self._by_surface if re.fullmatch(r"[A-Za-z0-9 ]+", s)
-            )
+            cached = tuple(filter(_ASCII_SURFACE_RE.fullmatch, self._by_surface))
             self._ascii_surfaces = cached
         return cached
 

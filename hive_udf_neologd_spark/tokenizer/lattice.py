@@ -31,16 +31,23 @@ the round-5 per-position Viterbi — same totals, same tie-breaks (first
 achiever of the strict minimum wins, candidates processed user → dict
 longest-first → unknown at ascending positions).
 
-Hot-path engineering (round 6, VERDICT r5 next-round #6): nodes are plain
-tuples in parallel lists (no per-node dataclass), character classes and
-run ends are precomputed once per line, and the per-position incoming
-list is prebuilt so the inner relaxation does no tuple allocation.
+Hot-path engineering: character classes and run ends are computed once
+per line.  Each position gathers its candidates as precomputed
+``(len, cost, lc, rc, payload)`` tuples — a built-in surface's tuples
+(search penalty included) are memoized per lattice on first match, and
+the unknown-word ladder is a table keyed by (char class, run length) —
+and relaxes them in one inline loop that reads a lone incoming class's
+total and connection row once.  Dictionary matches come from
+``Dictionary.prefix_surfaces``, which probes only the lengths registered
+under the position's first two characters.  Nodes are
+``(start, len, payload, back)`` tuples in one list, with their path costs
+in a parallel ``totals`` list.
 """
 
 from __future__ import annotations
 
 from hive_udf_neologd_spark.tokenizer import chardef, connection
-from hive_udf_neologd_spark.tokenizer.dictionary import DictEntry, Dictionary, UserDictionary
+from hive_udf_neologd_spark.tokenizer.dictionary import Dictionary, UserDictionary
 
 NORMAL = "normal"
 SEARCH = "search"
@@ -63,7 +70,6 @@ _char_class = chardef.char_class
 
 _POS_UNK_NUM = "名詞-数"
 _POS_UNK = "名詞-一般"
-_POS_PUNCT = "記号-一般"
 
 # Punct-category chars the kana blocks claim (・ ゠ ゛ ゜) — each gets a
 # zero-cost discardable node CANDIDATE alongside the unknown candidates,
@@ -116,13 +122,11 @@ class Token(tuple):
     is_unknown = property(lambda self: self[6])
 
 
-def _search_penalty(entry: DictEntry, mode: str) -> int:
-    if mode not in (SEARCH, EXTENDED):
-        return 0
-    s = entry.surface
-    n = len(s)
+def _search_penalty(surface: str) -> int:
+    """SEARCH/EXTENDED cost added to a built-in dictionary surface."""
+    n = len(surface)
     if n > _SEARCH_KANJI_LENGTH and all(
-        _char_class(c) == _KANJI for c in s
+        _char_class(c) == _KANJI for c in surface
     ):
         # Flat Kuromoji penalty plus a length term so long compounds
         # (関西国際空港) decompose whenever component entries exist, while
@@ -133,6 +137,57 @@ def _search_penalty(entry: DictEntry, mode: str) -> int:
     return 0
 
 
+def _unknown_ladder(ch_class: int, misc_punct: bool, rl: int, extended: bool) -> tuple:
+    """Unknown-word and punctuation candidates at a position of class
+    ``ch_class`` whose same-class run is ``rl`` chars long, in relaxation
+    order.  A candidate is ``(len, cost, lc, rc, payload)``; the payload
+    is the POS tag of an unknown node, or None for a discardable punct
+    node."""
+    if ch_class == _PUNCT:
+        # Group a run of punctuation/whitespace into one discardable node.
+        return ((rl, 0, _DEF, _DEF, None),)
+    out = []
+    if misc_punct:
+        # Symbol.csv-analog candidate (see _MISC_PUNCT note): competes
+        # with, never replaces, the kana-class unknown candidates below.
+        out.append((1, 0, _DEF, _DEF, None))
+    if ch_class == _DIGIT:
+        unk_pos = _POS_UNK_NUM
+        urc = _NUM_RC  # 名詞-数 right class (counter reward)
+    else:
+        unk_pos = _POS_UNK
+        urc = _DEF
+    if extended:
+        # Extended mode: unknown words become unigrams (Kuromoji EXTENDED).
+        out.append((1, 3000, _DEF, urc, unk_pos))
+    elif ch_class == _KANJI:
+        # char.def: KANJI group=0 length=2 → candidates 1..2.
+        out.append((1, 5200, _DEF, _DEF, unk_pos))
+        if rl >= 2:
+            out.append((2, 6900, _DEF, _DEF, unk_pos))
+    elif ch_class in _GROUPING:
+        # Full-run grouped candidate (cheapest per char) ...
+        out.append((rl, 3000 + 500 * rl, _DEF, urc, unk_pos))
+        # ... plus prefixes of 1-5 chars (4400, 5300, ... 8000) so
+        # embedded dictionary words can win.  Ladder extended to 5 in
+        # round 7 (audit 116): a missing 4-char word (なめらか) had no
+        # matching prefix, so the full run swallowed the ELEVEN
+        # characters なめらかになるまでよく — with the 4/5 rungs the
+        # unknown word ends where the particle begins (7100+50+… < 8500)
+        # even before a dictionary wave ships the word itself.
+        for k in range(1, min(rl, 6)):
+            out.append((k, 3500 + 900 * k, _DEF, _DEF, unk_pos))
+    else:
+        out.append((1, 6000, _DEF, _DEF, unk_pos))
+    return tuple(out)
+
+
+# Run lengths the per-lattice unknown table holds; a longer run (rare)
+# builds its ladder on the spot, so the table's size does not depend on
+# the input.
+_UNKNOWN_TABLE_RUNS = 32
+
+
 class Lattice:
     """Minimum-cost segmenter over (built-in dict + user dict + unknowns)."""
 
@@ -141,6 +196,22 @@ class Lattice:
         self._mode = mode
         self._user = Dictionary(user_dict.entries) if user_dict and user_dict.entries else None
         self._search = mode in (SEARCH, EXTENDED)
+        # Candidate tuples of each built-in surface seen so far, search
+        # penalty included: filled on first match, bounded by the
+        # dictionary's size.
+        self._dict_cands: dict[str, tuple] = {}
+        # Unknown-word table: [misc_punct][char class][run length].
+        extended = mode == EXTENDED
+        self._unknown = tuple(
+            tuple(
+                ((),) + tuple(
+                    _unknown_ladder(ci, misc, rl, extended)
+                    for rl in range(1, _UNKNOWN_TABLE_RUNS + 1)
+                )
+                for ci in range(chardef.OTHER + 1)
+            )
+            for misc in (False, True)
+        )
 
     def ascii_matchable_surfaces(self) -> tuple[str, ...]:
         """All (built-in + user) surfaces that could match inside a pure
@@ -152,13 +223,29 @@ class Lattice:
             out = out + self._user.ascii_matchable_surfaces()
         return out
 
+    def unknown_candidates(self, ch: str, rl: int) -> tuple:
+        """The unknown-word candidates ``segment`` relaxes at a position
+        holding ``ch`` whose same-class run from there is ``rl`` chars."""
+        misc = ch in _MISC_PUNCT
+        if rl <= _UNKNOWN_TABLE_RUNS:
+            return self._unknown[misc][_char_class(ch)][rl]
+        return _unknown_ladder(_char_class(ch), misc, rl, self._mode == EXTENDED)
+
+    def dictionary_candidates(self, surface: str) -> tuple:
+        """Candidate tuples of a built-in dictionary surface (none when it
+        is not one), with this lattice's search penalty included."""
+        penalty = _search_penalty(surface) if self._search else 0
+        ln = len(surface)
+        return tuple(
+            (ln, e.cost + penalty, e.lc, e.rc, e)
+            for e in self._dict._by_surface.get(surface, ())
+        )
+
     def segment(self, text: str) -> list[Token]:
         n = len(text)
         if n == 0:
             return []
-        mode = self._mode
-        extended = mode == EXTENDED
-        search = self._search
+        extended = self._mode == EXTENDED
         user = self._user
         dic = self._dict
 
@@ -174,62 +261,70 @@ class Lattice:
             else:
                 run_end[i] = i + 1
 
-        # Node-lattice Viterbi.  Nodes live in parallel lists; ends[j]
-        # maps right-class → node index of the cheapest node ending at j.
-        node_start: list[int] = []
-        node_len: list[int] = []
-        node_entry: list[DictEntry | None] = []
-        node_pos: list[str] = []
-        node_punct: list[bool] = []
-        node_total: list[float] = []
-        node_back: list[int] = []
-        node_rc: list[int] = []
+        # Node-lattice Viterbi.  nodes[k] is (start, len, payload, back)
+        # and totals[k] its path cost; node 0 is BOS.  ends[j] maps
+        # right-class → index of the cheapest node ending at j.
+        nodes: list[tuple] = [(0, 0, None, -1)]
+        totals: list[int] = [0]
         ends: list[dict[int, int] | None] = [None] * (n + 1)
-        ends[0] = {_BOS: -1}  # -1 = BOS sentinel, total 0
+        ends[0] = {_BOS: 0}
 
         # Hoisted locals for the hot loop.
-        dic_lens = dic._lens_by_first
-        dic_surf = dic._by_surface
-        ns_app = node_start.append
-        nl_app = node_len.append
-        ne_app = node_entry.append
-        np_app = node_pos.append
-        npu_app = node_punct.append
-        nt_app = node_total.append
-        nb_app = node_back.append
-        nr_app = node_rc.append
+        prefix_surfaces = dic.prefix_surfaces
+        memo = self._dict_cands
+        unk_plain, unk_misc = self._unknown
+        add_node = nodes.append
+        add_total = totals.append
 
         for i in range(n):
             incoming = ends[i]
             if incoming is None:
                 continue
-            # Per-position incoming snapshot.  The round-6 hard-constraint
-            # matrix gives most prev classes a row, so the earlier
-            # precompute-every-target-class approach did O(all rows) work
-            # per position; a direct min over the incoming classes
-            # (typically 1-3) per candidate, against a DENSE per-class
-            # cost vector (_CONN2D, default 0), is cheaper and preserves
-            # the strict-< first-achiever tie-break exactly (same
-            # insertion-order iteration, same strict comparison).
-            inc = [
-                (idx, node_total[idx] if idx >= 0 else 0, _CONN2D[prc])
-                for prc, idx in incoming.items()
-            ]
-            if len(inc) == 1:
-                idx0, t00, row0 = inc[0]
+            # --- candidates (relaxed in the round-5 order: user → dict
+            # longest-first → unknown) ---------------------------------
+            ch = text[i]
+            rl = run_end[i] - i
+            if rl <= _UNKNOWN_TABLE_RUNS:
+                unknown = (unk_misc if ch in _MISC_PUNCT else unk_plain)[cls[i]][rl]
+            else:
+                unknown = _unknown_ladder(cls[i], ch in _MISC_PUNCT, rl, extended)
+            hits = prefix_surfaces(text, i)
+            if hits or user is not None:
+                cands = []
+                if user is not None:
+                    for e in user.prefix_matches(text, i):
+                        cands.append((len(e.surface), e.cost, e.lc, e.rc, e))
+                for s in hits:
+                    c = memo.get(s)
+                    if c is None:
+                        c = memo[s] = self.dictionary_candidates(s)
+                    cands += c
+                cands += unknown
+            else:
+                cands = unknown
+
+            # --- relaxation.  The round-6 hard-constraint matrix gives
+            # most prev classes a row, so a direct min over the incoming
+            # classes (typically 1-3) per candidate, against a DENSE
+            # per-class cost vector (_CONN2D, default 0), is cheapest and
+            # preserves the strict-< first-achiever tie-break exactly
+            # (same insertion-order iteration, same strict comparison).
+            # With one incoming class (a third of positions) its total
+            # and row are read once for every candidate.
+            if len(incoming) == 1:
+                ((prc, bi),) = incoming.items()
+                t0 = totals[bi]
+                row = _CONN2D[prc]
                 inc = None
             else:
-                idx0 = t00 = row0 = None
-
-            def relax(ln, wc, e, ptag, punct, lc, rc):
+                inc = [(idx, totals[idx], _CONN2D[prc]) for prc, idx in incoming.items()]
+            for ln, wc, lc, rc, payload in cands:
                 if inc is None:
-                    total = t00 + row0[lc] + wc
-                    bi = idx0
+                    total = t0 + row[lc] + wc
                 else:
                     best = _INF
-                    bi = -2
-                    for idx, t0, row in inc:
-                        t = t0 + row[lc]
+                    for idx, t, r in inc:
+                        t += r[lc]
                         if t < best:
                             best = t
                             bi = idx
@@ -237,107 +332,31 @@ class Lattice:
                 j = i + ln
                 slot = ends[j]
                 if slot is None:
-                    slot = ends[j] = {}
-                cur = slot.get(rc)
-                if cur is None or total < node_total[cur]:
-                    slot[rc] = len(node_total)
-                    ns_app(i)
-                    nl_app(ln)
-                    ne_app(e)
-                    np_app(ptag)
-                    npu_app(punct)
-                    nt_app(total)
-                    nb_app(bi)
-                    nr_app(rc)
-
-            # --- candidates (relaxed in the round-5 order: user → dict
-            # longest-first → unknown) ---------------------------------
-            if user is not None:
-                for e in user.prefix_matches(text, i):
-                    relax(len(e.surface), e.cost, e, e.pos, False, e.lc, e.rc)
-            lens = dic_lens.get(text[i])
-            if lens is not None:
-                remaining = n - i
-                for ln in lens:
-                    if ln > remaining:
+                    ends[j] = {rc: len(totals)}
+                else:
+                    cur = slot.get(rc)
+                    if cur is not None and total >= totals[cur]:
                         continue
-                    hit = dic_surf.get(text[i : i + ln])
-                    if hit is not None:
-                        if search:
-                            for e in hit:
-                                relax(ln, e.cost + _search_penalty(e, mode),
-                                      e, e.pos, False, e.lc, e.rc)
-                        else:
-                            for e in hit:
-                                relax(ln, e.cost, e, e.pos, False, e.lc, e.rc)
-
-            ci = cls[i]
-            if ci == _PUNCT:
-                # Group a run of punctuation/whitespace into one
-                # discardable node.
-                relax(run_end[i] - i, 0, None, _POS_PUNCT, True, _DEF, _DEF)
-            else:
-                if text[i] in _MISC_PUNCT:
-                    # Symbol.csv-analog candidate (see _MISC_PUNCT note):
-                    # competes with, never replaces, the kana-class
-                    # unknown candidates below.
-                    relax(1, 0, None, _POS_PUNCT, True, _DEF, _DEF)
-                if ci == _DIGIT:
-                    unk_pos = _POS_UNK_NUM
-                    urc = _NUM_RC  # 名詞-数 right class (counter reward)
-                else:
-                    unk_pos = _POS_UNK
-                    urc = _DEF
-                if extended:
-                    # Extended mode: unknown words become unigrams
-                    # (Kuromoji EXTENDED).
-                    relax(1, 3000, None, unk_pos, False, _DEF, urc)
-                elif ci == _KANJI:
-                    # char.def: KANJI group=0 length=2 → candidates 1..2.
-                    relax(1, 5200, None, unk_pos, False, _DEF, _DEF)
-                    if run_end[i] - i >= 2:
-                        relax(2, 6900, None, unk_pos, False, _DEF, _DEF)
-                elif ci in _GROUPING:
-                    rl = run_end[i] - i
-                    # Full-run grouped candidate (cheapest per char) ...
-                    relax(rl, 3000 + 500 * rl, None, unk_pos, False, _DEF, urc)
-                    # ... plus short prefixes so embedded dictionary words
-                    # can win.  Ladder extended to 5 in round 7 (audit
-                    # 116): a missing 4-char word (なめらか) had no
-                    # matching prefix, so the full run swallowed the
-                    # ELEVEN characters なめらかになるまでよく — with the
-                    # 4/5 rungs the unknown word ends where the particle
-                    # begins (7100+50+… < 8500) even before a dictionary
-                    # wave ships the word itself.
-                    if rl > 1:
-                        relax(1, 4400, None, unk_pos, False, _DEF, _DEF)
-                        if rl > 2:
-                            relax(2, 5300, None, unk_pos, False, _DEF, _DEF)
-                            if rl > 3:
-                                relax(3, 6200, None, unk_pos, False, _DEF, _DEF)
-                                if rl > 4:
-                                    relax(4, 7100, None, unk_pos, False, _DEF, _DEF)
-                                    if rl > 5:
-                                        relax(5, 8000, None, unk_pos, False, _DEF, _DEF)
-                else:
-                    relax(1, 6000, None, unk_pos, False, _DEF, _DEF)
+                    slot[rc] = len(totals)
+                add_node((i, ln, payload, bi))
+                add_total(total)
 
         # Backtrack from the cheapest node ending at n (every position is
         # reachable: unknown nodes always exist).  Tie → first-inserted
         # (earliest start, earliest candidate), matching the strict-<
         # relaxation order of the per-position formulation.
-        final = ends[n]
         best = _INF
-        idx = -2
-        for _rc, k in final.items():  # insertion order
-            t = node_total[k] + _EOS_COSTS[_rc]
+        k = 0
+        for rc, idx in ends[n].items():  # insertion order
+            t = totals[idx] + _EOS_COSTS[rc]
             if t < best:
                 best = t
-                idx = k
-        path: list[tuple[int, int]] = []  # (start, node_idx)
-        while idx >= 0:
-            path.append((node_start[idx], idx))
-            idx = node_back[idx]
+                k = idx
+        path: list[tuple] = []
+        while k > 0:
+            node = nodes[k]
+            path.append(node)
+            k = node[3]
         path.reverse()
 
         # SEARCH/EXTENDED compound-as-synonym emission (Lucene 5.5.5
@@ -356,42 +375,38 @@ class Lattice:
         # User-dictionary compounds are excluded: Lucene always applies
         # the user segmentation without a synonym compound.
         compounds: dict[int, Token] = {}
-        if search:
-            end_to_idx = {
-                start + node_len[nidx]: k for k, (start, nidx) in enumerate(path)
-            }
-            for k, (i, nidx) in enumerate(path):
-                best_e = None
-                ln = node_len[nidx]
-                for e in dic.prefix_matches(text, i):
-                    if len(e.surface) == ln:
+        if self._search:
+            end_to_k = {start + ln: k for k, (start, ln, _p, _b) in enumerate(path)}
+            by_surface = dic._by_surface
+            for k, (i, ln, _p, _b) in enumerate(path):
+                # Longest first: the first aligned penalized surface wins.
+                for surf in dic.prefix_surfaces(text, i):
+                    if len(surf) == ln:
                         continue  # the path kept the compound itself
-                    if _search_penalty(e, mode) <= 0:
+                    if _search_penalty(surf) <= 0:
                         continue  # not a decompounding candidate
-                    kk = end_to_idx.get(i + len(e.surface))
+                    kk = end_to_k.get(i + len(surf))
                     if kk is None or kk <= k:
                         continue  # does not align with ≥2 chosen parts
-                    if best_e is None or len(e.surface) > len(best_e.surface):
-                        best_e = e
-                if best_e is not None:
-                    surf = text[i : i + len(best_e.surface)]
+                    e = by_surface[surf][0]
                     compounds[k] = Token(
                         surf,
-                        best_e.norm if best_e.norm is not None else surf,
-                        best_e.pos,
-                        best_e.base_form,
-                        best_e.reading,
+                        e.norm if e.norm is not None else surf,
+                        e.pos,
+                        e.base_form,
+                        e.reading,
                         False,
                         False,
                     )
+                    break
 
         tokens: list[Token] = []
-        for k, (i, nidx) in enumerate(path):
+        for k, (i, ln, e, _b) in enumerate(path):
             if k in compounds:
                 tokens.append(compounds[k])
-            if node_punct[nidx]:
+            if e is None:
                 continue  # discardPunctuation=true
-            surface = text[i : i + node_len[nidx]]
+            surface = text[i : i + ln]
             if _is_punct_token(surface):
                 # Lucene discardPunctuation applies to every emitted
                 # token by CATEGORY, not by node class — an all-punct
@@ -400,8 +415,11 @@ class Lattice:
                 # r11 #1).  One category lookup per token typical: the
                 # first non-punct char short-circuits.
                 continue
-            e = node_entry[nidx]
-            if e is not None and e.segments:
+            if e.__class__ is str:
+                # Unknown word: the payload is its POS tag.
+                tokens.append(Token(surface, surface, e, None, None, False, True))
+                continue
+            if e.segments:
                 # User-dictionary segmentation: emit each segment as a token.
                 for seg, reading in e.segments:
                     if _is_punct_token(seg):
@@ -410,13 +428,8 @@ class Lattice:
                         Token(seg, seg, e.pos, None, reading, False, False)
                     )
                 continue
-            if e is not None:
-                term = e.norm if e.norm is not None else surface
-                tokens.append(
-                    Token(surface, term, e.pos, e.base_form, e.reading, False, False)
-                )
-            else:
-                tokens.append(
-                    Token(surface, surface, node_pos[nidx], None, None, False, True)
-                )
+            term = e.norm if e.norm is not None else surface
+            tokens.append(
+                Token(surface, term, e.pos, e.base_form, e.reading, False, False)
+            )
         return tokens

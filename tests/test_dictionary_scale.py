@@ -98,12 +98,13 @@ class TestNeologdScaleSimulation:
         assert len(d._by_surface) > 500_000
 
     def test_probe_count_stays_bounded(self, scaled_entries):
-        """prefix_matches cost is len(length-set) hash probes per
-        position — independent of bucket population.  At ×9 the length
-        sets grow by at most the suffix lengths; the bound must stay
-        O(10), not O(bucket)."""
+        """prefix_surfaces cost is len(length-set) hash probes under the
+        first two characters, plus one for the single character —
+        independent of bucket population.  At ×9 the length sets grow by
+        at most the suffix lengths; the bound must stay O(10), not
+        O(bucket)."""
         d = Dictionary(scaled_entries)
-        worst = max(len(lens) for lens in d._lens_by_first.values())
+        worst = 1 + max(len(lens) for lens in d._lens_by_prefix.values())
         assert worst <= 25, f"worst per-position probe count {worst}"
 
     def test_lattice_throughput_at_530k(self, scaled_entries):
@@ -261,13 +262,13 @@ class TestRealisticMillionEntry:
         assert len(d._by_surface) > 900_000
 
     def test_probe_count_under_prefix_collisions(self, realistic_entries):
-        """Compounds multiply the lengths seen per first char (this is
+        """Compounds multiply the lengths seen per first two chars (this is
         the realistic part the clone fixture lacked) — the per-position
         probe count must stay bounded by the LENGTH SET, not by bucket
-        population.  Measured: worst ≈ 17 (max compound = 3×8 chars);
-        gate at 30."""
+        population.  Measured: worst 20 (19 lengths under one
+        two-char prefix, plus the single char); gate at 30."""
         d = Dictionary(realistic_entries)
-        worst = max(len(lens) for lens in d._lens_by_first.values())
+        worst = 1 + max(len(lens) for lens in d._lens_by_prefix.values())
         assert worst <= 30, f"worst per-position probe count {worst}"
 
     def test_lattice_throughput_at_1m(self, realistic_entries):

@@ -28,42 +28,39 @@ _CLASS_NAMES = {
 }
 
 
-def candidates(text: str, start: int, surface: str):
+def unknown_candidates(lat: Lattice, text: str, start: int, surface: str):
+    """The lattice's unknown-word and punct candidates for this exact
+    span, read from its unknown table at the span's same-class run."""
+    cls0 = chardef.char_class(text[start])
+    end = start + 1
+    while end < len(text) and chardef.char_class(text[end]) == cls0:
+        end += 1
+    return [
+        (cost, lc, rc, "punct" if pos is None else f"unk:{pos}")
+        for ln, cost, lc, rc, pos in lat.unknown_candidates(text[start], end - start)
+        if ln == len(surface)
+    ]
+
+
+def candidates(lat: Lattice, text: str, start: int, surface: str):
     """All (cost, lc, rc, label) candidates for this exact surface span."""
-    dic = builtin_dictionary()
-    out = []
-    for e in dic._by_surface.get(surface, ()):  # noqa: SLF001
-        out.append((e.cost, e.lc, e.rc, f"dict:{e.pos}"))
-    # Unknown candidates mirroring lattice.segment's ladder.
-    cls0 = chardef.char_class(surface[0])
-    homog = all(chardef.char_class(c) == cls0 for c in surface)
-    ln = len(surface)
-    if homog:
-        if cls0 == chardef.char_class("漢"):
-            if ln == 1:
-                out.append((5200, 0, 0, "unk:kanji1"))
-            elif ln == 2:
-                out.append((6900, 0, 0, "unk:kanji2"))
-        elif cls0 in chardef.GROUPING:
-            run = 3000 + 500 * ln
-            out.append((run, 0, 0, f"unk:group{ln}"))
-            if ln <= 5:
-                out.append((4400 + 900 * (ln - 1), 0, 0, f"unk:prefix{ln}"))
-        else:
-            if ln == 1:
-                out.append((6000, 0, 0, "unk:other1"))
-    return out
+    out = [
+        (cost, lc, rc, f"dict:{e.pos}")
+        for _ln, cost, lc, rc, e in lat.dictionary_candidates(surface)
+    ]
+    return out + unknown_candidates(lat, text, start, surface)
 
 
 def main() -> int:
     text, toks = sys.argv[1], sys.argv[2:]
+    lat = Lattice(builtin_dictionary(), None, "normal")
     # DP over forced tokens: state = rc of previous token.
     states = {connection.BOS: (0.0, [])}
     pos = 0
     for t in toks:
         idx = text.index(t, pos)
         pos = idx + len(t)
-        cands = candidates(text, idx, t)
+        cands = candidates(lat, text, idx, t)
         if not cands:
             print(f"NO CANDIDATE for {t!r} — not in dictionary and not a "
                   f"homogeneous unknown run")
@@ -89,7 +86,6 @@ def main() -> int:
         print(f"  {t!r:20s} {label:30s} wc={cost:6d} conn({prc}->{lc})="
               f"{conn:6d} rc={rc}")
     # Engine path for comparison.
-    lat = Lattice(builtin_dictionary(), None, "normal")
     pred = [tk.surface for tk in lat.segment(text)]
     print(f"engine path: {'|'.join(pred)}")
     return 0
