@@ -19,19 +19,20 @@ re-expresses that capability Spark-first:
 """
 
 from hive_udf_neologd_spark.version import ENGINE_VERSION, REFERENCE_VERSION, VERSION
-from hive_udf_neologd_spark.functions.tokenize import (
-    tokenize_ja,
-    tokenize_ja_version,
-    register_udfs,
-)
 
 __version__ = ENGINE_VERSION
 
-__all__ = [
-    "ENGINE_VERSION",
-    "REFERENCE_VERSION",
-    "VERSION",
-    "tokenize_ja",
-    "tokenize_ja_version",
-    "register_udfs",
-]
+# The UDF factories import pandas and pyspark, so they load on first
+# access: importing the tokenizer alone stays Spark-free.
+_UDF_EXPORTS = ("tokenize_ja", "tokenize_ja_version", "register_udfs")
+
+
+def __getattr__(name: str):
+    if name in _UDF_EXPORTS:
+        from hive_udf_neologd_spark.functions import tokenize
+
+        return getattr(tokenize, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
+
+__all__ = ["ENGINE_VERSION", "REFERENCE_VERSION", "VERSION", *_UDF_EXPORTS]

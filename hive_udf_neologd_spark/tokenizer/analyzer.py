@@ -58,11 +58,21 @@ class Mode(str, Enum):
 _ASCII_LINE_RE = re.compile(r"[A-Za-z0-9 ]*\Z")
 _ASCII_RUN_RE = re.compile(r"[A-Za-z]+|[0-9]+")
 
+# A known Token the term memo has not filtered yet.
+_UNSEEN = object()
+
 
 class JapaneseAnalyzer:
     """Config-frozen analyzer; build once per worker and reuse across rows —
     the Spark analog of the reference's transient per-task analyzer cache
-    (KuromojiNEologdUDF.java:82-83, 131-142)."""
+    (KuromojiNEologdUDF.java:82-83, 131-142).
+
+    The filter chain is a pure function of a Token and this analyzer's
+    frozen config, so ``_terms`` memoizes it for known Tokens (dictionary,
+    user-dictionary segment and SEARCH compound tokens): Token → filtered
+    term, or None when the chain drops it.  Unknown-word tokens are
+    filtered every time, so the memo is bounded by the dictionary plus the
+    user dictionary and nothing in it is keyed by input text."""
 
     def __init__(
         self,
@@ -83,7 +93,6 @@ class JapaneseAnalyzer:
             self._stop_words = frozenset(w.lower() for w in DEFAULT_STOP_WORDS)
         else:
             self._stop_words = frozenset(w.lower() for w in stop_words if w is not None)
-        self._stop_ignore_case = True
         if stop_tags is None:
             self._stop_tags = DEFAULT_STOP_TAGS
         else:
@@ -101,6 +110,7 @@ class JapaneseAnalyzer:
         # runs become unigrams there).
         self._ascii_fast = self.mode is not Mode.EXTENDED
         self._ascii_surfaces = self._lattice.ascii_matchable_surfaces()
+        self._terms: dict[Token, str | None] = {}
 
     # -- the filter chain --------------------------------------------------
 
@@ -113,14 +123,29 @@ class JapaneseAnalyzer:
         # CJKWidthFilter
         term = chardef.fold_width(term)
         # StopFilter
-        probe = term.lower() if self._stop_ignore_case else term
-        if probe in self._stop_words:
+        if term.lower() in self._stop_words:
             return None
         # JapaneseKatakanaStemFilter
         term = chardef.katakana_stem(term)
         # LowerCaseFilter
         term = term.lower()
         return term if term else None
+
+    def _terms_of(self, tokens: list[Token]) -> list[tuple[Token, str]]:
+        """The (token, filtered term) pairs the chain keeps, in order."""
+        terms = self._terms
+        filt = self._filter
+        out = []
+        for tok in tokens:
+            if tok[6]:  # is_unknown
+                term = filt(tok)
+            else:
+                term = terms.get(tok, _UNSEEN)
+                if term is _UNSEEN:
+                    term = terms[tok] = filt(tok)
+            if term is not None:
+                out.append((tok, term))
+        return out
 
     def tokenize(self, line: str | None) -> list[str] | None:
         """string → array<string>; null → null, NOT [] (KuromojiNEologdUDF
@@ -143,12 +168,7 @@ class JapaneseAnalyzer:
                 if term is not None:
                     out.append(term)
             return out
-        out = []
-        for tok in self._lattice.segment(line):
-            term = self._filter(tok)
-            if term is not None:
-                out.append(term)
-        return out
+        return [term for _tok, term in self._terms_of(self._lattice.segment(line))]
 
     def analyze_rich(self, line: str | None) -> list[dict] | None:
         """Extension: per-token structs (term, surface, pos, base_form).
@@ -156,22 +176,18 @@ class JapaneseAnalyzer:
         but the term text (SURVEY.md §1.1)."""
         if line is None:
             return None
-        out = []
-        for tok in self._lattice.segment(line):
-            term = self._filter(tok)
-            if term is not None:
-                out.append(
-                    {
-                        "term": term,
-                        "surface": tok.surface,
-                        "pos": tok.pos,
-                        "base_form": tok.base_form,
-                        # Katakana reading where the engine knows it (asset
-                        # column / exact kana fold / user-dict readings) —
-                        # round-7 t17 extension; None for kanji surfaces
-                        # without authored readings.
-                        "reading": tok.reading,
-                        "unknown": tok.is_unknown,
-                    }
-                )
-        return out
+        return [
+            {
+                "term": term,
+                "surface": tok.surface,
+                "pos": tok.pos,
+                "base_form": tok.base_form,
+                # Katakana reading where the engine knows it (asset column
+                # / exact kana fold / user-dict readings) — round-7 t17
+                # extension; None for kanji surfaces without authored
+                # readings.
+                "reading": tok.reading,
+                "unknown": tok.is_unknown,
+            }
+            for tok, term in self._terms_of(self._lattice.segment(line))
+        ]

@@ -31,23 +31,26 @@ the round-5 per-position Viterbi — same totals, same tie-breaks (first
 achiever of the strict minimum wins, candidates processed user → dict
 longest-first → unknown at ascending positions).
 
-Hot-path engineering: character classes and run ends are computed once
-per line.  Each position gathers its candidates as precomputed
-``(len, cost, lc, rc, payload)`` tuples — a built-in surface's tuples
-(search penalty included) are memoized per lattice on first match, and
+Hot-path engineering: character classes come from one ``str.translate``
+per line over a code point → class map filled on first sight of each
+code point, and run ends from one backward pass.  Each position gathers
+its candidates as precomputed ``(len, cost, lc, rc, payload)`` tuples —
+a built-in surface's tuples (search penalty included) are memoized per
+lattice on first match with the finished ``Token`` as their payload, and
 the unknown-word ladder is a table keyed by (char class, run length) —
 and relaxes them in one inline loop that reads a lone incoming class's
-total and connection row once.  Dictionary matches come from
-``Dictionary.prefix_surfaces``, which probes only the lengths registered
-under the position's first two characters.  Nodes are
-``(start, len, payload, back)`` tuples in one list, with their path costs
-in a parallel ``totals`` list.
+total and connection row once, and reuses the best incoming node while
+consecutive candidates share a left class.  Dictionary matches come
+from ``Dictionary.prefix_surfaces``, which probes only the lengths
+registered under the position's first two characters.  A node is one
+linked ``(total, start, len, payload, back)`` tuple; backtracking
+follows ``back``.
 """
 
 from __future__ import annotations
 
 from hive_udf_neologd_spark.tokenizer import chardef, connection
-from hive_udf_neologd_spark.tokenizer.dictionary import Dictionary, UserDictionary
+from hive_udf_neologd_spark.tokenizer.dictionary import DictEntry, Dictionary, UserDictionary
 
 NORMAL = "normal"
 SEARCH = "search"
@@ -67,6 +70,20 @@ _DIGIT = chardef.DIGIT
 _PUNCT = chardef.PUNCT
 _GROUPING = chardef.GROUPING
 _char_class = chardef.char_class
+
+
+class _ClassChars(dict):
+    """Code point → its char class as a one-character string, the
+    ``str.translate`` table of ``segment``: filled the first time each
+    code point appears, so it holds one entry per distinct code point
+    seen."""
+
+    __slots__ = ()
+
+    def __missing__(self, cp: int) -> str:
+        c = self[cp] = chr(_char_class(chr(cp)))
+        return c
+
 
 _POS_UNK_NUM = "名詞-数"
 _POS_UNK = "名詞-一般"
@@ -120,6 +137,12 @@ class Token(tuple):
     reading = property(lambda self: self[4])
     is_punct = property(lambda self: self[5])
     is_unknown = property(lambda self: self[6])
+
+
+def _entry_token(e: DictEntry, surface: str) -> Token:
+    """The Token a dictionary entry emits for ``surface``."""
+    term = e.norm if e.norm is not None else surface
+    return Token(surface, term, e.pos, e.base_form, e.reading, False, False)
 
 
 def _search_penalty(surface: str) -> int:
@@ -197,9 +220,10 @@ class Lattice:
         self._user = Dictionary(user_dict.entries) if user_dict and user_dict.entries else None
         self._search = mode in (SEARCH, EXTENDED)
         # Candidate tuples of each built-in surface seen so far, search
-        # penalty included: filled on first match, bounded by the
-        # dictionary's size.
+        # penalty and finished Token included: filled on first match,
+        # bounded by the dictionary's size.
         self._dict_cands: dict[str, tuple] = {}
+        self._class_chars = _ClassChars()
         # Unknown-word table: [misc_punct][char class][run length].
         extended = mode == EXTENDED
         self._unknown = tuple(
@@ -233,11 +257,16 @@ class Lattice:
 
     def dictionary_candidates(self, surface: str) -> tuple:
         """Candidate tuples of a built-in dictionary surface (none when it
-        is not one), with this lattice's search penalty included."""
+        is not one), with this lattice's search penalty included.  The
+        payload is the entry's finished Token; an entry that emits
+        segments, or whose surface is all punctuation, keeps its
+        DictEntry for ``segment``'s own emit paths."""
         penalty = _search_penalty(surface) if self._search else 0
         ln = len(surface)
+        punct = _is_punct_token(surface)
         return tuple(
-            (ln, e.cost + penalty, e.lc, e.rc, e)
+            (ln, e.cost + penalty, e.lc, e.rc,
+             e if punct or e.segments else _entry_token(e, surface))
             for e in self._dict._by_surface.get(surface, ())
         )
 
@@ -249,11 +278,12 @@ class Lattice:
         user = self._user
         dic = self._dict
 
-        # Per-line precomputation: char class of every position and the
-        # exclusive end of the same-class run starting there (computed in
-        # one backward pass — the round-5 code rescanned the run at every
+        # Per-line precomputation: char class of every position (one
+        # translate, then bytes so indexing yields ints) and the exclusive
+        # end of the same-class run starting there (computed in one
+        # backward pass — the round-5 code rescanned the run at every
         # position, O(run²)).
-        cls = [_char_class(c) for c in text]
+        cls = text.translate(self._class_chars).encode("ascii")
         run_end = [n] * n
         for i in range(n - 2, -1, -1):
             if cls[i + 1] == cls[i]:
@@ -261,20 +291,16 @@ class Lattice:
             else:
                 run_end[i] = i + 1
 
-        # Node-lattice Viterbi.  nodes[k] is (start, len, payload, back)
-        # and totals[k] its path cost; node 0 is BOS.  ends[j] maps
-        # right-class → index of the cheapest node ending at j.
-        nodes: list[tuple] = [(0, 0, None, -1)]
-        totals: list[int] = [0]
-        ends: list[dict[int, int] | None] = [None] * (n + 1)
-        ends[0] = {_BOS: 0}
+        # Node-lattice Viterbi.  A node is (total, start, len, payload,
+        # back), back being the node it extends; BOS has back None.
+        # ends[j] maps right-class → the cheapest node ending at j.
+        ends: list[dict[int, tuple] | None] = [None] * (n + 1)
+        ends[0] = {_BOS: (0, 0, 0, None, None)}
 
         # Hoisted locals for the hot loop.
         prefix_surfaces = dic.prefix_surfaces
         memo = self._dict_cands
         unk_plain, unk_misc = self._unknown
-        add_node = nodes.append
-        add_total = totals.append
 
         for i in range(n):
             incoming = ends[i]
@@ -310,53 +336,54 @@ class Lattice:
             # preserves the strict-< first-achiever tie-break exactly
             # (same insertion-order iteration, same strict comparison).
             # With one incoming class (a third of positions) its total
-            # and row are read once for every candidate.
+            # and row are read once for every candidate; with several,
+            # the best incoming node is rescanned only when the left
+            # class changes (the unknown candidates all share DEFAULT).
             if len(incoming) == 1:
-                ((prc, bi),) = incoming.items()
-                t0 = totals[bi]
+                ((prc, back),) = incoming.items()
+                t0 = back[0]
                 row = _CONN2D[prc]
                 inc = None
             else:
-                inc = [(idx, totals[idx], _CONN2D[prc]) for prc, idx in incoming.items()]
+                inc = incoming.items()
+                last_lc = None
             for ln, wc, lc, rc, payload in cands:
                 if inc is None:
                     total = t0 + row[lc] + wc
                 else:
-                    best = _INF
-                    for idx, t, r in inc:
-                        t += r[lc]
-                        if t < best:
-                            best = t
-                            bi = idx
+                    if lc != last_lc:
+                        last_lc = lc
+                        best = _INF
+                        for prc, node in inc:
+                            t = node[0] + _CONN2D[prc][lc]
+                            if t < best:
+                                best = t
+                                back = node
                     total = best + wc
                 j = i + ln
                 slot = ends[j]
                 if slot is None:
-                    ends[j] = {rc: len(totals)}
+                    ends[j] = {rc: (total, i, ln, payload, back)}
                 else:
                     cur = slot.get(rc)
-                    if cur is not None and total >= totals[cur]:
+                    if cur is not None and total >= cur[0]:
                         continue
-                    slot[rc] = len(totals)
-                add_node((i, ln, payload, bi))
-                add_total(total)
+                    slot[rc] = (total, i, ln, payload, back)
 
         # Backtrack from the cheapest node ending at n (every position is
         # reachable: unknown nodes always exist).  Tie → first-inserted
         # (earliest start, earliest candidate), matching the strict-<
         # relaxation order of the per-position formulation.
         best = _INF
-        k = 0
-        for rc, idx in ends[n].items():  # insertion order
-            t = totals[idx] + _EOS_COSTS[rc]
+        for rc, node in ends[n].items():  # insertion order
+            t = node[0] + _EOS_COSTS[rc]
             if t < best:
                 best = t
-                k = idx
+                last = node
         path: list[tuple] = []
-        while k > 0:
-            node = nodes[k]
-            path.append(node)
-            k = node[3]
+        while last[4] is not None:
+            path.append(last)
+            last = last[4]
         path.reverse()
 
         # SEARCH/EXTENDED compound-as-synonym emission (Lucene 5.5.5
@@ -376,9 +403,9 @@ class Lattice:
         # the user segmentation without a synonym compound.
         compounds: dict[int, Token] = {}
         if self._search:
-            end_to_k = {start + ln: k for k, (start, ln, _p, _b) in enumerate(path)}
+            end_to_k = {node[1] + node[2]: k for k, node in enumerate(path)}
             by_surface = dic._by_surface
-            for k, (i, ln, _p, _b) in enumerate(path):
+            for k, (_t, i, ln, _p, _b) in enumerate(path):
                 # Longest first: the first aligned penalized surface wins.
                 for surf in dic.prefix_surfaces(text, i):
                     if len(surf) == ln:
@@ -388,24 +415,20 @@ class Lattice:
                     kk = end_to_k.get(i + len(surf))
                     if kk is None or kk <= k:
                         continue  # does not align with ≥2 chosen parts
-                    e = by_surface[surf][0]
-                    compounds[k] = Token(
-                        surf,
-                        e.norm if e.norm is not None else surf,
-                        e.pos,
-                        e.base_form,
-                        e.reading,
-                        False,
-                        False,
-                    )
+                    compounds[k] = _entry_token(by_surface[surf][0], surf)
                     break
 
         tokens: list[Token] = []
-        for k, (i, ln, e, _b) in enumerate(path):
+        for k, (_t, i, ln, e, _b) in enumerate(path):
             if k in compounds:
                 tokens.append(compounds[k])
             if e is None:
                 continue  # discardPunctuation=true
+            if e.__class__ is Token:
+                # Built-in dictionary node: its Token is prebuilt (an
+                # all-punct surface keeps its DictEntry, below).
+                tokens.append(e)
+                continue
             surface = text[i : i + ln]
             if _is_punct_token(surface):
                 # Lucene discardPunctuation applies to every emitted
@@ -428,8 +451,5 @@ class Lattice:
                         Token(seg, seg, e.pos, None, reading, False, False)
                     )
                 continue
-            term = e.norm if e.norm is not None else surface
-            tokens.append(
-                Token(surface, term, e.pos, e.base_form, e.reading, False, False)
-            )
+            tokens.append(_entry_token(e, surface))
         return tokens

@@ -1,7 +1,8 @@
 """The Viterbi kernel against its pre-change loop, Token for Token, and
-the tables it reads: the unknown-word table (which tools/explain_path.py
-reads too), the two-character dictionary index and the ASCII-surface
-sweep."""
+the tables it reads: the unknown-word table and dictionary candidates
+(which tools/explain_path.py reads too), the two-character dictionary
+index and the ASCII-surface sweep.  The analyzer's term memo against the
+same loop followed by the unmemoized filter chain."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import sys
 import pytest
 
 from hive_udf_neologd_spark.tokenizer import connection
+from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer
 from hive_udf_neologd_spark.tokenizer.chardef import char_class
 from hive_udf_neologd_spark.tokenizer.dictionary import (
     DictEntry,
@@ -27,7 +29,7 @@ sys.path.insert(0, os.path.dirname(__file__))
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
 import explain_path  # noqa: E402
-from lattice_reference import ReferenceLattice  # noqa: E402
+from lattice_reference import ReferenceLattice, _search_penalty  # noqa: E402
 
 MODES = (NORMAL, SEARCH, EXTENDED)
 
@@ -68,10 +70,13 @@ def _run_end(text: str, i: int) -> int:
     return end
 
 
+def _user_rows() -> list[str]:
+    return sorted({r for row in AXES["t29"].corpus for r in row[3]})
+
+
 @pytest.fixture(scope="module")
 def user_dict():
-    rows = sorted({r for row in AXES["t29"].corpus for r in row[3]})
-    return UserDictionary.from_rows(rows)
+    return UserDictionary.from_rows(_user_rows())
 
 
 @pytest.mark.parametrize("with_user", [False, True], ids=["builtin", "userdict"])
@@ -85,6 +90,24 @@ def test_segment_matches_reference_loop(mode, with_user, user_dict):
         if got != want:
             k = next(k for k, (g, w) in enumerate(zip(got, want)) if g != w)
             pytest.fail(f"{mode} token {k}: {got[k:k + 3]} != {want[k:k + 3]} in {text[:80]!r}")
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_segment_matches_reference_on_entries_without_prebuilt_tokens(mode, user_dict):
+    """All-punct and segmented entries in the built-in dictionary keep
+    their DictEntry payload and the emit loop's discard and segment
+    paths (the packaged dictionary has neither)."""
+    extra = [
+        DictEntry("・・", "記号-一般", -1000),
+        DictEntry("！？", "記号-一般", -1000),
+        *user_dict.entries,
+    ]
+    d = Dictionary([e for es in builtin_dictionary()._by_surface.values() for e in es] + extra)
+    lat, ref = Lattice(d, None, mode), ReferenceLattice(d, None, mode)
+    assert any(isinstance(c[4], DictEntry) for e in extra for c in lat.dictionary_candidates(e.surface))
+    lines = ["えっ！？本当・・ですか。", "・・・・ピアノ・・ギター！？", "日本経済新聞を読んだ。", *_sentences()[:200]]
+    for text in lines:
+        assert lat.segment(text) == ref.segment(text), (mode, text)
 
 
 @pytest.mark.parametrize("with_user", [False, True], ids=["builtin", "userdict"])
@@ -153,3 +176,88 @@ def test_ascii_matchable_surfaces_equal_regex_comprehension():
     ):
         old = tuple(s for s in d._by_surface if re.fullmatch(r"[A-Za-z0-9 ]+", s))
         assert d.ascii_matchable_surfaces() == old
+
+
+def test_explain_path_dictionary_rows_equal_entries():
+    """explain_path reads the dictionary candidates' payloads, which are
+    prebuilt Tokens now: its rows must still be each entry's cost (with
+    the search penalty), classes and POS, for every dictionary surface on
+    the parity corpora's best paths."""
+    d = builtin_dictionary()
+    for mode in MODES:
+        lat = Lattice(d, None, mode)
+        for text in _sentences():
+            for tok in lat.segment(text):
+                entries = d._by_surface.get(tok.surface)
+                if not entries:
+                    continue
+                want = [
+                    (e.cost + _search_penalty(e, mode), e.lc, e.rc, f"dict:{e.pos}")
+                    for e in entries
+                ]
+                got = explain_path.candidates(lat, text, text.index(tok.surface), tok.surface)
+                assert [g for g in got if g[3].startswith("dict:")] == want, (mode, tok)
+
+
+# Stop-word/tag configurations: defaults, disabled, and custom lists
+# (mixed-case words, folded by the case-insensitive StopFilter).
+_STOP_CONFIGS = {
+    "default": (None, None),
+    "empty": ([], []),
+    "custom": (["SMAP", "Spark", "テレビ", "ある", None], ["名詞-数", "助詞-格助詞-一般", None]),
+}
+
+
+def _unmemoized_terms(analyzer, ref, line):
+    return [
+        (tok, term)
+        for tok in ref.segment(line)
+        if (term := analyzer._filter(tok)) is not None
+    ]
+
+
+@pytest.mark.parametrize("stops", list(_STOP_CONFIGS))
+@pytest.mark.parametrize("with_user", [False, True], ids=["builtin", "userdict"])
+@pytest.mark.parametrize("mode", MODES)
+def test_term_memo_matches_unmemoized_filter(mode, with_user, stops, user_dict):
+    stop_words, stop_tags = _STOP_CONFIGS[stops]
+    a = JapaneseAnalyzer(mode, stop_words, stop_tags, _user_rows() if with_user else None)
+    ref = ReferenceLattice(builtin_dictionary(), user_dict if with_user else None, mode)
+    lines = [*_sentences(), *_EDGE_LINES, *_documents(seed=9, n_docs=30), "the fast key order"]
+    for _ in range(2):  # the second pass reads every known term from the memo
+        for line in lines:
+            want = _unmemoized_terms(a, ref, line)
+            assert a.tokenize(line) == [term for _tok, term in want], (mode, line[:80])
+            assert a.analyze_rich(line) == [
+                {
+                    "term": term,
+                    "surface": tok.surface,
+                    "pos": tok.pos,
+                    "base_form": tok.base_form,
+                    "reading": tok.reading,
+                    "unknown": tok.is_unknown,
+                }
+                for tok, term in want
+            ], (mode, line[:80])
+    assert a._terms and not any(tok.is_unknown for tok in a._terms)
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_unknown_words_do_not_grow_the_term_memo(mode):
+    """Only known Tokens are memoized: lines full of fresh unknown words
+    (CJK Extension A kanji, which no dictionary surface holds) leave the
+    memo as it was."""
+    a = JapaneseAnalyzer(mode)
+    known_chars = set("".join(a._lattice._dict._by_surface))
+    rng = random.Random(3)
+    ext_a = [chr(cp) for cp in range(0x3400, 0x4DC0) if chr(cp) not in known_chars]
+    frame = "東京で{}を見た。{}と{}の話"
+    a.tokenize(frame.format("", "", ""))
+    size = len(a._terms)
+    assert size
+    for _ in range(200):
+        words = ["".join(rng.choices(ext_a, k=rng.randint(1, 6))) for _ in range(3)]
+        toks = a.analyze_rich(frame.format(*words))
+        assert any(t["unknown"] for t in toks)
+        a.tokenize(frame.format(*words))
+    assert len(a._terms) == size

@@ -7,6 +7,10 @@ caveat); where counts match the reference exactly that is asserted too.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer, Mode
@@ -84,6 +88,24 @@ class TestGoldens:
             "normal", "search", "extended", "指定", "デフォルト", "normal",
             "モード",
         ]
+
+
+def test_tokenizer_imports_without_spark():
+    """The tokenizer loads without pandas or pyspark; the package's UDF
+    exports still resolve, on first access."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        "import hive_udf_neologd_spark.tokenizer.analyzer\n"
+        "loaded = sorted(m for m in sys.modules if m.split('.')[0] in ('pandas', 'pyspark'))\n"
+        "assert not loaded, loaded\n"
+        "from hive_udf_neologd_spark import register_udfs, tokenize_ja, tokenize_ja_version\n"
+        "from hive_udf_neologd_spark.functions import tokenize\n"
+        "assert tokenize_ja is tokenize.tokenize_ja and register_udfs is tokenize.register_udfs\n"
+        "assert tokenize_ja_version is tokenize.tokenize_ja_version\n"
+    )
+    env = {**os.environ, "PYTHONPATH": root}
+    subprocess.run([sys.executable, "-c", code], cwd=root, env=env, check=True, timeout=120)
 
 
 class TestModes:
