@@ -5,6 +5,15 @@ hold on a multi-executor cluster at 100 TB: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), adaptive broadcast thresholds,
 Arrow for the pandas-UDF tokenizer path, UTC session time so timestamp
 results are engine-independent.
+
+Python workers start from ``worker_daemon``, not ``pyspark.daemon``.  With
+``SPARK_HOME`` set, Spark puts its source-only ``pyspark.zip`` first on the
+workers' path, and every daemon start would compile pyspark from source;
+``worker_daemon`` drops that zip (and py4j's) when the installed pyspark has
+the same version, so workers import byte-compiled pyspark.  On a version
+mismatch, or with no installed copy, the path stays as Spark set it.  This
+package must therefore be importable on the executors, which every UDF here
+already requires.
 """
 
 from __future__ import annotations
@@ -12,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from hive_udf_neologd_spark import worker_daemon
 
 
 def get_spark(app_name: str = "hive-udf-neologd-spark", cpus: int | None = None) -> SparkSession:
@@ -45,6 +56,8 @@ def get_spark(app_name: str = "hive-udf-neologd-spark", cpus: int | None = None)
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        # Workers import the installed, byte-compiled pyspark (module doc).
+        .config("spark.python.daemon.module", worker_daemon.__name__)
     )
     return builder.getOrCreate()
 

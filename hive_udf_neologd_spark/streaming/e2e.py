@@ -27,6 +27,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table, run_dir, stage_once
@@ -38,6 +39,17 @@ from hive_udf_neologd_spark.streaming.term_counts import (
 )
 
 # Staged snapshots and checkpoints live under sources.run_dir / stage_once.
+
+# Longest wait for an availableNow stream to drain its staged input.
+STREAM_TIMEOUT_S = 300.0
+
+
+def _await(q: StreamingQuery, sink: str) -> None:
+    """Wait for ``q`` to finish.  On timeout, stop it and raise, so no
+    caller reads a partial sink and no stream is left running."""
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"stream into {sink} did not finish within {STREAM_TIMEOUT_S} s")
 
 
 # --- scale-adaptive streaming shuffle/state partitioning (round 12) --------
@@ -188,7 +200,8 @@ def _stage_events(sf_dir: str, name: str, df: DataFrame) -> str:
 
 def _run_append(out: DataFrame, sf_dir: str, stage: str, sink: str, mode: str = "append"):
     """Run ``out`` over ``stage`` to completion into a memory sink; returns
-    the stopped query, whose ``name`` is the sink table.  The sink is named
+    the finished query, whose ``name`` is the sink table, or stops it and
+    raises ``TimeoutError`` after ``STREAM_TIMEOUT_S``.  The sink is named
     after its checkpoint, a fresh run_dir, so it is unique in the session;
     the checkpoint is explicit so it lands in scratch, not in Spark's
     implicit java.io.tmpdir location on disk."""
@@ -202,7 +215,7 @@ def _run_append(out: DataFrame, sf_dir: str, stage: str, sink: str, mode: str = 
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await(q, q.name)
     return q
 
 
@@ -469,7 +482,7 @@ def s10_foreachbatch_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, target)
     return (
         spark.read.parquet(target)
         .groupBy("event_type")

@@ -15,6 +15,7 @@ from hive_udf_neologd_spark.streaming import (
     streaming_term_counts,
     streaming_user_running_totals,
 )
+from hive_udf_neologd_spark.streaming import e2e
 
 
 @pytest.fixture(scope="module")
@@ -111,3 +112,12 @@ def test_stateful_running_totals(spark, event_dir):
             spark.sql("select * from running").collect()}
     assert rows[1] == (3, 6.0)
     assert rows[2] == (2, 9.0)
+
+
+def test_stream_timeout_stops_query_and_raises(spark, sf_dir, monkeypatch):
+    # A stream that outlives its wait is stopped, and the builder raises
+    # instead of reading a partial memory sink.
+    monkeypatch.setattr(e2e, "STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="s03_sink"):
+        e2e.s03_streaming_event_counts_e2e(spark, sf_dir)
+    assert spark.streams.active == []
