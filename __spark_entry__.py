@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (SURVEY.md §7): tokenize → explode → groupBy(token)
     → count → top-20 on sf0.001 documents — exercises source scan, the
-    tokenizer pandas UDF, explode, aggregation, sort and limit."""
+    tokenizer Arrow UDF, explode, aggregation, sort and limit."""
     from pyspark.sql import functions as F
 
     from hive_udf_neologd_spark import tokenize_ja

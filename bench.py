@@ -81,7 +81,7 @@ HEADLINE = [
     "t23_ja_search_throughput",
     "t24_ja_extended_throughput",
     # Round-8: the SQL-surface tokenizer path (row-dispatch Arrow UDF behind
-    # the registered Hive name) — pinned vs t18's pandas-UDF path (VERDICT
+    # the registered Hive name) — pinned vs t18's iterator Arrow UDF path (VERDICT
     # r7 next-round #4).
     "sql03_sql_udf_throughput",
     # Round-8: sampled-train IVF (the 100 TB training-cost fix, VERDICT r7

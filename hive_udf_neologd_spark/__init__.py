@@ -22,7 +22,7 @@ from hive_udf_neologd_spark.version import ENGINE_VERSION, REFERENCE_VERSION, VE
 
 __version__ = ENGINE_VERSION
 
-# The UDF factories import pandas and pyspark, so they load on first
+# The UDF factories import pyspark and pyarrow, so they load on first
 # access: importing the tokenizer alone stays Spark-free.
 _UDF_EXPORTS = ("tokenize_ja", "tokenize_ja_version", "register_udfs")
 

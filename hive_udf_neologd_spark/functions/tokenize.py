@@ -12,8 +12,9 @@ Parity surface (SURVEY.md §2.1):
 * O9  — null line → null array (not empty).
 * O10 — per-worker lazy analyzer singleton keyed by config (the Spark
         analog of the transient per-task cache, KuromojiNEologdUDF.java:82-83,
-        131-142); iterator-form pandas UDF so init is paid once per batch
-        stream, with Arrow columnar transfer (SURVEY.md §1.3).
+        131-142); one iterator Arrow UDF kernel (``arrow_map``) so init is
+        paid once per batch stream, with Arrow columnar transfer and no
+        pandas on the worker (SURVEY.md §1.3).
 * O11 — deterministic (Spark default; never ``.asNondeterministic()``).
 
 Config is resolved on the driver and shipped as a pickled closure; the
@@ -23,12 +24,13 @@ Kryo-transient trick, SURVEY.md §3 step 3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, BooleanType, DataType, StringType, StructField, StructType
 
 from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer, Mode
 from hive_udf_neologd_spark.tokenizer.dictionary import (
@@ -45,54 +47,79 @@ def _get_engine(key: tuple) -> JapaneseAnalyzer:
     eng = _ENGINES.get(key)
     if eng is None:
         mode, stop_words, stop_tags, user_rows = key
-        eng = JapaneseAnalyzer(
-            mode=mode,
-            stop_words=list(stop_words) if stop_words is not None else None,
-            stop_tags=list(stop_tags) if stop_tags is not None else None,
-            user_dict_rows=list(user_rows) if user_rows is not None else None,
+        eng = _ENGINES[key] = JapaneseAnalyzer(
+            mode=mode, stop_words=stop_words, stop_tags=stop_tags, user_dict_rows=user_rows
         )
-        _ENGINES[key] = eng
     return eng
 
 
-def _resolve_user_dict(user_dict) -> tuple | None:
-    """Type-dispatch like the reference (KuromojiNEologdUDF.java:102-111,
-    135-139): list of CSV rows, or URL string, or None; anything else is a
-    construction-time error."""
-    if user_dict is None:
+def _strings(name: str, value) -> tuple[str, ...] | None:
+    """Check a const ``array<string>`` argument (SURVEY.md §1.2): ``None``,
+    or a list or tuple of strings whose ``None`` elements are skipped.  A
+    bare string or any other element type is a construction-time
+    ``TypeError``."""
+    if value is None:
         return None
-    if isinstance(user_dict, str):
-        return tuple(fetch_user_dict_url(user_dict))
-    if isinstance(user_dict, (list, tuple)):
-        for row in user_dict:
-            if row is not None and not isinstance(row, str):
-                raise TypeError(
-                    f"user_dict rows must be strings, got {type(row).__name__}"
-                )
-        return tuple(r for r in user_dict if r is not None)
-    raise TypeError(
-        "user_dict must be a list of CSV rows or a URL string, got "
-        f"{type(user_dict).__name__}"
-    )
+    if isinstance(value, str) or not isinstance(value, Sequence):
+        raise TypeError(f"{name} must be a list of strings, got {type(value).__name__}")
+    for v in value:
+        if v is not None and not isinstance(v, str):
+            raise TypeError(f"{name} elements must be strings, got {type(v).__name__}")
+    return tuple(v for v in value if v is not None)
 
 
 def _config_key(mode=None, stop_words=None, stop_tags=None, user_dict=None) -> tuple:
     """Resolve and validate a tokenizer config on the driver, before any
     Spark job runs — the reference's fail-at-plan-time ``initialize``
     (SURVEY.md §3) — into the frozen per-worker engine-cache key (O10).
-    Raises ``ValueError`` on a bad mode (O3), ``TypeError`` on a bad
-    user_dict type, and ``UserDictionaryError`` on URL/CSV failures
-    (O6/O7)."""
+    ``user_dict`` dispatches by type like the reference
+    (KuromojiNEologdUDF.java:102-111, 135-139): a list of CSV rows or a URL
+    string.  Raises ``ValueError`` on a bad mode (O3), ``TypeError`` on a
+    malformed stop list or user_dict, and ``UserDictionaryError`` on URL/CSV
+    failures (O6/O7)."""
     parsed_mode = Mode.parse(mode)
-    frozen_user = _resolve_user_dict(user_dict)
+    if isinstance(user_dict, str):
+        user_dict = fetch_user_dict_url(user_dict)
+    frozen_user = _strings("user_dict", user_dict)
     if frozen_user is not None:
-        UserDictionary.from_rows(list(frozen_user))
+        UserDictionary.from_rows(frozen_user)
     return (
         parsed_mode.value,
-        tuple(stop_words) if stop_words is not None else None,
-        tuple(stop_tags) if stop_tags is not None else None,
+        _strings("stop_words", stop_words),
+        _strings("stop_tags", stop_tags),
         frozen_user,
     )
+
+
+def arrow_map(return_type: DataType, make: Callable[[], Callable]):
+    """The one tokenizer UDF kernel: an iterator Arrow UDF that calls
+    ``make()`` once per task on the worker, for a per-value function ``f``,
+    and maps ``f`` over each batch's Python values.  The result's Arrow type
+    is always given, so an all-null batch keeps the declared type.  No
+    pandas is imported on either side."""
+    arrow_type = to_arrow_type(return_type)
+
+    def _map(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        f = make()
+        for arr in batches:
+            yield pa.array([f(v) for v in arr.to_pylist()], arrow_type)
+
+    return arrow_udf(_map, return_type)
+
+
+# tokenize_ja_rich's per-token struct (EXTENSION beyond parity).
+RICH_TOKENS = ArrayType(
+    StructType(
+        [
+            StructField("term", StringType()),
+            StructField("surface", StringType()),
+            StructField("pos", StringType()),
+            StructField("base_form", StringType()),
+            StructField("reading", StringType()),
+            StructField("unknown", BooleanType()),
+        ]
+    )
+)
 
 
 def tokenize_ja(
@@ -101,23 +128,16 @@ def tokenize_ja(
     stop_tags: list[str] | None = None,
     user_dict: list[str] | str | None = None,
 ):
-    """Build the tokenizer pandas UDF.
+    """Build the tokenizer UDF: ``string → array<string>`` through the
+    ``arrow_map`` kernel.
 
     All config validation happens here, before any Spark job runs (see
     ``_config_key``): ``ValueError`` on a bad mode (the analog of
-    ``UDFArgumentException``), ``TypeError`` on a bad user_dict type, and
-    ``UserDictionaryError`` on URL/CSV failures.
+    ``UDFArgumentException``), ``TypeError`` on a malformed stop list or
+    user_dict, and ``UserDictionaryError`` on URL/CSV failures.
     """
     key = _config_key(mode, stop_words, stop_tags, user_dict)
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tokenize(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        engine = _get_engine(key)
-        tok = engine.tokenize
-        for series in batches:
-            yield series.map(lambda s: tok(s) if isinstance(s, str) else None)
-
-    return _tokenize
+    return arrow_map(ArrayType(StringType()), lambda: _get_engine(key).tokenize)
 
 
 def tokenize_ja_rich(
@@ -126,39 +146,17 @@ def tokenize_ja_rich(
     stop_tags: list[str] | None = None,
     user_dict: list[str] | str | None = None,
 ):
-    """EXTENSION beyond parity: per-token structs
-    ``array<struct<term,surface,pos,base_form,unknown>>``.
+    """EXTENSION beyond parity: per-token structs ``RICH_TOKENS``
+    (``array<struct<term,surface,pos,base_form,reading,unknown>>``).
 
     The reference discards everything but the term text
     (KuromojiNEologdUDF.java:309-314; SURVEY.md §1.1 subtlety), so this is
     deliberately a SEPARATE factory — ``tokenize_ja`` stays exactly
-    ``array<string>``.  Same config semantics, same per-worker engine cache
-    (the cache key is shared with the plain UDF, so mixing both in one
-    pipeline builds one engine)."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
+    ``array<string>``.  Same config semantics, same kernel, same per-worker
+    engine cache (the cache key is shared with the plain UDF, so mixing both
+    in one pipeline builds one engine)."""
     key = _config_key(mode, stop_words, stop_tags, user_dict)
-    schema = ArrayType(
-        StructType(
-            [
-                StructField("term", StringType()),
-                StructField("surface", StringType()),
-                StructField("pos", StringType()),
-                StructField("base_form", StringType()),
-                StructField("reading", StringType()),
-                StructField("unknown", BooleanType()),
-            ]
-        )
-    )
-
-    @pandas_udf(schema)
-    def _tokenize_rich(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        engine = _get_engine(key)
-        rich = engine.analyze_rich
-        for series in batches:
-            yield series.map(lambda s: rich(s) if isinstance(s, str) else None)
-
-    return _tokenize_rich
+    return arrow_map(RICH_TOKENS, lambda: _get_engine(key).analyze_rich)
 
 
 def tokenize_ja_version() -> list[str]:
@@ -205,8 +203,12 @@ def register_udfs(spark: SparkSession) -> None:
     explicit version call.
 
     The SQL name is a row-dispatch Arrow UDF (per-row Python call over
-    Arrow batches); the DataFrame-API factory ``tokenize_ja()`` remains
-    the iterator-form pandas UDF — the faster shape for heavy pipelines.
+    Arrow batches), not the ``arrow_map`` kernel of ``tokenize_ja()``,
+    because a 0-arg call cannot reach an ``arrow_udf``: on Spark 4.1,
+    ``SELECT f()`` on a scalar ``arrow_udf`` whose parameter has a default
+    fails with ``IndexError`` at ``pyspark/worker.py:210``, where the
+    result-length check reads ``len(a[0])`` of an empty argument tuple.
+    The row wrapper shares the kernel's engine cache (``_get_engine``).
 
     Per-config UDFs (custom mode/stop lists/user dict) are registered by
     the caller: ``spark.udf.register(name, tokenize_ja(mode=...))`` — config
@@ -219,20 +221,12 @@ def register_udfs(spark: SparkSession) -> None:
     # tokenize_ja() with no arguments.
     key = _config_key()
 
-    # One-slot worker-side cache so the hot path is a single bound-method
-    # call: list-cell (not a dict lookup + tuple hash per row).  The cell
-    # deserializes empty on each worker; _get_engine still dedupes the
-    # analyzer build across UDF instances (O10).
-    _cell: list = []
-
     def _dispatch(line=_ABSENT):
         if isinstance(line, _VersionSentinel):
             return tokenize_ja_version()
         if not isinstance(line, str):
             return None  # O9: NULL → NULL
-        if not _cell:
-            _cell.append(_get_engine(key).tokenize)
-        return _cell[0](line)
+        return _get_engine(key).tokenize(line)
 
     overloaded = udf(_dispatch, ArrayType(StringType()), useArrow=True)
     spark.udf.register("tokenize_ja_neologd", overloaded)

@@ -20,14 +20,12 @@ aggregates map-side first.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_udf_neologd_spark.functions.tokenize import tokenize_ja
+from hive_udf_neologd_spark.functions.tokenize import arrow_map, tokenize_ja
 from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import local_frame, read_table
 from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, METRICS, values_sql
@@ -1354,7 +1352,7 @@ def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     and committed before measurement.
 
     Shape: a constant (row, register) frame through one narrow
-    iterator-form pandas UDF that resolves the axis on the worker and
+    ``arrow_map`` kernel that resolves the axis on the worker and
     scores each sentence with ``parity_harness.score`` — the same scorer
     the in-process recapture uses — then one rollup aggregate.
     Constant at any cluster scale (the 100 TB shape of this harness is
@@ -1362,7 +1360,7 @@ def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the recorded aggregates as a VALUES table with the same IEEE
     metric expression (``parity_harness.values_sql``) — full hash check."""
     prepare(spark)
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import LongType, StructField, StructType
 
     a = AXES[axis]
     metric = METRICS[a.metric]
@@ -1373,16 +1371,13 @@ def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
         "row long, register string",
     )
 
-    @pandas_udf(", ".join(f"{c} long" for c in cols))
-    def _score(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def _scorer():
         from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, score
 
         ax = AXES[axis]
-        for rows in batches:
-            yield pd.DataFrame(
-                [score(ax, ax.corpus[i]) for i in rows], columns=cols, dtype="int64"
-            )
+        return lambda i: dict(zip(cols, score(ax, ax.corpus[i])))
 
+    _score = arrow_map(StructType([StructField(c, LongType()) for c in cols]), _scorer)
     per = df.select("register", _score("row").alias("s"))
     # rollup: per-register rows AND the grand total from ONE aggregation
     # over ONE ArrowEvalPython pass (a by_reg/total unionByName would embed
@@ -1481,7 +1476,7 @@ def sql03_sql_udf_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     #4).  ``tokenize_ja_neologd`` as registered for SQL is a row-dispatch
     Arrow UDF (the sentinel-default overload that restores the reference's
     0-arg/1-arg arity split — functions/tokenize.py:register_udfs), NOT the
-    iterator-form pandas UDF that t18 measures.  A Hive-migrating user
+    iterator-form Arrow UDF kernel that t18 measures.  A Hive-migrating user
     reaches for this name first (reference README.md:22-29), so its cost is
     pinned here with the exact t18 workload: every doc row mapped to one of
     the 8 pinned Japanese texts and pushed through the full lattice, but

@@ -3,7 +3,7 @@
 Local testing runs ``local[N]`` single-JVM, but every conf here is chosen to
 hold on a multi-executor cluster at 100 TB: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), adaptive broadcast thresholds,
-Arrow for the pandas-UDF tokenizer path, UTC session time so timestamp
+Arrow for the Arrow-UDF tokenizer path, UTC session time so timestamp
 results are engine-independent.
 
 Python workers start from ``worker_daemon``, not ``pyspark.daemon``.  With
@@ -38,8 +38,8 @@ def get_spark(app_name: str = "hive-udf-neologd-spark", cpus: int | None = None)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow powers the pandas-UDF tokenizer (columnar batches across the
-        # Python worker boundary — SURVEY.md §1.3).
+        # Arrow-batched Python UDFs and Arrow createDataFrame (columnar
+        # batches across the Python worker boundary — SURVEY.md §1.3).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamp semantics for the DuckDB oracle compare.

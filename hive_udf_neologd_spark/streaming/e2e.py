@@ -141,7 +141,7 @@ def s04_streaming_term_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     """The flagship tokenize → explode → windowed-count pipeline (SURVEY.md
     §7) as an actually-executed stream: documents get a synthetic event time
     (doc_id minutes past 2024-01-01 — deterministic, oracle-replayable),
-    flow through the tokenizer pandas UDF inside the stream, and aggregate
+    flow through the tokenizer Arrow UDF inside the stream, and aggregate
     under a 2-hour watermark in append mode.  The oracle tokenizes via
     ``string_split`` (exact on this corpus — t01's equivalence argument)
     and applies the same watermark cutoff as s03."""

@@ -4,7 +4,7 @@ sessionization, and custom stateful running totals.
 Design (100 TB stream):
 * event-time windows + watermarks bound state (late data beyond the
   watermark is dropped — no unbounded token/window state growth);
-* the tokenizer pandas UDF is narrow, so only the windowed groupBy
+* the tokenizer Arrow UDF is narrow, so only the windowed groupBy
   shuffles, keyed by (window, token) — skew-safe because token space is
   wide;
 * ``applyInPandasWithState`` implements the custom stateful operator the

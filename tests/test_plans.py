@@ -40,7 +40,7 @@ def test_q16_broadcasts_dimension_side(spark):
 
 def test_t01_filter_below_tokenizer_udf(spark):
     plan = _plan(spark, "t01_token_topk")
-    assert "ArrowEvalPython" in plan  # Arrow-batched pandas UDF, not row Python
+    assert "ArrowEvalPython" in plan  # Arrow-batched tokenizer UDF, not row Python
     # The null filter is pushed into the scan, so the UDF never sees
     # filterable rows (keep UDFs last — SURVEY.md §4).
     assert "IsNotNull(text)" in plan

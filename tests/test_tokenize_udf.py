@@ -1,12 +1,17 @@
-"""Spark-side tests for the tokenize_ja pandas UDF (SURVEY.md §2.1 O1-O11)."""
+"""Spark-side tests for the tokenize_ja Arrow UDF (SURVEY.md §2.1 O1-O11)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
 from hive_udf_neologd_spark import register_udfs, tokenize_ja, tokenize_ja_version
-from hive_udf_neologd_spark.functions.tokenize import tokenize_ja_rich
+from hive_udf_neologd_spark.functions.tokenize import RICH_TOKENS, tokenize_ja_rich
 from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionaryError
 from hive_udf_neologd_spark.version import VERSION
 
@@ -56,6 +61,52 @@ def test_udf_construction_errors_are_plan_time(spark, factory):
         factory(user_dict=123)
     with pytest.raises(UserDictionaryError):
         factory(user_dict=["日本経済新聞,日本 新聞,ニホン シンブン,名詞"])
+    # Stop lists and user-dict rows are const array<string> (SURVEY.md
+    # §1.2): a bare string would be read as a set of characters, and a
+    # non-string element would only fail on the worker.
+    for bad in ("これ", 5, {"これ"}, [1, 2], ["これ", b"x"]):
+        for arg in ("stop_words", "stop_tags"):
+            with pytest.raises(TypeError):
+                factory(**{arg: bad})
+    with pytest.raises(TypeError):
+        factory(user_dict=["日本経済新聞,日本 経済 新聞,ニホン ケイザイ シンブン,名詞", 7])
+    # None elements stay skipped, as in the analyzer (O5).
+    factory(stop_words=["これ", None], stop_tags=[None])
+
+
+FACTORIES = pytest.mark.parametrize(
+    "factory, type_string",
+    [(tokenize_ja, "array<string>"), (tokenize_ja_rich, RICH_TOKENS.simpleString())],
+    ids=["tokenize_ja", "tokenize_ja_rich"],
+)
+
+
+@FACTORIES
+def test_udf_is_iterator_arrow_udf(factory, type_string):
+    assert factory().evalType == PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF
+
+
+@FACTORIES
+def test_all_null_and_empty_batches_keep_declared_type(spark, factory, type_string):
+    nulls = spark.createDataFrame([(None,)] * 3, "text string")
+    out = nulls.select(factory()("text").alias("t"))
+    assert out.schema["t"].dataType.simpleString() == type_string
+    assert [r["t"] for r in out.collect()] == [None] * 3
+    empty = nulls.limit(0).select(factory()("text").alias("t"))
+    assert empty.schema["t"].dataType.simpleString() == type_string
+    assert empty.collect() == []
+
+
+def test_udf_module_imports_without_pandas():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        "import hive_udf_neologd_spark.functions.tokenize\n"
+        "loaded = sorted(m for m in sys.modules if m.split('.')[0] == 'pandas')\n"
+        "assert not loaded, loaded\n"
+    )
+    env = {**os.environ, "PYTHONPATH": root}
+    subprocess.run([sys.executable, "-c", code], cwd=root, env=env, check=True, timeout=120)
 
 
 def test_sql_registration(spark, docs):
@@ -101,7 +152,7 @@ def test_zero_arg_return_shape_is_reference_parity(spark):
 
 
 def test_overload_one_arg_path_stays_vectorized(spark, docs):
-    # The SQL function must inline to a CASE over the pandas UDF —
+    # The SQL function must stay an Arrow-batched Python UDF —
     # ArrowEvalPython in the plan, never a row-at-a-time BatchEvalPython.
     register_udfs(spark)
     docs.createOrReplaceTempView("docs_udf_plan")
