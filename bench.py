@@ -5,9 +5,16 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 result via the noop sink (full execution, no driver collect), and prints
 ONE JSON line:
 
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "steal_frac": F}
 
-Protocol (BASELINE.md): one warmup run per query, record the second run.
+Protocol (BASELINE.md): one warm-up run per query, then the best of two
+timed runs, each under a wall-clock timeout.  ``value`` is the total, or
+null when a row failed or ``SPARK_GRAFT_ONLY`` picked a subset; then
+``partial_total`` holds the sum, and ``errors`` maps each failed row to
+its error ("timeout" for a hung one).  ``steal_frac`` is the host's share
+of CPU time (steal) while the rows ran; above 2% the payload also carries
+``"contended": true``.
 """
 
 from __future__ import annotations
@@ -15,11 +22,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-import pandas as pd  # noqa: F401 — resolves the calibration UDF's type hints
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from perfbench.sparkstats import Phase, QueryFailed  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -39,7 +46,6 @@ HEADLINE = [
     "q24_small_quantity_revenue",
     "a03_ann_ivf",
     "t09_quality_ratios",
-    "m02_decoded_meta_stats",
     # Heavy late-tier entries, regression-gated from round 2 on:
     "a08_ivf_trained",
     "a09_ivf_np_kernel",
@@ -113,80 +119,83 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# --- contention self-diagnosis (round 12, VERDICT r11 #4) ------------------
-# The driver's single-session file of record landed on a contended host
-# two rounds running, and judges re-adjudicated by hand each time.  A
-# pinned calibration job — fixed CPU work, SF-invariant, no I/O beyond
-# the noop sink — is timed at session START and END; if either exceeds
-# its band the payload stamps "contended": true, so the record
-# self-documents instead of silently mixing host noise into per-query
-# regressions.  Nominal: best-of-6 = 0.318 s on this container measured
-# WHILE a full pytest suite ran on the same 32 CPUs (BASELINE.md round
-# 12) — a quiet host sits lower, so 2× nominal is a conservative band
-# that genuine contention (the r11 flagged rows ran 2.3-7.3× their
-# quiet twins) clears by a wide margin.
-CALIBRATION_NOMINAL_SEC = 0.35
-CALIBRATION_BAND = 2.0
-# Python-boundary twin (round 12): host-level CPU steal observed during
-# this round inflated pandas-UDF-heavy rows 2-3× while the JVM probe
-# stayed comfortably inside its band — the Arrow→Python-worker→Arrow
-# round trip is the contention-sensitive path, so it gets its own probe.
-# Nominal: 0.48-0.63 best-of-3 across four quiet-host sessions on this
-# container (see OPTIMIZATION_r12.md); the 2× band mirrors the JVM
-# probe's rationale.
-CALIBRATION_PY_NOMINAL_SEC = 0.55
+# A hung query becomes errors[name] = "timeout" and the other rows still
+# run.  The heaviest sf1 row in BENCH_SF1.json takes 24 s on 32 cores.
+QUERY_TIMEOUT_S = 600.0
+# The session is stamped "contended" when the host took more than this
+# share of the guest's CPU time (steal) while the rows ran: runs slow down
+# with steal, about 5% per point on perfbench's catalog workload
+# (perfbench/README.md, "Run-to-run spread").
+STEAL_CONTENDED_FRAC = 0.02
 
 
-def _calibrate(spark) -> float:
-    df = spark.range(0, 8_000_000, 1, 8).selectExpr("sum(hash(id)) AS h")
-    _materialize(df)  # warmup (plan + codegen)
-    best = None
+def _cpu_line() -> str:
+    with open("/proc/stat") as f:
+        return f.readline()
+
+
+def steal_frac(start: str, end: str) -> float:
+    """Share of CPU time stolen by the host between two ``/proc/stat``
+    ``cpu`` lines.  Ticks: user nice system idle iowait irq softirq steal
+    (guest time is already counted in user and nice)."""
+    t0, t1 = ([int(v) for v in line.split()[1:9]] for line in (start, end))
+    total = sum(t1) - sum(t0)
+    return (t1[7] - t0[7]) / total if total > 0 else 0.0
+
+
+def _time_query(spark, builder) -> float:
+    """Best of two timed runs after one warm-up, each under the timeout."""
+    walls = []
     for _ in range(3):
-        t0 = time.time()
-        _materialize(df)
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 3)
+        phase = Phase(spark, lambda: _materialize(builder(spark, SF_DIR)), QUERY_TIMEOUT_S)
+        phase.run()
+        walls.append(phase.wall_s)
+    return round(min(walls[1:]), 3)
 
 
-def _calibrate_py(spark) -> float:
-    """Fixed work through the Python worker boundary at the bench's own
-    fan-out: 32 slices × ~50 ms of numpy per slice through a pandas UDF.
-    The JVM probe (8 light slices) measured CLEAN through a host-steal
-    episode that inflated the wide pandas-UDF rows 3-5× — contention
-    that only bites when all cores are claimed at once needs a probe
-    that claims them."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+def run_rows(spark, builders: dict) -> tuple[dict[str, float], dict[str, str]]:
+    """Time each row; one failing or hung row is recorded, not fatal."""
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name, builder in builders.items():
+        try:
+            timings[name] = _time_query(spark, builder)
+        except QueryFailed as exc:
+            errors[name] = str(exc)
+    return timings, errors
 
-    @pandas_udf("double")
-    def _aff(x: pd.Series) -> pd.Series:
-        import numpy as np
 
-        v = x.to_numpy(dtype="float64")
-        for _ in range(300):
-            v = np.sqrt(v * v + 1.0)
-        return pd.Series(v)
-
-    df = spark.range(0, 3_200_000, 1, 32).select(F.sum(_aff("id")).alias("s"))
-    _materialize(df)  # warmup (plan + worker spin-up)
-    best = None
-    for _ in range(3):
-        t0 = time.time()
-        _materialize(df)
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 3)
+def build_payload(
+    timings: dict[str, float], errors: dict[str, str], is_subset: bool, steal: float
+) -> dict:
+    # A partial total must never be compared against a full one: with any
+    # per-query error OR a SPARK_GRAFT_ONLY subset, "value" is null and the
+    # partial sum moves to "partial_total".
+    total = round(sum(timings.values()), 3)
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    payload = {
+        "metric": "headline_queries_wall_clock",
+        "value": total if not errors and not is_subset else None,
+        "unit": "sec",
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "steal_frac": round(steal, 4),
+    }
+    if steal > STEAL_CONTENDED_FRAC:
+        payload["contended"] = True
+    if is_subset:
+        payload["subset"] = True
+    if errors:
+        payload.update(errors=errors, partial=True)
+    if is_subset or errors:
+        payload["partial_total"] = total
+    return payload
 
 
 def main() -> None:
     from hive_udf_neologd_spark.catalog import QUERIES
     from hive_udf_neologd_spark.session import get_spark
 
-    spark = get_spark("bench")
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
     # Optional subset (comma-separated names): lets long scale runs (sf1)
     # be split into several shorter sessions and merged — the per-query
     # protocol (warmup + best-of-2) is unchanged, so chunked numbers are
@@ -204,66 +213,15 @@ def main() -> None:
         selected = [n for n in HEADLINE if n in set(wanted)]
     else:
         selected = HEADLINE
-    cal_start = _calibrate(spark)
-    cal_py_start = _calibrate_py(spark)
-    for name in selected:
-        builder = QUERIES[name]
-        # One failing query must not zero out the whole bench — record the
-        # error and keep timing the rest.
-        try:
-            _materialize(builder(spark, SF_DIR))  # warmup (plan + JIT + cache)
-            best = None
-            for _ in range(2):  # best-of-2 timed runs — damps shared-host noise
-                t0 = time.time()
-                _materialize(builder(spark, SF_DIR))
-                dt = time.time() - t0
-                best = dt if best is None or dt < best else best
-            timings[name] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
-    cal_end = _calibrate(spark)
-    cal_py_end = _calibrate_py(spark)
-    total = round(sum(timings.values()), 3)
-    # A partial total must never be compared against a full one (judge
-    # ADVICE r3 + r9): with any per-query error OR a SPARK_GRAFT_ONLY
-    # subset, "value" is null and the partial sum moves to "partial_total".
-    is_subset = len(selected) != len(HEADLINE)
-    payload = {
-        "metric": "headline_queries_wall_clock",
-        "value": total if not errors and not is_subset else None,
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
-    threshold = round(CALIBRATION_NOMINAL_SEC * CALIBRATION_BAND, 3)
-    payload["calibration"] = {
-        "start": cal_start,
-        "end": cal_end,
-        "nominal": CALIBRATION_NOMINAL_SEC,
-        "threshold": threshold,
-    }
-    py_threshold = round(CALIBRATION_PY_NOMINAL_SEC * CALIBRATION_BAND, 3)
-    payload["calibration_py"] = {
-        "start": cal_py_start,
-        "end": cal_py_end,
-        "nominal": CALIBRATION_PY_NOMINAL_SEC,
-        "threshold": py_threshold,
-    }
-    if (
-        cal_start > threshold
-        or cal_end > threshold
-        or cal_py_start > py_threshold
-        or cal_py_end > py_threshold
-    ):
-        payload["contended"] = True
-    if is_subset:
-        payload["subset"] = True
-        payload["partial_total"] = total
-    if errors:
-        payload["errors"] = errors
-        payload["partial"] = True
-        payload["partial_total"] = total
-    print(json.dumps(payload))
+    # Python workers start from a module of the package, so they need the
+    # repository on their path whatever the current directory is.
+    path = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = ROOT + (os.pathsep + path if path else "")
+    spark = get_spark("bench")
+    cpu_start = _cpu_line()
+    timings, errors = run_rows(spark, {name: QUERIES[name] for name in selected})
+    steal = steal_frac(cpu_start, _cpu_line())
+    print(json.dumps(build_payload(timings, errors, len(selected) != len(HEADLINE), steal)))
     spark.stop()
 
 

@@ -14,7 +14,7 @@ re-expresses that capability Spark-first:
   KuromojiNEologdUDF.java:141 + build.sh).
 * ``operators`` — the relational surface the reference delegates to Hive
   (SURVEY.md §2.3) plus large-scale training-data pipeline operators
-  (dedup, similarity search, text analysis, multimodal plumbing).
+  (dedup, similarity search, text analysis).
 * ``streaming`` — Structured Streaming term-count pipelines (extension).
 """
 

@@ -530,7 +530,9 @@ def _cosine_expr(a: str, b: str) -> F.Column:
 
 _D6_DIM = 64  # embeddings table contract (TESTDATA.md)
 _D6_PLANES = 24
-_D6_BANDS = 3  # 8 bits per band
+# 8 bits per band → 256 buckets, so per-(label, band, bucket) occupancy and
+# candidate volume stay small; at θ ≈ 2.6° fewer, wider bands beat narrow ones.
+_D6_BANDS = 3
 _D6_BAND_BITS = _D6_PLANES // _D6_BANDS
 
 
@@ -544,23 +546,6 @@ def _d6_plane_signs(p: int) -> list[float]:
         1.0 if int(hashlib.md5(f"d6|{p}|{i}".encode()).hexdigest()[0], 16) % 2 == 1 else -1.0
         for i in range(_D6_DIM)
     ]
-
-
-def _d6_band_bucket(band: int) -> str:
-    """Bucket for one band: the band's plane sign bits packed into an int.
-    8 bits/band → 256 buckets, so per-(label, band, bucket) occupancy — and
-    with it candidate-pair volume — stays small; fewer, wider bands beat
-    many narrow ones once the threshold is this high (θ ≈ 2.6°)."""
-    parts = []
-    for k in range(_D6_BAND_BITS):
-        p = _D6_BAND_BITS * band + k
-        w = ", ".join(f"CAST({v} AS DOUBLE)" for v in _d6_plane_signs(p))
-        dot = (
-            f"aggregate(zip_with(e, array({w}), (x, s) -> x * s),"
-            " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        parts.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << k} ELSE 0 END)")
-    return " + ".join(parts)
 
 
 def _d6_bands_np(doubled: DataFrame) -> DataFrame:

@@ -30,10 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor;
-# used by operators/relational.py to pick broadcast joins explicitly.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table (parquet).

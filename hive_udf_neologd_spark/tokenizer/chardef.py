@@ -56,10 +56,6 @@ def char_class(ch: str) -> int:
     return OTHER
 
 
-def is_punctuation(ch: str) -> bool:
-    return char_class(ch) == PUNCT
-
-
 # Chars whose Unicode general category is punctuation/symbol (i.e. the
 # discardPunctuation test above) but whose char.def class is NOT PUNCT
 # because the block ranges claim them first: ゠ U+30A0 (Pd) and ・ U+30FB

@@ -51,7 +51,6 @@ SNAPSHOT_PATH = os.path.join(os.path.dirname(__file__), "data", "mecab_core_snap
 SNAPSHOT_BIN_PATH = SNAPSHOT_PATH[:-4] + ".marshal"
 
 # Reference parity constants (KuromojiNEologdUDF.java:71-73).
-CONNECT_TIMEOUT_SEC = 10.0
 READ_TIMEOUT_SEC = 60.0
 MAX_INPUT_STREAM_SIZE = 32 * 1024 * 1024
 
@@ -555,9 +554,10 @@ class UserDictionary:
 
 def fetch_user_dict_url(url: str) -> list[str]:
     """Driver-side fetch of a user-dictionary URL with reference parity:
-    gzip accept-encoding, 10 s connect (urllib: single timeout covers
-    connect+read; we take the stricter read bound), 60 s read, non-200 →
-    error, 32 MiB cap, strict UTF-8 (KuromojiNEologdUDF.java:251-304)."""
+    gzip accept-encoding, non-200 → error, 32 MiB cap, strict UTF-8
+    (KuromojiNEologdUDF.java:251-304).  The reference bounds connect at
+    10 s and read at 60 s; urllib takes one timeout for both, and it is
+    the looser 60 s ``READ_TIMEOUT_SEC``, so a connect may take up to 60 s."""
     if not (url.startswith("http://") or url.startswith("https://")):
         raise UserDictionaryError(f"unsupported user dictionary URL scheme: {url!r}")
     req = urllib.request.Request(url, headers={"Accept-Encoding": "gzip"})

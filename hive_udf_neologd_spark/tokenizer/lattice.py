@@ -65,7 +65,6 @@ _SEARCH_OTHER_LENGTH = 7
 _SEARCH_OTHER_PENALTY = 1700
 
 _KANJI = chardef.KANJI
-_HIRAGANA = chardef.HIRAGANA
 _DIGIT = chardef.DIGIT
 _PUNCT = chardef.PUNCT
 _GROUPING = chardef.GROUPING

@@ -22,7 +22,6 @@ import pytest
 
 from hive_udf_neologd_spark.tokenizer.dictionary import (
     Dictionary,
-    builtin_dictionary,
     snapshot_entries,
 )
 

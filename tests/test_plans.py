@@ -168,15 +168,6 @@ def test_q33_anti_join_with_pushed_filter(spark):
     assert "GreaterThan(o_totalprice" in plan
 
 
-def test_m01_prunes_unread_columns(spark):
-    plan = _plan(spark, "m01_binary_meta")
-    # Only doc_id + text are read; lang/source/n_chars are pruned at the scan.
-    assert "ReadSchema" in plan
-    read_schema_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert any("doc_id" in ln and "text" in ln for ln in read_schema_lines)
-    assert not any("n_chars" in ln for ln in read_schema_lines)
-
-
 @pytest.mark.parametrize(
     "name",
     ["q03_segment_revenue", "d01_dedup_exact", "t05_fingerprint_winnow"],

@@ -154,7 +154,6 @@ def test_t05_no_window_exchange(spark):
         "d06_embedding_dup_pairs",
         "t17_tokenize_rich",
         "t04_quality_score",
-        "m04_resize_plan",
         "d02_minhash_lsh_pairs",
     ],
 )

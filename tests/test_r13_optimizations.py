@@ -252,31 +252,6 @@ def test_cc_fixpoint_hub_and_chain_with_binding_cap(spark, monkeypatch):
     assert got == _uf_components(pairs)
 
 
-def test_decode_assets_unknown_kind_null_payload_batch(spark):
-    """ADVICE r12 #1: an unknown-kind row with a NULL payload decodes to
-    the all-None row (decode_payload's null branch precedes its kind
-    check) — it must not swallow the codec error owed to a LATER
-    unknown-kind row that has a real payload, and alone it must not
-    raise."""
-    import pytest
-
-    from hive_udf_neologd_spark.operators.multimodal import decode_assets
-
-    ddl = "asset_id long, kind string, payload binary, meta_json string"
-    # unknown + null payload only -> emits, no raise
-    ok = spark.createDataFrame([(1, "hologram", None, None)], ddl)
-    rows = decode_assets(ok).collect()
-    assert [(r["asset_id"], r["byte_len"], r["width"], r["n_frames"]) for r in rows] == [
-        (1, 0, None, None)
-    ]
-    # unknown + null payload FIRST, unknown + payload later -> raises
-    bad = spark.createDataFrame(
-        [(1, "hologram", None, None), (2, "hologram", bytearray(b"x"), None)], ddl
-    ).coalesce(1)
-    with pytest.raises(Exception, match="no codec"):
-        decode_assets(bad).collect()
-
-
 def test_scratch_root_space_gate(tmp_path):
     """ADVICE r12 #2: tmpfs is only chosen when it has headroom."""
     import os
