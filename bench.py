@@ -8,11 +8,14 @@ ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
    "steal_frac": F}
 
-Protocol (BASELINE.md): one warm-up run per query, then the best of two
-timed runs, each under a wall-clock timeout.  ``value`` is the total, or
-null when a row failed or ``SPARK_GRAFT_ONLY`` picked a subset; then
-``partial_total`` holds the sum, and ``errors`` maps each failed row to
-its error ("timeout" for a hung one).  ``steal_frac`` is the host's share
+Protocol (BASELINE.md): one warm-up pass runs every selected query once,
+then each query takes the best of two timed runs; every run is under a
+wall-clock timeout.  Warming all rows before timing any keeps the
+session's own warm-up (JIT, first Python workers) out of the first rows'
+times.  ``value`` is the total, or null when a row failed or
+``SPARK_GRAFT_ONLY`` picked a subset; then ``partial_total`` holds the
+sum, and ``errors`` maps each failed row to its error ("timeout" for a
+hung one); a row that fails its warm-up is not timed.  ``steal_frac`` is the host's share
 of CPU time (steal) while the rows ran; above 2% the payload also carries
 ``"contended": true``.
 """
@@ -143,23 +146,28 @@ def steal_frac(start: str, end: str) -> float:
     return (t1[7] - t0[7]) / total if total > 0 else 0.0
 
 
-def _time_query(spark, builder) -> float:
-    """Best of two timed runs after one warm-up, each under the timeout."""
-    walls = []
-    for _ in range(3):
-        phase = Phase(spark, lambda: _materialize(builder(spark, SF_DIR)), QUERY_TIMEOUT_S)
-        phase.run()
-        walls.append(phase.wall_s)
-    return round(min(walls[1:]), 3)
+def _run(spark, builder) -> float:
+    """Wall time of one build and run under the timeout."""
+    phase = Phase(spark, lambda: _materialize(builder(spark, SF_DIR)), QUERY_TIMEOUT_S)
+    phase.run()
+    return phase.wall_s
 
 
 def run_rows(spark, builders: dict) -> tuple[dict[str, float], dict[str, str]]:
-    """Time each row; one failing or hung row is recorded, not fatal."""
-    timings: dict[str, float] = {}
+    """Warm every row once, then time each as the best of two runs; one
+    failing or hung row is recorded, not fatal."""
     errors: dict[str, str] = {}
     for name, builder in builders.items():
         try:
-            timings[name] = _time_query(spark, builder)
+            _run(spark, builder)
+        except QueryFailed as exc:
+            errors[name] = str(exc)
+    timings: dict[str, float] = {}
+    for name, builder in builders.items():
+        if name in errors:
+            continue
+        try:
+            timings[name] = round(min(_run(spark, builder) for _ in range(2)), 3)
         except QueryFailed as exc:
             errors[name] = str(exc)
     return timings, errors

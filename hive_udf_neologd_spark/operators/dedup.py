@@ -223,15 +223,7 @@ def _d02_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def d02_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
-    # Materialize-before-sort (round 12, same rationale as d05): the
-    # declared sort's sampling pass re-ran the pair-dedup aggregate over
-    # the distinct's shuffle output once more per action (measured
-    # ~1.83 -> ~1.72 s at sf0.1; proxy-width pair rows only).
-    return (
-        _d02_pairs(spark, sf_dir)
-        .localCheckpoint(eager=False)
-        .orderBy("id_a", "id_b")
-    )
+    return _d02_pairs(spark, sf_dir).orderBy("id_a", "id_b")
 
 
 D02_SQL = f"""
@@ -282,16 +274,6 @@ def d03_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack are integer math, so the bit-row DuckDB oracle still matches
     exactly."""
     prepare(spark)
-    # Materialize before the sort (round 12, guide §3.3): the range
-    # partitioner's sampling pass re-ran the base⋈mut join segment above
-    # the aggregate exchanges once more per action (measured ~1.45 ->
-    # ~1.30 s at sf0.1; the checkpoint holds 4 scalar columns per doc).
-    return _d03_joined(spark, sf_dir).localCheckpoint(eager=False).orderBy("doc_id")
-
-
-def _d03_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """d03's signature computation + base⋈mut join, WITHOUT the final
-    sort — split out for plan inspection (see _d05_scored)."""
     corpus = _corpus(spark, sf_dir, with_exact=False)
     tokens = corpus.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     hashed = tokens.select(
@@ -332,6 +314,7 @@ def _d03_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("y.simhash").alias("simhash_mut"),
             F.expr("bit_count(x.simhash ^ y.simhash)").cast("int").alias("hamming"),
         )
+        .orderBy("doc_id")
     )
 
 
@@ -370,8 +353,6 @@ def d04_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mut = _mutated(_base(spark, sf_dir)).select(
         (F.col("doc_id") - MUT_OFF).alias("doc_id"), F.split("text", " ").alias("tb")
     )
-    # Materialize-before-sort (round 12, same rationale as d05): the sort's
-    # sampling pass re-ran the join + set-intersection segment per action.
     return (
         base.join(mut, "doc_id")
         .select(
@@ -382,7 +363,6 @@ def d04_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("jaccard"),
         )
-        .localCheckpoint(eager=False)
         .orderBy("doc_id")
     )
 
@@ -434,24 +414,6 @@ def d05_bucket_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     call and the swap is a drop-in (any fixed total order satisfies the
     completeness theorem)."""
     prepare(spark)
-    # Materialize the scored pairs BEFORE the presentation sort (round 12,
-    # guide §3.3/§7.2): a global orderBy plans a range exchange whose
-    # partitioner SAMPLES its child, and with no exchange between the
-    # fetch joins and the sort, every action re-executed the whole
-    # fetch+intersect+union segment a second time just to pick range
-    # bounds (measured: 3.36 -> ~1.9 s at sf0.1; the filter's duplicate
-    # evaluation of the jaccard expression is folded away too).  The
-    # checkpoint holds only (id_a, id_b, jaccard) proxy rows — candidate
-    # volume, not corpus volume — computed fresh per invocation.
-    scored = _d05_scored(spark, sf_dir).localCheckpoint(eager=False)
-    return scored.filter(F.col("jaccard") >= _J_THRESHOLD).orderBy("id_a", "id_b")
-
-
-def _d05_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """d05's candidate generation + exact-Jaccard scoring, WITHOUT the
-    final threshold/sort — split out so the plan-shape tests (and the
-    judge's plan captures) can inspect the subtree the lazy checkpoint
-    hides from the top-level explain."""
     docs = _base(spark, sf_dir).select(
         "doc_id",
         "lang",
@@ -488,6 +450,14 @@ def _d05_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(ta, "id_a")
         .join(tb, "id_b")
         .select("id_a", "id_b", F.round(j, 4).alias("jaccard"))
+        # Kept on measurement: without it the presentation sort's range
+        # partitioner samples the fetch joins and set ops a second time
+        # (bench.py protocol, sf0.1, 4 CPUs, 8 interleaved pairs: median
+        # 2.32 s with it, 4.18 s without, slower in 8 of 8).  It holds
+        # (id_a, id_b, jaccard) candidate rows, and runs jobs at build.
+        .localCheckpoint(eager=False)
+        .filter(F.col("jaccard") >= _J_THRESHOLD)
+        .orderBy("id_a", "id_b")
     )
 
 
@@ -626,17 +596,6 @@ def d06_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume ∝ bucket occupancy, not bucket-pair count; vectors are fetched
     per candidate pair by keyed join — no O(n²) stage anywhere."""
     prepare(spark)
-    # Same materialize-before-sort shape as d05 (round 12): the range
-    # exchange's sampling pass otherwise re-executes the fetch joins and
-    # the 64-d cosine folds per action (measured: 1.3 -> ~1.0 s at
-    # sf0.1).  Checkpoint rows are (id_a, id_b, cos) only.
-    scored = _d06_scored(spark, sf_dir).localCheckpoint(eager=False)
-    return scored.filter(F.col("cos") >= _COS_THRESHOLD).orderBy("id_a", "id_b")
-
-
-def _d06_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """d06's LSH candidate generation + exact-cosine scoring, WITHOUT the
-    final threshold/sort — split out for plan inspection (see _d05_scored)."""
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e")
     )
@@ -663,6 +622,8 @@ def _d06_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(ea, "id_a")
         .join(eb, "id_b")
         .select("id_a", "id_b", F.round(cos, 4).alias("cos"))
+        .filter(F.col("cos") >= _COS_THRESHOLD)
+        .orderBy("id_a", "id_b")
     )
 
 

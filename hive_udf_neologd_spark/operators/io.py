@@ -9,9 +9,12 @@ on the original parquet, so any fidelity loss in the round-trip (schema,
 quoting, timestamp encoding) breaks the value hash.
 
 Scale notes: CSV/JSON are line-splittable, so a 100 TB staged directory
-still parallelizes per-file/per-split; schemas are always declared (never
-inferred — inference is a full extra scan at scale).  Parquet remains the
-canonical interchange; these paths exist for ingest interop.
+still parallelizes per-file/per-split; their schemas are declared (CSV/JSON
+inference is a full extra scan at scale).  The testdata tables are read
+with the schemas ``sources.SCHEMAS`` declares.  The parquet round-trips
+(io03, io04) read their staged output's footers, and io05 merges footers
+on purpose (``mergeSchema``).  Parquet remains the canonical interchange;
+these paths exist for ingest interop.
 """
 
 from __future__ import annotations

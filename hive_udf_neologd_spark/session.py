@@ -44,10 +44,6 @@ def get_spark(app_name: str = "hive-udf-neologd-spark", cpus: int | None = None)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamp semantics for the DuckDB oracle compare.
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet carries TIMESTAMP(NANOS); Spark reads it as long
-        # nanos under this flag and sources.read_table converts back to a
-        # proper timestamp column (micros).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Managed-table warehouse (bucketed tables — sources.write_bucketed);
         # static conf, so it must be set at session build time.
@@ -79,8 +75,4 @@ def prepare(spark: SparkSession) -> SparkSession:
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static on some builds; read_table handles both shapes
     return spark

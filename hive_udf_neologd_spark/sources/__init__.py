@@ -1,10 +1,13 @@
 """Table sources.
 
-The reference delegates all scans to Hive tables (SURVEY.md §2.3); here the
-scan surface is ``spark.read`` with schema-on-read parquet (columnar,
-predicate-pushdown- and column-pruning-friendly — both verified via
-``.explain`` in tests).  CSV/JSON readers are provided for parity with
-generic Hive external tables.
+The reference delegates all scans to Hive tables whose schemas the
+metastore declares (SURVEY.md §2.3); here the scan surface is
+``spark.read`` over parquet with the schema declared in :data:`SCHEMAS`
+(columnar, predicate-pushdown- and column-pruning-friendly — both verified
+via ``.explain`` in tests).  A declared read plans without reading a
+parquet footer, so building a DataFrame over these tables runs no Spark
+job.  CSV/JSON readers are provided for parity with generic Hive external
+tables.
 """
 
 from __future__ import annotations
@@ -17,65 +20,63 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# One declared schema per testdata table, in DDL.  tests/test_sources.py
+# checks each against the parquet footers of every testdata directory.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE,"
+        " c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT,"
+        " p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE,"
+        " o_orderdate TIMESTAMP, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT,"
+        " l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE,"
+        " l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE,"
+        " props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+TABLES = tuple(SCHEMAS)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table (parquet).
+    """Read one testdata table (parquet) with its declared schema.
 
     Columnar scan: Catalyst pushes filters/projections into the parquet
     reader, so callers should filter/select *before* any UDF (SURVEY.md §4).
+    The files store timestamps without a timezone annotation (TIMESTAMP_NTZ
+    when inferred); the declared ``TIMESTAMP`` reads their microseconds as
+    UTC instants, independent of the session timezone.
 
     Side effect: calls :func:`hive_udf_neologd_spark.session.prepare` on
     every invocation, which pins ``spark.sql.session.timeZone`` to UTC
-    (and sets the engine's shuffle-partition/AQE confs).  This is required
-    for the TIMESTAMP_NTZ→TIMESTAMP normalization below to be lossless and
-    for oracle parity with DuckDB's naive timestamps — but it means a read
-    permanently overwrites a non-UTC timezone an external caller may have
-    set on the shared session.  Callers needing a different zone must
-    restore it after reading.
+    (and sets the engine's shuffle-partition/AQE confs).  UTC renders those
+    instants as the files' wall-clock values, which is what oracle parity
+    with DuckDB's naive timestamps needs — but it means a read permanently
+    overwrites a non-UTC timezone an external caller may have set on the
+    shared session.  Callers needing a different zone must restore it
+    after reading.
     """
-    if name not in TABLES:
+    if name not in SCHEMAS:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
     from hive_udf_neologd_spark.session import prepare
 
-    # The NTZ→TIMESTAMP normalization below is only correct under a UTC
-    # session timezone; don't rely on every caller having run prepare()
-    # (judge ADVICE r3) — an external session with a non-UTC zone would get
-    # silently shifted timestamps.
     prepare(spark)
-
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        # Legacy shape: parquet TIMESTAMP(NANOS) surfaced as long nanos
-        # under spark.sql.legacy.parquet.nanosAsLong — normalize to a
-        # timestamp (micros, integer division so no double rounding).
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    # Parquet timestamps without a timezone annotation read back as
-    # TIMESTAMP_NTZ; normalize to TIMESTAMP so epoch functions
-    # (unix_micros & friends) resolve.  The session timezone is pinned to
-    # UTC (prepare() above), so wall-clock values are unchanged and match
-    # DuckDB's naive-timestamp semantics bit-for-bit.  Top-level fields
-    # only, by design: every TABLES schema is flat — recurse into
-    # struct/array/map types if nested timestamps ever appear.
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def scratch_root(name: str, min_free_bytes: int = 256 << 20) -> str:

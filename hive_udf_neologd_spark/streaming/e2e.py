@@ -103,8 +103,8 @@ def _stream_shuffle_scope(spark: SparkSession, stage: str):
 
 def s03_streaming_event_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
-    # Stage through read_table so the nanos→micros timestamp normalization
-    # matches the batch path.
+    # Stage through read_table so the snapshot carries the declared
+    # TIMESTAMP the batch path reads and EVENT_SCHEMA streams.
     events = read_table(spark, sf_dir, "events")
     stage = stage_once(sf_dir, "events", "events", lambda p: _write_snapshot(events, p))
     out = streaming_event_counts(

@@ -36,17 +36,9 @@ from pyspark.sql.types import (
 )
 
 from hive_udf_neologd_spark.functions.tokenize import tokenize_ja
+from hive_udf_neologd_spark.sources import SCHEMAS
 
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
+EVENT_SCHEMA = SCHEMAS["events"]
 
 DOCUMENT_STREAM_SCHEMA = StructType(
     [

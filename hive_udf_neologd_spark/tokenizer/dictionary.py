@@ -336,23 +336,22 @@ def builtin_dictionary(
         # construction-frozen (Lattice never mutates it; user entries
         # live in a separate Dictionary).
         return _default_dictionary(include_snapshot)
+    return Dictionary(_builtin_entries(include_snapshot) + list(extra_entries))
+
+
+def _builtin_entries(include_snapshot: bool) -> list[DictEntry]:
+    """Hand-built core lexicon first, then the packaged snapshot."""
     entries = [
         DictEntry(s, pos, cost, base, norm) for (s, pos, cost, base, norm) in BUILTIN_ENTRIES
     ]
     if include_snapshot:
         entries.extend(snapshot_entries())
-    entries.extend(extra_entries)
-    return Dictionary(entries)
+    return entries
 
 
 @lru_cache(maxsize=2)
 def _default_dictionary(include_snapshot: bool) -> Dictionary:
-    entries = [
-        DictEntry(s, pos, cost, base, norm) for (s, pos, cost, base, norm) in BUILTIN_ENTRIES
-    ]
-    if include_snapshot:
-        entries.extend(snapshot_entries())
-    return Dictionary(entries)
+    return Dictionary(_builtin_entries(include_snapshot))
 
 
 def load_mecab_csv(source) -> list[DictEntry]:

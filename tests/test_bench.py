@@ -1,5 +1,5 @@
-"""bench.py: the steal stamp, the per-query timeout, and running it from
-outside the repository."""
+"""bench.py: the steal stamp, the per-query timeout, the warm-up pass, and
+running it from outside the repository."""
 
 from __future__ import annotations
 
@@ -59,6 +59,21 @@ def test_hung_row_is_a_timeout_error_and_the_rest_still_run(spark, monkeypatch):
     assert list(timings) == ["quick"]
     drain_listeners(spark)
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+
+
+def test_every_row_is_warmed_before_any_is_timed(spark):
+    calls = []
+
+    def row(name):
+        def build(s, sf):
+            calls.append(name)
+            return s.range(0, 10, 1, 1)
+
+        return build
+
+    timings, errors = bench.run_rows(spark, {n: row(n) for n in ("a", "b", "c")})
+    assert errors == {} and list(timings) == ["a", "b", "c"]
+    assert calls == ["a", "b", "c", "a", "a", "b", "b", "c", "c"]
 
 
 def test_bench_runs_from_another_directory(tmp_path, sf_dir):

@@ -8,11 +8,9 @@ import pandas as pd
 import pytest
 
 from hive_udf_neologd_spark.catalog import ORACLES, QUERIES
+from hive_udf_neologd_spark.sources import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")

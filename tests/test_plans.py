@@ -97,27 +97,29 @@ def test_d02_band_join_reuses_minhash_exchange(spark):
     # pipeline (scan → shingle → md5 → min-agg) must run ONCE, with the
     # second side a ReusedExchange — otherwise the build side recomputes
     # the pipeline, which doubles the dominant cost at 100 TB.
-    # The public query checkpoints the distinct pairs before its sort
-    # (round 12), so execute the pre-checkpoint subtree builder.
-    from hive_udf_neologd_spark.operators.dedup import _d02_pairs
-
-    df = _d02_pairs(spark, SF_DIR)
+    df = QUERIES["d02_minhash_lsh_pairs"](spark, SF_DIR)
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in executed
 
 
-def test_d05_candidate_join_keys_include_prefix_token(spark):
+def test_d05_candidate_join_keys_include_prefix_token(spark, monkeypatch):
     # Prefix-filter candidate generation: the join key must carry the
     # high-cardinality token, never just the low-cardinality (lang,
     # source) bucket — the thing that made the old all-pairs plan
-    # quadratic at scale.
-    # The public query checkpoints the scored pairs before its sort
-    # (round 12), which truncates the top-level explain — assert on the
-    # pre-checkpoint subtree builder instead.
-    from hive_udf_neologd_spark.operators.dedup import _d05_scored
+    # quadratic at scale.  d05 checkpoints its scored pairs before the
+    # sort, so inspect the frame it checkpoints.
+    checkpointed = []
+    frame_cls = type(spark.range(1))
+    real_checkpoint = frame_cls.localCheckpoint
 
-    plan = _plan_of(spark, _d05_scored(spark, SF_DIR))
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    QUERIES["d05_bucket_jaccard_pairs"](spark, SF_DIR)
+    plan = _plan_of(spark, checkpointed[0])
     assert "tok" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -126,9 +128,7 @@ def test_d05_candidate_join_keys_include_prefix_token(spark):
 def test_d06_candidate_join_keys_include_lsh_bucket(spark):
     # Banded hyperplane LSH: candidates join on (label, band, bucket),
     # not all-pairs within label.
-    from hive_udf_neologd_spark.operators.dedup import _d06_scored
-
-    plan = _plan_of(spark, _d06_scored(spark, SF_DIR))
+    plan = _plan(spark, "d06_embedding_dup_pairs")
     assert "bucket" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -139,9 +139,7 @@ def test_d03_no_bit_row_inflation(spark):
     # branch has exactly ONE hashpartitioning (the per-doc agg) — the old
     # bit-row plan needed a second (doc_id, bit) shuffle carrying 32× the
     # token count.
-    from hive_udf_neologd_spark.operators.dedup import _d03_joined
-
-    plan = _plan_of(spark, _d03_joined(spark, SF_DIR))
+    plan = _plan(spark, "d03_simhash")
     assert plan.count("hashpartitioning") == 2  # one per disjoint branch
 
 
@@ -177,15 +175,7 @@ def test_whole_stage_codegen_present(spark, name):
     # AQE hides codegen spans until execution, so plan this one query with
     # AQE off (the builders' prepare() re-enables it; planning happens at
     # explain time, after we flip the conf back off).
-    if name == "t05_fingerprint_winnow":
-        # The public t05 checkpoints before its sort (round 12) which
-        # truncates the plan; the codegen'd scan/project lives in the
-        # pre-checkpoint subtree.
-        from hive_udf_neologd_spark.operators.textops import _t05_fingerprints
-
-        df = _t05_fingerprints(spark, SF_DIR)
-    else:
-        df = QUERIES[name](spark, SF_DIR)
+    df = QUERIES[name](spark, SF_DIR)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         codegen = spark._jvm.PythonSQLUtils.explainString(

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark.operators import ann
@@ -130,52 +129,17 @@ def test_stream_shuffle_scope_restores_conf(spark):
 
 
 def test_t05_no_window_exchange(spark):
-    from hive_udf_neologd_spark.operators.textops import _t05_fingerprints
+    from hive_udf_neologd_spark.operators.textops import t05_fingerprint_winnow
 
-    df = _t05_fingerprints(spark, SF_DIR)
+    df = t05_fingerprint_winnow(spark, SF_DIR)
     plan = spark._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
     # The winnowing is per-document inside one narrow kernel: no window
     # operator, no hash exchange carrying shingle rows — only the
-    # conditional spread remains (the public query adds a checkpoint +
-    # presentation sort on top; see test_sort_samples_checkpoint below).
+    # conditional spread and the presentation sort's range exchange remain.
     assert "Window" not in plan
     assert "hashpartitioning" not in plan
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "t05_fingerprint_winnow",
-        "d03_simhash",
-        "d04_jaccard_near_dup",
-        "d05_bucket_jaccard_pairs",
-        "d06_embedding_dup_pairs",
-        "t17_tokenize_rich",
-        "t04_quality_score",
-        "d02_minhash_lsh_pairs",
-    ],
-)
-def test_sort_samples_checkpoint_not_pipeline(spark, name):
-    """Materialize-before-sort (round 12, guide §3.3): each of these
-    queries ends in a global orderBy whose range partitioner SAMPLES its
-    child.  Without a materialization boundary the sampling pass re-ran
-    the expensive narrow subtree (kernel / set-ops / UDF) once more per
-    action.  The public query's top-level plan must therefore sort over a
-    checkpointed RDD scan, with the heavy subtree absent (it runs exactly
-    once, inside the checkpoint)."""
-    from hive_udf_neologd_spark.catalog import QUERIES
-
-    df = QUERIES[name](spark, SF_DIR)
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "Scan ExistingRDD" in plan
-    assert "Sort" in plan
-    # The expensive work is below the checkpoint, not re-planned above it.
-    for marker in ("MapInPandas", "ArrowEvalPython", "array_intersect", "Join"):
-        assert marker not in plan
 
 
 def test_io_input_fixture_staged_once(spark, monkeypatch):

@@ -101,12 +101,12 @@ def test_round_half_up_4_matches_spark_round(spark):
 
 
 def test_t05_jvm_winnow_matches_reference(spark):
-    from hive_udf_neologd_spark.operators.textops import _t05_fingerprints
+    from hive_udf_neologd_spark.operators.textops import t05_fingerprint_winnow
     from hive_udf_neologd_spark.sources import read_table
 
     got = {
         r["doc_id"]: r["n_fingerprints"]
-        for r in _t05_fingerprints(spark, SF_DIR).collect()
+        for r in t05_fingerprint_winnow(spark, SF_DIR).collect()
     }
     rows = [
         (r["doc_id"], r["text"])
@@ -120,7 +120,7 @@ def test_t05_jvm_winnow_matches_reference(spark):
 def test_t05_jvm_winnow_edge_shapes(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from hive_udf_neologd_spark.operators.textops import _t05_fingerprints
+    from hive_udf_neologd_spark.operators.textops import t05_fingerprint_winnow
 
     rows = [
         (1, None),                      # null text -> skipped
@@ -136,7 +136,7 @@ def test_t05_jvm_winnow_edge_shapes(spark, tmp_path):
     )
     got = {
         r["doc_id"]: r["n_fingerprints"]
-        for r in _t05_fingerprints(spark, path).collect()
+        for r in t05_fingerprint_winnow(spark, path).collect()
     }
     assert got == _reference_counts(rows)
 

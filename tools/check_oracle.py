@@ -19,12 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
+from hive_udf_neologd_spark.sources import TABLES
+
 # Override with SPARK_GRAFT_SF_DIR (same env var bench.py honors) — used
 # for the sf1 correctness sweep recorded in SCALING.md.
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def duck_connection(sf_dir: str = SF_DIR):
