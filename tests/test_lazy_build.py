@@ -13,8 +13,6 @@ parquet footer read for a schema, and no ``localCheckpoint``."""
 
 from __future__ import annotations
 
-import contextlib
-
 import pytest
 
 from hive_udf_neologd_spark.catalog import QUERIES
@@ -40,16 +38,6 @@ def test_allow_list_names_catalog_entries():
     assert EXEMPT <= set(QUERIES)
 
 
-@contextlib.contextmanager
-def _job_group(sc, group: str):
-    sc.setJobGroup(group, group)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - EXEMPT))
 def test_builder_runs_no_job(name, spark, sf_dir, monkeypatch):
     def refuse(self, *args, **kwargs):
@@ -58,6 +46,10 @@ def test_builder_runs_no_job(name, spark, sf_dir, monkeypatch):
     monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", refuse)
     sc = spark.sparkContext
     group = f"build-{name}"
-    with _job_group(sc, group):
+    sc.setJobGroup(group, group)
+    try:
         QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -103,21 +103,27 @@ def test_d02_band_join_reuses_minhash_exchange(spark):
     assert "ReusedExchange" in executed
 
 
-def test_d05_candidate_join_keys_include_prefix_token(spark, monkeypatch):
+@pytest.fixture
+def checkpointed(spark, monkeypatch):
+    """The frames passed to ``DataFrame.localCheckpoint``, in call order."""
+    frames = []
+    frame_cls = type(spark.range(1))
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        frames.append(self)
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    return frames
+
+
+def test_d05_candidate_join_keys_include_prefix_token(spark, checkpointed):
     # Prefix-filter candidate generation: the join key must carry the
     # high-cardinality token, never just the low-cardinality (lang,
     # source) bucket — the thing that made the old all-pairs plan
     # quadratic at scale.  d05 checkpoints its scored pairs before the
     # sort, so inspect the frame it checkpoints.
-    checkpointed = []
-    frame_cls = type(spark.range(1))
-    real_checkpoint = frame_cls.localCheckpoint
-
-    def recording_checkpoint(self, *args, **kwargs):
-        checkpointed.append(self)
-        return real_checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
     QUERIES["d05_bucket_jaccard_pairs"](spark, SF_DIR)
     plan = _plan_of(spark, checkpointed[0])
     assert "tok" in plan
@@ -248,7 +254,7 @@ def test_d10_band_join_not_all_pairs(spark):
     assert "band" in plan and "bucket" in plan
 
 
-def test_d07_squaring_join_is_never_broadcast(spark, monkeypatch):
+def test_d07_squaring_join_is_never_broadcast(spark, checkpointed):
     """The _cc_fixpoint edge-squaring join must stay a shuffle join after
     AQE re-plans it: a broadcast flip would leave the skew guard's u-keyed
     window exchange, which doubles as the join's y-side shuffle, as pure
@@ -260,15 +266,6 @@ def test_d07_squaring_join_is_never_broadcast(spark, monkeypatch):
     pairs = [(0, i) for i in range(1, 31)] + [(i, i + 1) for i in range(100, 140)]
     edges = spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "u long, v long")
     # The squared edge table is the first frame _cc_fixpoint checkpoints.
-    checkpointed = []
-    frame_cls = type(edges)
-    real_checkpoint = frame_cls.localCheckpoint
-
-    def recording_checkpoint(self, *args, **kwargs):
-        checkpointed.append(self)
-        return real_checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
     D._cc_fixpoint(edges).collect()
     plan = checkpointed[0]._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
