@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark.operators import ann
@@ -140,6 +141,29 @@ def test_t05_no_window_exchange(spark):
     # conditional spread and the presentation sort's range exchange remain.
     assert "Window" not in plan
     assert "hashpartitioning" not in plan
+
+
+@pytest.mark.parametrize("name", ["d05_bucket_jaccard_pairs", "t17_tokenize_rich"])
+def test_sort_samples_checkpoint_not_pipeline(spark, name):
+    """Materialize-before-sort: each of these queries ends in a global
+    orderBy whose range partitioner SAMPLES its child.  Without a
+    materialization boundary the sampling pass re-runs the expensive
+    subtree (set ops / UDF) once more per action, which measured slower
+    for these two (see the comment at each checkpoint).  The public
+    query's top-level plan must therefore sort over a checkpointed RDD
+    scan, with the heavy subtree absent (it runs exactly once, inside the
+    checkpoint)."""
+    from hive_udf_neologd_spark.catalog import QUERIES
+
+    df = QUERIES[name](spark, SF_DIR)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "Scan ExistingRDD" in plan
+    assert "Sort" in plan
+    # The expensive work is below the checkpoint, not re-planned above it.
+    for marker in ("MapInPandas", "ArrowEvalPython", "array_intersect", "Join"):
+        assert marker not in plan
 
 
 def test_io_input_fixture_staged_once(spark, monkeypatch):
