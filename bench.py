@@ -6,7 +6,7 @@ result via the noop sink (full execution, no driver collect), and prints
 ONE JSON line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "steal_frac": F}
+   "steal_frac": F, "idle_steal_frac": F}
 
 Protocol (BASELINE.md): one warm-up pass runs every selected query once,
 then each query takes the best of two timed runs; every run is under a
@@ -17,7 +17,10 @@ times.  ``value`` is the total, or null when a row failed or
 sum, and ``errors`` maps each failed row to its error ("timeout" for a
 hung one); a row that fails its warm-up is not timed.  ``steal_frac`` is the host's share
 of CPU time (steal) while the rows ran; above 2% the payload also carries
-``"contended": true``.
+``"contended": true``.  ``idle_steal_frac`` is the same share over
+``IDLE_STEAL_S`` seconds after the session starts and before the first row,
+while the guest is idle, so a steal reading that only tracks the rows' own
+load shows as a gap between the two.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
@@ -47,11 +51,8 @@ HEADLINE = [
     "s02_session_windows",
     "q22_asof_join",
     "q24_small_quantity_revenue",
-    "a03_ann_ivf",
     "t09_quality_ratios",
     # Heavy late-tier entries, regression-gated from round 2 on:
-    "a08_ivf_trained",
-    "a09_ivf_np_kernel",
     "d07_dup_clusters",
     "d05_bucket_jaccard_pairs",
     "d06_embedding_dup_pairs",
@@ -71,12 +72,9 @@ HEADLINE = [
     "d10_incremental_near_dup",
     "t17_tokenize_rich",
     "io05_schema_evolution_read",
-    "a10_range_search",
     # Round-5: Japanese-lattice throughput gate — dictionary growth must
     # not silently regress the hot tokenizer kernel (VERDICT r4 #1).
     "t18_ja_tokenize_throughput",
-    # Round-5: the IVF recall-vs-nprobe tuning curve (VERDICT r4 #6).
-    "a11_recall_curve",
     # Round-5 capstone: the composed dedup->quality->split->pack pipeline.
     "t19_training_pipeline",
     # Round-5: benchmark decontamination (broadcast eval n-gram screen).
@@ -93,10 +91,6 @@ HEADLINE = [
     # the registered Hive name) — pinned vs t18's iterator Arrow UDF path (VERDICT
     # r7 next-round #4).
     "sql03_sql_udf_throughput",
-    # Round-8: sampled-train IVF (the 100 TB training-cost fix, VERDICT r7
-    # next-round #6) — gated from birth so the sampled Lloyd path can't
-    # silently regress vs a08's full-corpus training.
-    "a12_ivf_sampled_train",
     # Round-9: held-out SEARCH/EXTENDED mode-parity (constant-size frame —
     # the corpus module self-describes its current row/register counts).
     "t25_mode_parity",
@@ -130,6 +124,8 @@ QUERY_TIMEOUT_S = 600.0
 # with steal, about 5% per point on perfbench's catalog workload
 # (perfbench/README.md, "Run-to-run spread").
 STEAL_CONTENDED_FRAC = 0.02
+# Length of the idle steal reading taken before the first row.
+IDLE_STEAL_S = 5.0
 
 
 def _cpu_line() -> str:
@@ -174,7 +170,11 @@ def run_rows(spark, builders: dict) -> tuple[dict[str, float], dict[str, str]]:
 
 
 def build_payload(
-    timings: dict[str, float], errors: dict[str, str], is_subset: bool, steal: float
+    timings: dict[str, float],
+    errors: dict[str, str],
+    is_subset: bool,
+    steal: float,
+    idle_steal: float,
 ) -> dict:
     # A partial total must never be compared against a full one: with any
     # per-query error OR a SPARK_GRAFT_ONLY subset, "value" is null and the
@@ -188,6 +188,7 @@ def build_payload(
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "steal_frac": round(steal, 4),
+        "idle_steal_frac": round(idle_steal, 4),
     }
     if steal > STEAL_CONTENDED_FRAC:
         payload["contended"] = True
@@ -226,10 +227,19 @@ def main() -> None:
     path = os.environ.get("PYTHONPATH")
     os.environ["PYTHONPATH"] = ROOT + (os.pathsep + path if path else "")
     spark = get_spark("bench")
+    idle_start = _cpu_line()
+    time.sleep(IDLE_STEAL_S)
     cpu_start = _cpu_line()
     timings, errors = run_rows(spark, {name: QUERIES[name] for name in selected})
     steal = steal_frac(cpu_start, _cpu_line())
-    print(json.dumps(build_payload(timings, errors, len(selected) != len(HEADLINE), steal)))
+    payload = build_payload(
+        timings,
+        errors,
+        len(selected) != len(HEADLINE),
+        steal,
+        steal_frac(idle_start, cpu_start),
+    )
+    print(json.dumps(payload))
     spark.stop()
 
 

@@ -42,7 +42,7 @@ from hive_udf_neologd_spark.streaming.e2e import (
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-MIN_CATALOG_SIZE = 111
+MIN_CATALOG_SIZE = 100
 
 # DRIVER-VISIBILITY CONTRACT (VERDICT r3 'what's wrong' #3): the driver's
 # correctness harness gates exactly ``list(QUERIES)[:50]`` — the first 50

@@ -1,14 +1,7 @@
 """Similarity search over the ``embeddings`` table (``array<float>``, 64-d).
 
-* a01 — brute-force cosine top-k: the correctness baseline.  The query set
-  is broadcast (tiny side) so the scan side never shuffles; per-partition
-  ranking happens before the final top-k merge (window over query id).
-* a02 — LSH-bucketed ANN (random-hyperplane signatures, Charikar '02): the
-  scale path.  Hyperplane weights are derived deterministically from md5
-  parity so the Spark plan and the DuckDB oracle build identical planes.
-  Candidates = vectors sharing the query's signature bucket → cosine only
-  on candidates.  At 100 TB the bucket join replaces the full cross
-  product; recall is tunable via planes/bands.
+* a01 — brute-force cosine top-k.  The query set is broadcast (tiny side)
+  so the scan side never shuffles; the top-k is a window over query id.
 
 All float math is double-widened before any arithmetic so both engines
 fold left-to-right over identical doubles.
@@ -16,187 +9,36 @@ fold left-to-right over identical doubles.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from hive_udf_neologd_spark.operators.dedup import _cosine_expr
+from hive_udf_neologd_spark.operators.dedup import dot_fold, norm_fold
 from hive_udf_neologd_spark.session import prepare
-from hive_udf_neologd_spark.sources import local_frame, read_table
+from hive_udf_neologd_spark.sources import read_table
 
 _QUERY_MOD = 100  # vec_id % 100 == 0 → query set
 _TOP_K = 5
-_N_PLANES = 8
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Norm hoisted into a column: each pairwise cosine then needs only the
     # dot product (higher-order functions are interpreted, so halving the
-    # per-pair fold work matters).  sqrt(Σx²) here is the exact expression
-    # _cosine_expr folds, so dot/(na·nb) is bit-identical to the oracle's
+    # per-pair fold work matters).  It is the norm fold dedup's cosine
+    # uses, so dot/(na·nb) is bit-identical to the oracle's
     # list_cosine_similarity.
     return read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    ).withColumn(
-        "nrm",
-        F.expr(
-            "sqrt(aggregate(transform(e, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-        ),
-    )
-
-
-def _dot_expr(a: str, b: str) -> F.Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-# --- shared numpy kernels (round 12, guide §4.2) ---------------------------
-# Interpreted higher-order functions (aggregate/zip_with) evaluate a
-# closure per array element; the N×K assignment and pairwise-cosine
-# kernels below do the same math as one fused numpy op per DIMENSION,
-# which preserves Spark's sequential left fold exactly: accumulating in
-# array order over dims yields the IDENTICAL doubles (((0+x0)+x1)+…)
-# the HOF fold produces, so ranks/ties — and the DuckDB oracle hashes —
-# are unchanged.  This is the bit-parity argument a09 established in
-# round 2; round 12 applies the same kernels to training (a06/a08/a09/
-# a12), sampled assignment (a03/a11) and brute-force scoring (a01/a10).
-
-
-def _cos_np_udf():
-    """Vectorized pairwise cosine: dim-order fold over the product matrix
-    (a09's kernel, hoisted for reuse by a01/a10/a08-family rescoring)."""
-    import numpy as np
-
-    @pandas_udf("double")
-    def _cos_np(
-        qe_s: pd.Series, e_s: pd.Series, qn_s: pd.Series, nrm_s: pd.Series
-    ) -> pd.Series:
-        if not len(qe_s):
-            return pd.Series([], dtype="float64")
-        Q = np.array(qe_s.tolist(), dtype=np.float64)
-        E = np.array(e_s.tolist(), dtype=np.float64)
-        P = Q * E
-        dot = np.zeros(len(P), dtype=np.float64)
-        for d in range(P.shape[1]):  # dim-order fold, HOF parity
-            dot += P[:, d]
-        return pd.Series(dot / (qn_s.to_numpy() * nrm_s.to_numpy()))
-
-    return _cos_np
-
-
-def _collect_rows(cents: DataFrame, cols: tuple[str, ...] = ("c_id", "ce")):
-    """Driver-side materialization of a centroid frame — K rows of 64
-    doubles, driver-small BY DESIGN (the Faiss coarse-quantizer
-    assumption; at 100 TB K is fixed by the index, never ∝ N).  Sorted by
-    c_id so numpy argmin/argmax first-hit tie-breaks to min c_id."""
-    return sorted(
-        (tuple(r[c] for c in cols) for r in cents.collect()), key=lambda t: t[0]
-    )
-
-
-def _assign_np(df: DataFrame, cent_rows, carry: tuple = ()) -> DataFrame:
-    """Nearest centroid by squared euclidean (tie → min c_id) as a NARROW
-    numpy ``mapInPandas`` kernel over driver-collected centroids — the
-    production replacement for the crossJoin+HOF+min_by shape: no join,
-    no shuffle, one fused (B, K) op per dimension.  Output columns
-    (vec_id, e, *carry, c_id, d2) match the HOF ``_assign`` contract.
-
-    Bit-parity: dim-order accumulation == Spark aggregate's left fold;
-    ``np.argmin`` returns the FIRST minimum over columns sorted by c_id,
-    which is exactly ``min_by(struct(d2, c_id))``."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)  # (K, dim)
-    schema = StructType(
-        [StructField("vec_id", LongType()), StructField("e", ArrayType(DoubleType()))]
-        + [StructField(c, DoubleType()) for c in carry]
-        + [StructField("c_id", LongType()), StructField("d2", DoubleType())]
-    )
-
-    def _batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
-            d2 = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                diff = E[:, d, None] - C[None, :, d]
-                d2 += diff * diff
-            out = pdf[["vec_id", "e", *carry]].copy()
-            am = np.argmin(d2, axis=1)
-            out["c_id"] = c_ids[am]
-            out["d2"] = d2[np.arange(len(am)), am]
-            yield out
-
-    return df.select("vec_id", "e", *carry).mapInPandas(_batches, schema)
-
-
-def _assign_cos_np(df: DataFrame, cent_rows) -> DataFrame:
-    """Max-cosine list assignment (tie → min c_id) as the same narrow
-    numpy kernel — a03/a11's sampled-centroid counterpart of
-    ``_assign_np``.  ``cent_rows`` carries (c_id, ce, cn) with cn the
-    premultiplied centroid norm; cosine = dot/(cn·nrm) with the dot
-    accumulated in dim order (HOF fold parity), and ``np.argmax``
-    first-hit over c_id-sorted columns == max_by(struct(a_cos, -c_id))."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)  # (K, dim)
-    cn = np.array([r[2] for r in cent_rows], dtype=np.float64)  # (K,)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("e", ArrayType(DoubleType())),
-            StructField("nrm", DoubleType()),
-            StructField("list_id", LongType()),
-        ]
-    )
-
-    def _batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            dot = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                dot += E[:, d, None] * C[None, :, d]
-            # a_cos = dot / (cn * nrm): same operand order as the HOF
-            # column expression (cn·nrm), then one IEEE division.
-            a_cos = dot / (cn[None, :] * nrm[:, None])
-            out = pdf[["vec_id", "e", "nrm"]].copy()
-            out["list_id"] = c_ids[np.argmax(a_cos, axis=1)]
-            yield out
-
-    return df.select("vec_id", "e", "nrm").mapInPandas(_batches, schema)
+    ).withColumn("nrm", norm_fold("e"))
 
 
 # --- a01: brute-force cosine top-k ----------------------------------------
 def a01_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact top-k.  Round-12 measurement note (guide §1):
-    the numpy pairwise-cosine kernel was tried here and MEASURED SLOWER
-    (0.63 → 1.17 s at sf0.1) — with the query side already broadcast,
-    every candidate pair would ship two 64-d arrays across the Arrow
-    boundary, which costs more than the JVM fold saves at this pair
+    """Brute-force exact top-k.  A numpy pairwise-cosine kernel measured
+    slower here (0.63 → 1.17 s at sf0.1): with the query side already
+    broadcast, every candidate pair would ship two 64-d arrays across the
+    Arrow boundary, which costs more than the JVM fold saves at this pair
     volume.  The interpreted-HOF dot product stays deliberately."""
     prepare(spark)
     emb = _emb(spark, sf_dir)
@@ -204,7 +46,7 @@ def a01_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
     )
     scored = emb.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("q_id"))
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
+    cos = dot_fold("qe", "e") / (F.col("qn") * F.col("nrm"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
     return (
         scored.select("q_id", "vec_id", cos.alias("cos_raw"))
@@ -235,1018 +77,6 @@ ORDER BY q_id, rank
 """
 
 
-# --- a02: LSH-bucketed ANN ------------------------------------------------
-_EMB_DIM = 64  # embeddings table contract (TESTDATA.md)
+ANN_QUERIES = {"a01_ann_bruteforce": a01_ann_bruteforce}
 
-
-def _plane_signs(p: int) -> list[float]:
-    """±1 weight vector for plane p, from md5 parity (odd first hex nibble
-    of md5('p|i') → +1).  The weights are CONSTANTS, so they're computed
-    here once with hashlib (bit-identical to the engines' md5) and embedded
-    as array literals — the previous formulation evaluated md5 inside the
-    zip_with lambda, i.e. planes×dims×rows times."""
-    import hashlib
-
-    return [
-        1.0 if int(hashlib.md5(f"{p}|{i}".encode()).hexdigest()[0], 16) % 2 == 1 else -1.0
-        for i in range(_EMB_DIM)
-    ]
-
-
-def _signature_expr() -> str:
-    """Bucket id: sum over planes of (dot(w_p, e) > 0) << p."""
-    parts = []
-    for p in range(_N_PLANES):
-        w = ", ".join(f"CAST({v} AS DOUBLE)" for v in _plane_signs(p))
-        dot = (
-            f"aggregate(zip_with(e, array({w}), (x, s) -> x * s),"
-            " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        parts.append(f"(CASE WHEN ({dot}) > 0 THEN CAST(1 AS BIGINT) << {p} ELSE 0 END)")
-    return " + ".join(parts)
-
-
-def a02_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    emb = _emb(spark, sf_dir).withColumn("bucket", F.expr(_signature_expr()))
-    queries = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"), F.col("bucket").alias("qb")
-    )
-    cands = emb.join(
-        F.broadcast(queries),
-        (F.col("bucket") == F.col("qb")) & (F.col("vec_id") != F.col("q_id")),
-    )
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
-
-
-def _duck_sig() -> str:
-    parts = []
-    for p in range(_N_PLANES):
-        dot = (
-            "list_aggregate(list_transform(range(1, len(e) + 1),"
-            f" i -> e[i] * (CASE WHEN CAST(concat('0x', substr(md5(concat('{p}|', CAST(i - 1 AS VARCHAR))), 1, 1)) AS INTEGER) % 2 = 1"
-            " THEN 1.0 ELSE -1.0 END)), 'sum')"
-        )
-        parts.append(f"(CASE WHEN ({dot}) > 0 THEN CAST(1 AS BIGINT) << {p} ELSE 0 END)")
-    return " + ".join(parts)
-
-
-A02_SQL = f"""
-WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e, {_duck_sig()} AS bucket
-  FROM embeddings
-),
-q AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM emb WHERE vec_id % {_QUERY_MOD} = 0),
-cands AS (
-  SELECT q.q_id, emb.vec_id, list_cosine_similarity(q.qe, emb.e) AS cos_raw
-  FROM emb JOIN q ON emb.bucket = q.qb AND emb.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, vec_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_raw DESC, vec_id ASC) AS rank
-  FROM cands
-)
-SELECT q_id, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos, rank
-FROM ranked WHERE rank <= {_TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-# --- a03: IVF-Flat ANN ----------------------------------------------------
-_CENT_MOD = 29  # vec_id % 29 == 1 → coarse-centroid set (~N/29 lists)
-_N_PROBE = 3
-
-
-def _ivf_sampled_parts(spark: SparkSession, sf_dir: str):
-    """The nprobe-INDEPENDENT pieces of the sampled-centroid IVF index:
-    (cents, assigned, q).  Shared by a03 (one nprobe) and a11 (the
-    recall-vs-nprobe sweep — assignment is computed once and reused
-    across every nprobe setting, exactly what an operator tuning the
-    index at 100 TB does: the expensive inverted-list build is
-    nprobe-invariant).
-
-    Round 12: the N×K max-cosine assignment runs as the narrow numpy
-    kernel (``_assign_cos_np``) over the driver-collected centroid
-    sample instead of a crossJoin + interpreted-HOF + max_by shuffle —
-    bit-identical doubles (dim-order fold), no join, no exchange on the
-    corpus side; the probe stage still crossJoins the (rebuilt,
-    broadcast) centroid frame, which is K-sized per query."""
-    emb = _emb(spark, sf_dir)
-    cent_rows = _collect_rows(
-        emb.filter(F.col("vec_id") % _CENT_MOD == 1).select(
-            F.col("vec_id").alias("c_id"),
-            F.col("e").alias("ce"),
-            F.col("nrm").alias("cn"),
-        ),
-        cols=("c_id", "ce", "cn"),
-    )
-    cents = local_frame(
-        spark,
-        [(int(c), list(ce), float(n)) for c, ce, n in cent_rows],
-        "c_id long, ce array<double>, cn double",
-    )
-    assigned = _assign_cos_np(emb, cent_rows)
-    q = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    return cents, assigned, q
-
-
-def _ivf_topk_from(cents, assigned, q, nprobe: int) -> DataFrame:
-    """Probe + candidate-rescore + top-k for one nprobe setting over a
-    prebuilt sampled-centroid index (see _ivf_sampled_parts)."""
-    wq = Window.partitionBy("q_id").orderBy(F.desc("p_cos"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "qe", "qn", "c_id",
-            (_dot_expr("ce", "qe") / (F.col("cn") * F.col("qn"))).alias("p_cos"),
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
-    )
-    cands = assigned.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    return (
-        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-    )
-
-
-def a03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat: sampled coarse centroids → inverted-list assignment →
-    probe the query's ``_N_PROBE`` nearest lists → exact cosine on
-    candidates only (Jégou et al., PAMI 2011 — the Faiss IVF scheme).
-
-    Centroids are a deterministic sample (``vec_id % 29 == 1``) instead of
-    k-means iterations so the DuckDB oracle can rebuild the identical
-    index; in production the sample would be replaced by a k-means|| pass
-    (still driver-small, still broadcast).
-
-    Scale shape: assignment is a broadcast nested-loop over N×K with a
-    map-side partial ``max_by`` (shuffle carries ONE row per vector, not
-    K); the candidate join broadcasts (query, probed-list) pairs, so the
-    big side never shuffles; only candidates (≈ N·nprobe/nlist per query)
-    reach the final top-k window."""
-    prepare(spark)
-    cents, assigned, q = _ivf_sampled_parts(spark, sf_dir)
-    return _ivf_topk_from(cents, assigned, q, _N_PROBE).orderBy("q_id", "rank")
-
-
-def _ivf_sql(nprobe: int) -> str:
-    """DuckDB replay of the sampled-centroid IVF index at a given nprobe
-    (a03 uses _N_PROBE; a11 sweeps 1/2/4/8)."""
-    return f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-cents AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id % {_CENT_MOD} = 1),
-assigned AS (
-  SELECT vec_id, e, c_id AS list_id FROM (
-    SELECT emb.vec_id, emb.e, cents.c_id,
-           ROW_NUMBER() OVER (PARTITION BY emb.vec_id
-                              ORDER BY list_cosine_similarity(cents.ce, emb.e) DESC,
-                                       cents.c_id ASC) AS r
-    FROM emb CROSS JOIN cents
-  ) WHERE r = 1
-),
-q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id % {_QUERY_MOD} = 0),
-probes AS (
-  SELECT q_id, qe, c_id AS list_id FROM (
-    SELECT q.q_id, q.qe, cents.c_id,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id
-                              ORDER BY list_cosine_similarity(cents.ce, q.qe) DESC,
-                                       cents.c_id ASC) AS pr
-    FROM q CROSS JOIN cents
-  ) WHERE pr <= {nprobe}
-),
-cands AS (
-  SELECT probes.q_id, assigned.vec_id,
-         list_cosine_similarity(probes.qe, assigned.e) AS cos_raw
-  FROM assigned JOIN probes USING (list_id)
-  WHERE assigned.vec_id <> probes.q_id
-),
-ranked AS (
-  SELECT q_id, vec_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_raw DESC, vec_id ASC) AS rank
-  FROM cands
-)
-SELECT q_id, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos, rank
-FROM ranked WHERE rank <= {_TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-A03_SQL = _ivf_sql(_N_PROBE)
-
-
-# --- a04: recall of the IVF index against exact ground truth --------------
-def a04_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of a03 (IVF) measured against a01 (exact brute force) —
-    the measurement loop an ANN deployment runs when tuning
-    nlist/nprobe.  Ground truth and index results are both DataFrames, so
-    the comparison is one tiny join; both pipelines execute distributed."""
-    prepare(spark)
-    exact = a01_ann_bruteforce(spark, sf_dir).select("q_id", "neighbor_id")
-    ivf = a03_ann_ivf(spark, sf_dir).select(
-        F.col("q_id").alias("iq"), F.col("neighbor_id").alias("inb")
-    )
-    return (
-        exact.join(
-            ivf,
-            (F.col("q_id") == F.col("iq")) & (F.col("neighbor_id") == F.col("inb")),
-            "left",
-        )
-        .groupBy("q_id")
-        .agg(
-            F.count("inb").alias("n_matched"),
-            F.round(F.count("inb") / float(_TOP_K), 4).alias("recall"),
-        )
-        .orderBy("q_id")
-    )
-
-
-A04_SQL = f"""
-WITH exact AS ({A01_SQL}),
-ivf AS ({A03_SQL})
-SELECT exact.q_id, COUNT(ivf.neighbor_id) AS n_matched,
-       ROUND(COUNT(ivf.neighbor_id) / {float(_TOP_K)}, 4) AS recall
-FROM exact LEFT JOIN ivf
-  ON exact.q_id = ivf.q_id AND exact.neighbor_id = ivf.neighbor_id
-GROUP BY exact.q_id ORDER BY exact.q_id
-"""
-
-
-# --- a05: label-centroid cohesion -----------------------------------------
-def a05_label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid (element-wise mean, assembled back into an array
-    via sort-by-dimension) and mean member→centroid cosine — the cluster-
-    cohesion statistic an embedding pipeline monitors.  Centroid
-    components are rounded to 4 dp BEFORE the cosine so both engines run
-    the cosine over identical doubles.  Scale: one (label, dim) shuffle
-    with map-side partial averaging, centroids broadcast back."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir)
-    dims = emb.select("label", F.posexplode("e").alias("dim", "x"))
-    cent = (
-        dims.groupBy("label", "dim")
-        .agg(F.round(F.avg("x"), 4).alias("cx"))
-        .groupBy("label")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim, cx))), s -> s.cx)"
-            ).alias("ce")
-        )
-    )
-    joined = emb.join(F.broadcast(cent), "label")
-    cos = _cosine_expr("e", "ce")
-    return (
-        joined.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(F.avg(cos), 4).alias("avg_cohesion"),
-        )
-        .orderBy("label")
-    )
-
-
-A05_SQL = """
-WITH emb AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-dims AS (
-  SELECT label, u.i - 1 AS dim, e[u.i] AS x
-  FROM emb, unnest(range(1, len(e) + 1)) AS u(i)
-),
-cent AS (
-  SELECT label, list(cx ORDER BY dim) AS ce
-  FROM (SELECT label, dim, ROUND(AVG(x), 4) AS cx FROM dims GROUP BY label, dim)
-  GROUP BY label
-)
-SELECT emb.label, COUNT(*) AS n_vecs,
-       ROUND(AVG(list_cosine_similarity(emb.e, cent.ce)), 4) AS avg_cohesion
-FROM emb JOIN cent ON emb.label = cent.label
-GROUP BY emb.label ORDER BY emb.label
-"""
-
-
-# --- a06: distributed k-means (two Lloyd iterations) -----------------------
-_KM_SEED_MOD = 29  # same deterministic seed set as a03's centroids
-_KM_ITERS = 2
-
-
-def _round_half_up_4(x: float) -> float:
-    """Spark's ``round(x, 4)`` over a DOUBLE, replicated exactly:
-    ``BigDecimal.valueOf(x)`` parses ``Double.toString(x)`` (the shortest
-    round-trip decimal — what Python's ``repr`` also produces) and
-    ``setScale(4, HALF_UP)`` rounds half away from zero, which is
-    ``decimal.ROUND_HALF_UP``.  Used by the driver-side Lloyd average so
-    the trained centroids are bit-identical to the Spark-side
-    ``round(avg(x), 4)`` they replace."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
-
-
-def _lloyd_partial_rows(df: DataFrame, cent_rows):
-    """One Lloyd refinement step as a SINGLE-STAGE job: the numpy
-    assignment kernel (same dim-order fold as ``_assign_np``) also
-    accumulates per-batch partial (count, per-dim sum) for each centroid
-    and the driver finishes the K-sized average.
-
-    Round 13 (guide §1.2): the r12 shape per iteration was assignment →
-    posexplode (64× row inflation) → groupBy(c_id, dim) partial-avg →
-    exchange → final-avg → collect.  Profiled at sf0.1, the per-
-    iteration cost was PLAN work, not data work (first collect 0.46 s,
-    re-collect of the same frame 0.09 s) — each iteration builds and
-    analyzes a fresh two-stage aggregate plan.  The fused kernel emits
-    ≤K proxy rows per batch (c_id, cnt, 64 sums), the job is one stage
-    with no exchange, and the plan is scan → mapInPandas — at 100 TB
-    this also removes a corpus-scale 64×-inflated explode feeding the
-    partial agg (§2.3 aggregate-before-shuffle, one level earlier).
-
-    Sum-order note: within a batch ``np.add.at`` accumulates rows in
-    order (the same row-order partials Spark's hash aggregate computes
-    per partition); the driver merges batch partials in collect order.
-    The merge association differs from Spark's (already
-    non-deterministic) reduce-side arrival order — the 4-dp rounding
-    between iterations is the designed stability boundary, and the
-    trained centroids are verified bit-equal to the r12 path at
-    sf0.001/0.01/0.1 (tests/test_r13_optimizations.py)."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)  # (K, dim)
-    schema = StructType(
-        [
-            StructField("c_id", LongType()),
-            StructField("cnt", LongType()),
-            StructField("s", ArrayType(DoubleType())),
-        ]
-    )
-
-    def _batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
-            d2 = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                diff = E[:, d, None] - C[None, :, d]
-                d2 += diff * diff
-            am = np.argmin(d2, axis=1)
-            sums = np.zeros((len(c_ids), E.shape[1]), dtype=np.float64)
-            np.add.at(sums, am, E)  # row-order accumulation per cluster
-            cnt = np.bincount(am, minlength=len(c_ids))
-            present = np.flatnonzero(cnt)
-            yield pd.DataFrame(
-                {
-                    "c_id": c_ids[present],
-                    "cnt": cnt[present],
-                    "s": [sums[i].tolist() for i in present],
-                }
-            )
-
-    return df.select("e").mapInPandas(_batches, schema).collect()
-
-
-def _trained_centroid_rows(emb: DataFrame, train: DataFrame | None = None):
-    """Two rounded Lloyd iterations from the deterministic seed sample —
-    shared by a06 (reports cluster stats) and a08/a09/a12 (use the
-    centroids as an IVF coarse quantizer).  Rounding to 4 dp between
-    iterations is what lets the DuckDB oracle replay training
-    bit-for-bit.
-
-    ``train`` restricts the Lloyd refinement passes to a sample (a12) —
-    seeds still come from ``emb`` so K matches a08's index; only the
-    per-iteration assignment cost shrinks with the sample.
-
-    Round 12 replaced the crossJoin + interpreted-HOF assignment with
-    the narrow numpy kernel; round 13 fuses the (cluster, dim)
-    partial-sum into the SAME kernel (``_lloyd_partial_rows``), so each
-    iteration is one single-stage job with no exchange and the driver
-    finishes the K-sized average (bit-equal to the replaced
-    ``round(avg(x), 4)`` — verified at three SFs, pinned by
-    tests/test_r13_optimizations.py).  Per iteration the corpus pays
-    ONE narrow pass, full stop — no posexplode inflation, no shuffle.
-
-    Returns the trained centroids as driver rows
-    ``[(c_id, (ce_0, …, ce_63)), …]`` sorted by c_id."""
-    if train is None:
-        train = emb
-    cent_rows = _collect_rows(
-        emb.filter(F.col("vec_id") % _KM_SEED_MOD == 1).select(
-            F.col("vec_id").alias("c_id"), F.col("e").alias("ce")
-        )
-    )
-    for _ in range(_KM_ITERS):
-        # Round 13: single-stage fused assign+partial-sum kernel — see
-        # _lloyd_partial_rows (was: _assign_np → posexplode → groupBy
-        # (c_id, dim) → round(avg) → collect, a two-stage plan analyzed
-        # fresh per iteration).
-        sums: dict = {}
-        cnts: dict = {}
-        for r in _lloyd_partial_rows(train, cent_rows):
-            c = r["c_id"]
-            if c in sums:
-                s = sums[c]
-                for i, v in enumerate(r["s"]):
-                    s[i] += v
-                cnts[c] += r["cnt"]
-            else:
-                sums[c] = list(r["s"])
-                cnts[c] = r["cnt"]
-        cent_rows = sorted(
-            (c, tuple(_round_half_up_4(v / cnts[c]) for v in s))
-            for c, s in sums.items()
-        )
-    return cent_rows
-
-
-def _cents_df(spark: SparkSession, cent_rows) -> DataFrame:
-    """K-row centroid frame rebuilt from driver rows (for the broadcast
-    probe joins — same shape the HOF pipeline produced)."""
-    return local_frame(
-        spark, [(int(c), list(ce)) for c, ce in cent_rows], "c_id long, ce array<double>"
-    )
-
-
-def a06_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two Lloyd iterations of distributed k-means over the embeddings
-    (the k-means|| refinement pass a03's sampled-centroid IVF would use in
-    production).  Deterministic end-to-end: seeds are the fixed sample
-    (``vec_id % {_KM_SEED_MOD} == 1``), and recomputed centroids are
-    ROUNDED to 4 dp before the next assignment, so the DuckDB oracle can
-    replay both steps bit-for-bit.  Per iteration: one broadcast
-    assignment (no shuffle of the corpus) + one (cluster, dim) partial-avg
-    shuffle.  Output: final cluster sizes and inertia."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir).select("vec_id", "e")
-    cents = _trained_centroid_rows(emb)
-    # Final stats against the *last recomputed* centroids.
-    final = _assign_np(emb, cents)
-    return (
-        final.groupBy(F.col("c_id").alias("cluster"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.round(F.sum("d2"), 2).alias("inertia"),
-        )
-        .orderBy("cluster")
-    )
-
-
-def _km_sql() -> str:
-    assign = """
-  SELECT vec_id, e, c_id, d2 FROM (
-    SELECT emb.vec_id, emb.e, c.c_id,
-           list_aggregate(list_transform(range(1, len(emb.e) + 1),
-                          i -> (emb.e[i] - c.ce[i]) * (emb.e[i] - c.ce[i])), 'sum') AS d2,
-           ROW_NUMBER() OVER (PARTITION BY emb.vec_id ORDER BY
-             list_aggregate(list_transform(range(1, len(emb.e) + 1),
-                            i -> (emb.e[i] - c.ce[i]) * (emb.e[i] - c.ce[i])), 'sum') ASC,
-             c.c_id ASC) AS r
-    FROM emb CROSS JOIN {cents} c
-  ) WHERE r = 1
-"""
-    recompute = """
-  SELECT c_id, list(cx ORDER BY dim) AS ce FROM (
-    SELECT c_id, u.i - 1 AS dim, ROUND(AVG(e[u.i]), 4) AS cx
-    FROM {assigned}, unnest(range(1, len(e) + 1)) AS u(i)
-    GROUP BY c_id, u.i
-  ) GROUP BY c_id
-"""
-    return f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-seeds AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id % {_KM_SEED_MOD} = 1),
-a1 AS ({assign.format(cents="seeds")}),
-c1 AS ({recompute.format(assigned="a1")}),
-a2 AS ({assign.format(cents="c1")}),
-c2 AS ({recompute.format(assigned="a2")}),
-fin AS ({assign.format(cents="c2")})
-SELECT c_id AS cluster, COUNT(*) AS n_members, ROUND(SUM(d2), 2) AS inertia
-FROM fin GROUP BY c_id ORDER BY cluster
-"""
-
-
-A06_SQL = _km_sql()
-
-
-# --- a08: IVF-Flat with a TRAINED coarse quantizer ------------------------
-def a08_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """a03's IVF with the production index: coarse centroids come from the
-    distributed k-means pass (a06's two rounded Lloyd iterations) instead
-    of a deterministic sample — the full Faiss-style train → assign →
-    probe → rescore pipeline, every stage oracle-replayed in DuckDB.
-
-    Scale shape mirrors a03 (assignment runs as the narrow numpy kernel,
-    probing broadcasts the centroid set; only candidates reach the top-k
-    window) plus the training cost: per iteration one narrow assignment
-    pass and one (cluster, dim) partial-avg shuffle.  Train on a sample
-    at 100 TB — centroid quality doesn't need every vector, assignment
-    does."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir)
-    # Trained once, driver-held (K-sized): both the inverted-list
-    # assignment kernel and the query probes read the same rows — the
-    # round-11 localCheckpoint dance is unnecessary now that training
-    # materializes through its per-iteration collects.
-    cents = _trained_centroid_rows(emb.select("vec_id", "e"))
-    return _ivf_probe_rescore(emb, cents)
-
-
-def _ivf_probe_rescore(emb: DataFrame, cent_rows) -> DataFrame:
-    """The index-build → probe → exact-rescore tail shared by a08 and a12
-    (identical for any trained centroid set): full-corpus inverted-list
-    assignment (numpy kernel, narrow), per-query top-``_N_PROBE`` lists,
-    exact cosine on candidates only."""
-    cents = _cents_df(emb.sparkSession, cent_rows)
-    inv = _assign_np(emb, cent_rows, carry=("nrm",)).select(
-        "vec_id", "e", "nrm", F.col("c_id").alias("list_id")
-    )
-    q = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    # Probe by the same L2 metric the quantizer was trained with.
-    qd2 = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.asc("qd2"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("q_id", "qe", "qn", "c_id", qd2.alias("qd2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= _N_PROBE)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
-    )
-    cands = inv.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
-
-
-def _ivf_trained_sql(train_where: str = "") -> str:
-    """a08's oracle; with ``train_where`` the two Lloyd refinement passes
-    run over that sample of ``emb`` (a12) while seeds and the final
-    inverted-list assignment stay full-corpus."""
-    assign = """
-  SELECT vec_id, e, c_id, d2 FROM (
-    SELECT emb.vec_id, emb.e, c.c_id,
-           list_aggregate(list_transform(range(1, len(emb.e) + 1),
-                          i -> (emb.e[i] - c.ce[i]) * (emb.e[i] - c.ce[i])), 'sum') AS d2,
-           ROW_NUMBER() OVER (PARTITION BY emb.vec_id ORDER BY
-             list_aggregate(list_transform(range(1, len(emb.e) + 1),
-                            i -> (emb.e[i] - c.ce[i]) * (emb.e[i] - c.ce[i])), 'sum') ASC,
-             c.c_id ASC) AS r
-    FROM {src} AS emb CROSS JOIN {cents} c
-  ) WHERE r = 1
-"""
-    recompute = """
-  SELECT c_id, list(cx ORDER BY dim) AS ce FROM (
-    SELECT c_id, u.i - 1 AS dim, ROUND(AVG(e[u.i]), 4) AS cx
-    FROM {assigned}, unnest(range(1, len(e) + 1)) AS u(i)
-    GROUP BY c_id, u.i
-  ) GROUP BY c_id
-"""
-    train_cte = (
-        f"train AS (SELECT vec_id, e FROM emb WHERE {train_where}),\n"
-        if train_where
-        else ""
-    )
-    tsrc = "train" if train_where else "emb"
-    return f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-{train_cte}seeds AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id % {_KM_SEED_MOD} = 1),
-a1 AS ({assign.format(src=tsrc, cents="seeds")}),
-c1 AS ({recompute.format(assigned="a1")}),
-a2 AS ({assign.format(src=tsrc, cents="c1")}),
-c2 AS ({recompute.format(assigned="a2")}),
-inv AS (SELECT vec_id, e, c_id AS list_id FROM ({assign.format(src="emb", cents="c2")})),
-q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id % {_QUERY_MOD} = 0),
-probes AS (
-  SELECT q_id, list_id FROM (
-    SELECT q.q_id, c.c_id AS list_id,
-           ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-             list_aggregate(list_transform(range(1, len(q.qe) + 1),
-                            i -> (q.qe[i] - c.ce[i]) * (q.qe[i] - c.ce[i])), 'sum') ASC,
-             c.c_id ASC) AS pr
-    FROM q CROSS JOIN c2 c
-  ) WHERE pr <= {_N_PROBE}
-),
-cands AS (
-  SELECT q.q_id, inv.vec_id, list_cosine_similarity(q.qe, inv.e) AS cos_raw
-  FROM inv JOIN probes p ON inv.list_id = p.list_id
-           JOIN q ON q.q_id = p.q_id
-  WHERE inv.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, vec_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_raw DESC, vec_id ASC) AS rank
-  FROM cands
-)
-SELECT q_id, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos, rank
-FROM ranked WHERE rank <= {_TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-A08_SQL = _ivf_trained_sql()
-
-
-# --- a09: IVF with a vectorized numpy assignment kernel (production path) --
-def a09_ivf_np_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """a08's trained IVF with the PRODUCTION hot-path kernels: the N×K
-    centroid assignment and the candidate cosine rescoring run as
-    Arrow-batched numpy inside ``mapInPandas``/``pandas_udf`` instead of
-    interpreted ``zip_with``/``aggregate`` higher-order functions.  At
-    100 TB the assignment kernel dominates IVF cost and interpreted HOFs
-    evaluate a closure per element — the numpy kernel does the same math
-    as one vectorized op per dimension (~10-50× per vector; measured
-    side-by-side with a08 in bench.py).
-
-    Bit-parity with a08 (and therefore with a08's DuckDB oracle, reused
-    verbatim): accumulation loops over DIMENSIONS in array order (one
-    vectorized (rows × centroids) op per dim), which is the same
-    sequential left fold Spark's ``aggregate`` performs — so distances,
-    cosines, tie-breaks, and hence the final top-k are IDENTICAL doubles,
-    not merely close.  Centroids are collected to the driver and shipped
-    in the kernel closure — the coarse quantizer is driver-small BY
-    DESIGN (Faiss's assumption too); at 100 TB train fixed-K on a
-    sample, never K ∝ N."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir)
-    # Train ONCE: the trained centroids are driver rows (K-sized), feeding
-    # both the assignment kernel closure and the probe join — referencing
-    # a training DataFrame twice would re-run both Lloyd iterations per
-    # consumer.  (Round 12: training itself now runs the same numpy
-    # assignment kernel — see _trained_centroid_rows.)
-    cent_rows = _trained_centroid_rows(emb.select("vec_id", "e"))
-    cents = _cents_df(spark, cent_rows)
-
-    inv = _assign_np(emb, cent_rows, carry=("nrm",)).select(
-        "vec_id", "e", "nrm", F.col("c_id").alias("list_id")
-    )
-
-    q = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    # Probing is K-sized per query — not the hot path; keep a08's plan.
-    qd2 = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.asc("qd2"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("q_id", "qe", "qn", "c_id", qd2.alias("qd2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= _N_PROBE)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
-    )
-    cands = inv.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    _cos_np = _cos_np_udf()
-    return (
-        cands.select("q_id", "vec_id", _cos_np("qe", "e", "qn", "nrm").alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
-
-
-# --- a07: int8 embedding quantization (storage-compression path) ----------
-def a07_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric per-vector int8 quantization: scale = max|x| / 127,
-    q_i = floor(x_i / scale + 0.5) (explicit half-up — Spark round() and
-    DuckDB round() disagree on ties, floor(+0.5) does not), dequantized
-    error aggregated per label.  The 100 TB story: int8 cuts embedding
-    storage 4× and the scan bandwidth with it; this query measures the
-    reconstruction error that costs.  Per-vector max-error is
-    order-independent; the per-label mean goes through DECIMAL so the
-    aggregate matches the oracle bit-for-bit."""
-    prepare(spark)
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    q = emb.select(
-        "vec_id",
-        "label",
-        F.expr("aggregate(transform(e, x -> abs(x)), CAST(0.0 AS DOUBLE), (a, v) -> greatest(a, v)) / 127.0").alias(
-            "scale"
-        ),
-        "e",
-    ).select(
-        "vec_id",
-        "label",
-        F.expr(
-            "aggregate(transform(e, x -> abs(floor(x / scale + 0.5) * scale - x)),"
-            " CAST(0.0 AS DOUBLE), (a, v) -> greatest(a, v))"
-        ).alias("max_err"),
-    )
-    return (
-        q.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(
-                (
-                    F.sum(F.col("max_err").cast("decimal(18,12)")).cast("double")
-                    / F.count(F.lit(1))
-                ),
-                8,
-            ).alias("mean_max_err"),
-            F.round(F.max("max_err"), 8).alias("worst_err"),
-        )
-        .orderBy("label")
-    )
-
-
-A07_SQL = """
-WITH emb AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-scaled AS (
-  SELECT vec_id, label,
-         list_max(list_transform(e, x -> abs(x))) / 127.0 AS scale, e
-  FROM emb
-),
-errs AS (
-  SELECT vec_id, label,
-         list_max(list_transform(e, x -> abs(floor(x / scale + 0.5) * scale - x)))
-           AS max_err
-  FROM scaled
-)
-SELECT label, COUNT(*) AS n_vecs,
-       ROUND(CAST(SUM(CAST(max_err AS DECIMAL(18,12))) AS DOUBLE) / COUNT(*), 8)
-         AS mean_max_err,
-       ROUND(MAX(max_err), 8) AS worst_err
-FROM errs GROUP BY label ORDER BY label
-"""
-
-
-# --- a10: cosine range search (threshold, not top-k) -----------------------
-_RANGE_TAU = 0.25
-
-
-def a10_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range search — "everything within cosine ≥ τ of each query" — the
-    retrieval primitive top-k (a01) cannot express: near-duplicate
-    harvesting and contamination sweeps need ALL matches above a floor,
-    not a fixed k.  The threshold is applied to the ROUND(cos, 4) value,
-    which a01's hash-green oracle already proves bit-stable across
-    engines — filtering on the raw double would let a last-ulp divergence
-    flip boundary pairs.  Output is one summary row per query (match
-    count + rounded extremes), so result size is bounded by the query set
-    even when a query matches half the corpus.
-
-    Scale: same broadcast shape as a01 (query side broadcast, corpus side
-    never shuffles for the join); at 100 TB swap the cross join for the
-    a02/a03 candidate generators and keep this thresholding stage as-is."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    scored = emb.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("q_id"))
-    # HOF dot kept deliberately — the numpy kernel measured slower here
-    # (0.64 → 0.75 s), same Arrow-transfer argument as a01.
-    cos = F.round(_dot_expr("qe", "e") / (F.col("qn") * F.col("nrm")), 4)
-    return (
-        scored.select("q_id", cos.alias("cos"))
-        .filter(F.col("cos") >= _RANGE_TAU)
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.max("cos").alias("best_cos"),
-            F.min("cos").alias("worst_cos"),
-        )
-        .orderBy("q_id")
-    )
-
-
-A10_SQL = f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id % {_QUERY_MOD} = 0),
-scored AS (
-  SELECT q.q_id, ROUND(list_cosine_similarity(q.qe, emb.e), 4) AS cos
-  FROM emb, q WHERE emb.vec_id <> q.q_id
-)
-SELECT q_id, COUNT(*) AS n_matches, MAX(cos) AS best_cos, MIN(cos) AS worst_cos
-FROM scored WHERE cos >= {_RANGE_TAU}
-GROUP BY q_id ORDER BY q_id
-"""
-
-
-# --- a11: recall-vs-cost curve for the IVF index ---------------------------
-_A11_NPROBES = (1, 2, 4, 8)
-
-
-def a11_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tuning curve an ANN operator actually reads at 100 TB (VERDICT
-    r4 next-round #6): recall@{_TOP_K} of the IVF index against a01 exact
-    ground truth, swept over nprobe ∈ {_A11_NPROBES}.  a04 proves recall
-    for ONE configuration; this entry produces the whole cost/recall
-    trade-off in a single distributed query.
-
-    Scale shape: the expensive, nprobe-INVARIANT work — exact ground
-    truth and the inverted-list assignment — is computed once and
-    ``localCheckpoint``ed (ground truth is queries×k rows; assignment is
-    corpus-sized, the same materialize-once trade a08 makes for its
-    centroids).  Each nprobe branch then only re-probes (tiny broadcast)
-    and re-ranks candidates, and the four branch outputs are one-row
-    aggregates unioned together.  Oracle: DuckDB rebuilds the identical
-    index per nprobe — fully computed, no pinned constants."""
-    prepare(spark)
-    # Round 13: the exact ground truth is consumed exactly once (the final
-    # left join), so the eager checkpoint + the separate distinct-count
-    # job bought nothing — the n_q recall denominator folds into the
-    # final aggregate as countDistinct(q_id) (every exact row survives a
-    # left join, so the per-nprobe distinct q_id set IS the query set).
-    # Two driver actions fewer per invocation; results bit-identical
-    # (measured, and the oracle recomputes the same denominator).
-    exact = a01_ann_bruteforce(spark, sf_dir).select("q_id", "neighbor_id")
-    cents, assigned, q = _ivf_sampled_parts(spark, sf_dir)
-    # No eager checkpoint of the assignment (round 13): the r12 fused
-    # sweep left it exactly ONE consumer (the candidate join), so the
-    # materialize-once trade no longer applies — inlining drops one
-    # driver action per invocation (identical results, measured).
-    # Round 12 (guide §2.4): ONE candidate/rescore pass at max(nprobe)
-    # replaces the four per-nprobe branch subtrees (4× probe windows,
-    # 4× candidate joins, 4× rescores, 4 joins against ground truth).
-    # Each candidate carries its list's probe rank ``pr``; membership in
-    # the nprobe-branch is exactly ``pr <= nprobe`` (identical candidate
-    # sets — each vector lives in ONE list, and the probe ranking is the
-    # branch-invariant part), so exploding the candidate by the nprobe
-    # settings and ranking per (nprobe, q_id) reproduces every branch's
-    # top-k bit-for-bit from a single pipeline.
-    max_np = max(_A11_NPROBES)
-    wq = Window.partitionBy("q_id").orderBy(F.desc("p_cos"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "qe", "qn", "c_id",
-            (_dot_expr("ce", "qe") / (F.col("cn") * F.col("qn"))).alias("p_cos"),
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= max_np)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"), "pr")
-    )
-    cands = assigned.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    np_arr = F.array(*[F.lit(n) for n in _A11_NPROBES])
-    branched = (
-        cands.select("q_id", "vec_id", "pr", cos.alias("cos_raw"))
-        .select("q_id", "vec_id", "pr", "cos_raw", F.explode(np_arr).alias("nprobe"))
-        .filter(F.col("pr") <= F.col("nprobe"))
-    )
-    w = Window.partitionBy("nprobe", "q_id").orderBy(
-        F.desc("cos_raw"), F.asc("vec_id")
-    )
-    ivf = (
-        branched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            F.col("nprobe").alias("inp"),
-            F.col("q_id").alias("iq"),
-            F.col("vec_id").alias("inb"),
-        )
-    )
-    exact_np = exact.select("q_id", "neighbor_id", F.explode(np_arr).alias("nprobe"))
-    return (
-        exact_np.join(
-            ivf,
-            (F.col("nprobe") == F.col("inp"))
-            & (F.col("q_id") == F.col("iq"))
-            & (F.col("neighbor_id") == F.col("inb")),
-            "left",
-        )
-        .groupBy("nprobe")
-        .agg(
-            F.count("inb").alias("n_matched"),
-            F.round(
-                F.count("inb") / (F.countDistinct("q_id") * float(_TOP_K)), 4
-            ).alias("mean_recall"),
-        )
-        .orderBy("nprobe")
-    )
-
-
-def _a11_sql() -> str:
-    branches = []
-    for nprobe in _A11_NPROBES:
-        branches.append(f"""
-SELECT {nprobe} AS nprobe, COUNT(ivf.neighbor_id) AS n_matched,
-       ROUND(COUNT(ivf.neighbor_id) /
-             (COUNT(DISTINCT exact.q_id) * {float(_TOP_K)}), 4) AS mean_recall
-FROM ({A01_SQL}) exact
-LEFT JOIN ({_ivf_sql(nprobe)}) ivf
-  ON exact.q_id = ivf.q_id AND exact.neighbor_id = ivf.neighbor_id
-""")
-    return " UNION ALL ".join(branches) + " ORDER BY nprobe"
-
-
-A11_SQL = _a11_sql()
-
-
-# --- a12: IVF trained on a sample (the 100 TB training-cost fix) -----------
-_TRAIN_MOD = 4  # vec_id % 4 == 1 → Lloyd refinement sample (~25% of corpus)
-
-
-def a12_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """a08's trained IVF with SAMPLED Lloyd refinement — the training-cost
-    fix SCALING.md prescribes for real scale (VERDICT r7 next-round #6):
-    centroid quality doesn't need every vector, assignment does.  Seeds
-    match a08's exact deterministic set (a seed whose sampled cell comes up
-    empty is dropped by the refinement groupBy, so K can shrink on
-    pathological samples — the oracle mirrors the same drop, and on the
-    driver data every seed attracts sample vectors), but each iteration's
-    broadcast-assignment pass runs over only ``vec_id % {mod} == 1`` (~25%)
-    — at sf1 that is the dominant a08 cost (two full-corpus passes), so
-    training drops ~4× while the index/probe/rescore tail is identical in
-    shape and plan to a08.  At 100 TB the sample is a fixed-size frame and
-    training cost decouples from corpus size entirely.
-
-    Deterministic end-to-end (fixed sample + 4 dp centroid rounding), so
-    the DuckDB oracle replays sampled training bit-for-bit — assignment
-    exactness on the trained centroids, same oracle pattern as a08."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir)
-    train = emb.select("vec_id", "e").filter(F.col("vec_id") % _TRAIN_MOD == 1)
-    cents = _trained_centroid_rows(emb.select("vec_id", "e"), train=train)
-    return _ivf_probe_rescore(emb, cents)
-
-
-A12_SQL = _ivf_trained_sql(train_where=f"vec_id % {_TRAIN_MOD} = 1")
-
-
-ANN_QUERIES = {
-    "a01_ann_bruteforce": a01_ann_bruteforce,
-    "a02_ann_lsh": a02_ann_lsh,
-    "a03_ann_ivf": a03_ann_ivf,
-    "a04_ann_recall": a04_ann_recall,
-    "a05_label_centroid_cohesion": a05_label_centroid_cohesion,
-    "a06_kmeans_lloyd": a06_kmeans_lloyd,
-    "a07_int8_quantization": a07_int8_quantization,
-    "a08_ivf_trained": a08_ivf_trained,
-    "a09_ivf_np_kernel": a09_ivf_np_kernel,
-    "a10_range_search": a10_range_search,
-    # Append-only (DRIVER_GATED_50 contract): new entries go at the END.
-    "a11_recall_curve": a11_recall_curve,
-    "a12_ivf_sampled_train": a12_ivf_sampled_train,
-}
-
-ANN_ORACLES = {
-    "a01_ann_bruteforce": A01_SQL,
-    "a02_ann_lsh": A02_SQL,
-    "a03_ann_ivf": A03_SQL,
-    "a04_ann_recall": A04_SQL,
-    "a05_label_centroid_cohesion": A05_SQL,
-    "a06_kmeans_lloyd": A06_SQL,
-    "a07_int8_quantization": A07_SQL,
-    "a08_ivf_trained": A08_SQL,
-    # a09 computes the same index with numpy kernels — bit-identical to a08,
-    # so it is gated by the SAME oracle.
-    "a09_ivf_np_kernel": A08_SQL,
-    "a10_range_search": A10_SQL,
-    "a11_recall_curve": A11_SQL,
-    "a12_ivf_sampled_train": A12_SQL,
-}
+ANN_ORACLES = {"a01_ann_bruteforce": A01_SQL}

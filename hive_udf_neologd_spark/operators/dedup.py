@@ -482,20 +482,24 @@ ORDER BY id_a, id_b
 _COS_THRESHOLD = 0.999
 
 
-def _cosine_expr(a: str, b: str) -> F.Column:
-    """Cosine over array<double> via zip_with + aggregate — all JVM-side
-    builtins, sequential left-fold (bit-compatible with DuckDB's list
-    kernels)."""
-    dot = F.expr(
+def dot_fold(a: str, b: str) -> F.Column:
+    """Dot product of two array<double> columns as a sequential left fold
+    (zip_with + aggregate, JVM-side builtins), bit-compatible with DuckDB's
+    list kernels."""
+    return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-    na = F.expr(
+
+
+def norm_fold(a: str) -> F.Column:
+    """Euclidean norm of an array<double> column, folded like ``dot_fold``."""
+    return F.expr(
         f"sqrt(aggregate(transform({a}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
     )
-    nb = F.expr(
-        f"sqrt(aggregate(transform({b}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-    )
-    return dot / (na * nb)
+
+
+def _cosine_expr(a: str, b: str) -> F.Column:
+    return dot_fold(a, b) / (norm_fold(a) * norm_fold(b))
 
 
 _D6_DIM = 64  # embeddings table contract (TESTDATA.md)
@@ -507,9 +511,9 @@ _D6_BAND_BITS = _D6_PLANES // _D6_BANDS
 
 
 def _d6_plane_signs(p: int) -> list[float]:
-    """±1 hyperplane weights from md5 parity — constants computed once here
-    (hashlib) and embedded as array literals, same scheme as a02's planes
-    (ann.py) but an independent salt so the two indexes stay decoupled."""
+    """±1 hyperplane weights from md5 parity (random-hyperplane LSH,
+    Charikar '02) — deterministic constants computed once here (hashlib),
+    salted with "d6", that ``_d6_bands_np`` uses as its weight matrix."""
     import hashlib
 
     return [

@@ -189,7 +189,6 @@ def t04_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB round() disagree on exact .00005 ties (caught by the sf1
     # sweep — doc 5's replicas land the quality sum on 0.72125), while
     # floor(+0.5) over the identically-computed double is engine-exact.
-    # Same pinning as a07's quantizer (ann.py).
     def r4(c):
         return F.floor(c * 10000.0 + F.lit(0.5)) / 10000.0
 

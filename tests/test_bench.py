@@ -1,4 +1,4 @@
-"""bench.py: the steal stamp, the per-query timeout, the warm-up pass, and
+"""bench.py: the steal stamps, the per-query timeout, the warm-up pass, and
 running it from outside the repository."""
 
 from __future__ import annotations
@@ -30,11 +30,28 @@ def test_steal_frac_all_idle_or_no_ticks_is_zero():
 
 
 def test_quiet_payload_is_not_contended():
-    quiet = bench.build_payload({"t01_token_topk": 1.5}, {}, False, bench.steal_frac(_START, _QUIET))
+    quiet = bench.build_payload({"t01_token_topk": 1.5}, {}, False, bench.steal_frac(_START, _QUIET), 0.0)
     assert "contended" not in quiet
     assert quiet["steal_frac"] == round(10 / 1510, 4) and quiet["value"] == 1.5
-    loaded = bench.build_payload({"t01_token_topk": 1.5}, {}, False, bench.steal_frac(_START, _LOADED))
+    loaded = bench.build_payload({"t01_token_topk": 1.5}, {}, False, bench.steal_frac(_START, _LOADED), 0.0)
     assert loaded["contended"] is True
+
+
+def test_payload_records_idle_steal_beside_the_rows_steal():
+    # The idle reading is recorded; "contended" still reads the rows' steal.
+    busy_rows = bench.build_payload(
+        {"t01_token_topk": 1.5}, {}, False,
+        bench.steal_frac(_START, _LOADED), bench.steal_frac(_START, _QUIET),
+    )
+    assert busy_rows["idle_steal_frac"] == round(10 / 1510, 4)
+    assert busy_rows["steal_frac"] == round(100 / 1100, 4)
+    assert busy_rows["contended"] is True
+    busy_idle = bench.build_payload(
+        {"t01_token_topk": 1.5}, {}, False,
+        bench.steal_frac(_START, _QUIET), bench.steal_frac(_START, _LOADED),
+    )
+    assert busy_idle["idle_steal_frac"] == round(100 / 1100, 4)
+    assert "contended" not in busy_idle
 
 
 def test_hung_row_is_a_timeout_error_and_the_rest_still_run(spark, monkeypatch):
@@ -92,3 +109,4 @@ def test_bench_runs_from_another_directory(tmp_path, sf_dir):
     payload = json.loads(out.stdout.strip().splitlines()[-1])
     assert "errors" not in payload
     assert payload["queries"]["t01_token_topk"] > 0
+    assert 0.0 <= payload["idle_steal_frac"] <= 1.0

@@ -3,13 +3,12 @@
 A builder returns a plan; the caller's action runs it.  The builders on
 ``EXEMPT`` are the exceptions.  For most, their work is an action by
 design: the streams run to completion (s03-s11), the io entries stage and
-write files (io01-io05), the trained ANN indexes collect centroids to the
-driver (a03, a04, a06, a08, a09, a11, a12), d07/d09 run the
-connected-components loop, and d10 checkpoints its shared band table.
-d05 and t17 checkpoint before their presentation sort, because without
-the checkpoint the sort's sampling pass measured slower (see their
-comments).  Every other builder must plan without executing anything: no
-parquet footer read for a schema, and no ``localCheckpoint``."""
+write files (io01-io05), d07/d09 run the connected-components loop, and
+d10 checkpoints its shared band table.  d05 and t17 checkpoint before
+their presentation sort, because without the checkpoint the sort's
+sampling pass measured slower (see their comments).  Every other builder
+must plan without executing anything: no parquet footer read for a
+schema, and no ``localCheckpoint``."""
 
 from __future__ import annotations
 
@@ -20,8 +19,6 @@ from hive_udf_neologd_spark.catalog import QUERIES
 EXEMPT = frozenset(
     """
     d07_dup_clusters d09_cluster_canonical d10_incremental_near_dup
-    a03_ann_ivf a04_ann_recall a06_kmeans_lloyd a08_ivf_trained
-    a09_ivf_np_kernel a11_recall_curve a12_ivf_sampled_train
     io01_csv_roundtrip io02_json_roundtrip io03_partition_pruned_read
     io04_small_file_compaction io05_schema_evolution_read
     s03_streaming_event_counts_e2e s04_streaming_term_counts_e2e
@@ -34,7 +31,7 @@ EXEMPT = frozenset(
 
 
 def test_allow_list_names_catalog_entries():
-    assert len(EXEMPT) == 26
+    assert len(EXEMPT) == 19
     assert EXEMPT <= set(QUERIES)
 
 

@@ -1,7 +1,7 @@
 """Regression-gate the catalog entries the driver does NOT check.
 
 The driver's correctness harness gates only ``DRIVER_GATED_50`` (see
-catalog.py); the other 61 entries — dedup, ANN, io,
+catalog.py); the other 50 entries — dedup, ANN, io,
 pandas-ops, most streaming-e2e — previously rode on judge re-runs of
 ``tools/check_oracle.py`` (VERDICT r3 'what's wrong' #3).  This module runs
 that same exact-multiset comparison (strictly stronger than the driver's

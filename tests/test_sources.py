@@ -21,9 +21,11 @@ from pyspark.sql.types import (
 from hive_udf_neologd_spark.sources import (
     SCHEMAS,
     TABLES,
+    local_frame,
     read_csv,
     read_json,
     read_table,
+    scratch_root,
     write_parquet,
 )
 
@@ -168,6 +170,45 @@ def test_compact_parquet(spark, tmp_path):
     assert spark.read.parquet(out).count() == docs.count()
 
 
+def test_local_frame_is_local_relation_and_value_identical(spark):
+    """sources.local_frame: constant frames must plan as a LocalTableScan
+    (plan-embedded rows, zero scan tasks) instead of the pickled-Python-RDD
+    ExistingRDD scan, with schema and values identical to the
+    createDataFrame(list, ddl) path."""
+    rows = [
+        (1, "reg", "normal", "テキスト", ["a", "b"]),
+        (2, "reg2", "search", "x y", []),
+    ]
+    ddl = "sid long, register string, mode string, text string, exp array<string>"
+    new = local_frame(spark, rows, ddl)
+    old = spark.createDataFrame(rows, ddl)
+    assert new.schema == old.schema
+    assert new.collect() == old.collect()
+    plan = new._sc._jvm.PythonSQLUtils.explainString(
+        new._jdf.queryExecution(), "formatted"
+    )
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_local_frame_does_not_rely_on_prepare(spark):
+    """local_frame sets the Arrow conf itself: with it switched off (a
+    session that never ran prepare), the frame still plans as a
+    LocalTableScan instead of silently falling back to a pickled RDD."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = local_frame(spark, [(1, "a"), (2, "b")], "k long, v string")
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        spark.conf.set(key, before)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
 # --- per-process scratch (sources.run_dir / stage_once) ---------------------
 @pytest.fixture
 def fresh_scratch(monkeypatch):
@@ -259,3 +300,46 @@ def test_scratch_cleanup_only_in_owning_process(fresh_scratch, monkeypatch, tmp_
     assert os.path.isdir(run)
     fresh_scratch._cleanup_scratch()
     assert not own.exists()
+
+
+def test_scratch_root_space_gate(tmp_path):
+    """tmpfs is only chosen when it has headroom."""
+    if os.path.isdir("/dev/shm"):
+        st = os.statvfs("/dev/shm")
+        free = st.f_bavail * st.f_frsize
+        assert scratch_root("x", free // 2) == "/dev/shm/x"
+        assert scratch_root("x", free * 2 + (1 << 30)) == "/tmp/x"
+
+
+def test_io_input_fixture_staged_once(spark, monkeypatch):
+    """io03-io05 stage their PURE input fixtures once per process through
+    sources.stage_once: a second builder invocation must reuse the staged
+    layout byte-for-byte (no rewrite — parquet part files keep their
+    mtimes) and return identical rows, and a fingerprint change must force
+    a restage."""
+    from hive_udf_neologd_spark import sources
+    from hive_udf_neologd_spark.operators import io as io_ops
+
+    def must_not_write(path):
+        raise AssertionError(f"restaged {path}")
+
+    monkeypatch.setattr(sources, "_staged", {})
+    df1 = io_ops.io04_small_file_compaction(spark, SF_DIR)
+    rows1 = sorted(map(tuple, df1.collect()))
+    sprayed = sources.stage_once(SF_DIR, "events", "events_sprayed", must_not_write)
+    parts = sorted(glob.glob(f"{sprayed}/*.parquet"))
+    assert parts, "sprayed fixture missing after first build"
+    mtimes = [os.path.getmtime(p) for p in parts]
+
+    df2 = io_ops.io04_small_file_compaction(spark, SF_DIR)
+    rows2 = sorted(map(tuple, df2.collect()))
+    assert rows1 == rows2
+    parts2 = sorted(glob.glob(f"{sprayed}/*.parquet"))
+    assert parts2 == parts
+    assert [os.path.getmtime(p) for p in parts2] == mtimes  # no rewrite
+
+    # A fingerprint mismatch (regenerated sf_dir) must restage.
+    sources._staged[sprayed] = ("stale",)
+    io_ops.io04_small_file_compaction(spark, SF_DIR)
+    parts3 = sorted(glob.glob(f"{sprayed}/*.parquet"))
+    assert [os.path.getmtime(p) for p in parts3] != mtimes  # rewritten

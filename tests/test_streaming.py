@@ -121,3 +121,32 @@ def test_stream_timeout_stops_query_and_raises(spark, sf_dir, monkeypatch):
     with pytest.raises(TimeoutError, match="s03_sink"):
         e2e.s03_streaming_event_counts_e2e(spark, sf_dir)
     assert spark.streams.active == []
+
+
+def test_stream_partition_derivation(tmp_path):
+    """Scale-adaptive streaming state partitioning: ceil(bytes/advisory)
+    clamped to [1, max] — 1 for a tiny staged snapshot, proportional for
+    large ones, and never 0 or unbounded."""
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    (stage / "part-0.parquet").write_bytes(b"x" * 1024)
+    assert e2e._derive_stream_partitions(str(stage)) == 1
+    # Non-parquet files are ignored.
+    (stage / "_SUCCESS").write_bytes(b"y" * 10**6)
+    assert e2e._derive_stream_partitions(str(stage)) == 1
+    # ~3.2 advisory chunks → 4 partitions (monkeypatch-free: scale the
+    # fixture, not the constant, via a tiny advisory override file count).
+    n_bytes = int(3.2 * e2e._STREAM_ADVISORY_BYTES)
+    big = stage / "part-1.parquet"
+    with open(big, "wb") as f:
+        f.truncate(n_bytes)  # sparse — no real 200 MB write
+    assert e2e._derive_stream_partitions(str(stage)) == 4
+    # Missing dir → floor of 1, not an exception.
+    assert e2e._derive_stream_partitions(str(tmp_path / "nope")) == 1
+
+
+def test_stream_shuffle_scope_restores_conf(spark):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with e2e._stream_shuffle_scope(spark, "/nonexistent"):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

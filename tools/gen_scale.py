@@ -11,7 +11,7 @@ Replication scheme (replica r ∈ 0..9, all shifts deterministic):
 * every key column shifts by ``r × OFFSET_column`` where the offset is a
   power of ten above the column's max — cross-table join structure
   (orders↔lineitem↔customer, part/supplier FKs) is preserved exactly,
-  and key-derived modular patterns (ANN query/centroid sets) keep the
+  and key-derived modular patterns (a01's query set) keep the
   same densities;
 * fixed dimensions (region, nation) are NOT replicated — at real scale
   dimension tables do not grow with the fact tables;
