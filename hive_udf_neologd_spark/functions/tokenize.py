@@ -13,8 +13,9 @@ Parity surface (SURVEY.md §2.1):
 * O10 — per-worker lazy analyzer singleton keyed by config (the Spark
         analog of the transient per-task cache, KuromojiNEologdUDF.java:82-83,
         131-142); one iterator Arrow UDF kernel (``arrow_map``) so init is
-        paid once per batch stream, with Arrow columnar transfer and no
-        pandas on the worker (SURVEY.md §1.3).
+        paid once per batch stream, with Arrow columnar transfer.  Results
+        are written as Arrow buffers (``arrow_converter``), so a worker
+        imports no pandas (SURVEY.md §1.3).
 * O11 — deterministic (Spark default; never ``.asNondeterministic()``).
 
 Config is resolved on the driver and shipped as a pickled closure; the
@@ -24,7 +25,9 @@ Kryo-transient trick, SURVEY.md §3 step 3).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from array import array
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from itertools import accumulate, chain
 
 import pyarrow as pa
 from pyspark.sql import SparkSession
@@ -91,18 +94,105 @@ def _config_key(mode=None, stop_words=None, stop_tags=None, user_dict=None) -> t
     )
 
 
+def _bitmap(flags: list) -> pa.Buffer:
+    """``flags`` (truthiness) packed least significant bit first, Arrow's
+    bitmap layout."""
+    bits = "0" + "".join(["1" if f else "0" for f in reversed(flags)])
+    return pa.py_buffer(int(bits, 2).to_bytes((len(flags) + 7) // 8, "little"))
+
+
+def _validity(values: list) -> tuple[pa.Buffer | None, int]:
+    """The validity bitmap of ``values`` (``None`` is null) and its null
+    count; no bitmap when nothing is null."""
+    nulls = values.count(None)
+    return (_bitmap([v is not None for v in values]) if nulls else None), nulls
+
+
+def int32_offsets(lengths: Iterable[int]) -> pa.Buffer:
+    """Arrow's int32 offsets over ``lengths`` (string bytes or list
+    elements).  A batch past 2**31 - 1 in total raises instead of
+    wrapping round."""
+    try:
+        return pa.py_buffer(array("i", accumulate(lengths, initial=0)))
+    except OverflowError:
+        raise OverflowError(
+            "one result batch holds more than 2**31 - 1 string bytes or list "
+            "elements, past Arrow's int32 offsets"
+        ) from None
+
+
+def arrow_converter(arrow_type: pa.DataType) -> Callable[[list], pa.Array]:
+    """A function from a list of Python values (``None`` is null) to a
+    ``pa.Array`` of exactly ``arrow_type``, written through
+    ``pa.Array.from_buffers``.  It covers the types ``arrow_map``'s
+    callers declare: ``string``, ``int64``, ``bool``, ``list`` and
+    ``struct`` (rows as dicts, a missing key is null) over them.
+    ``pa.array`` would do the same, but its first call imports pandas
+    (pyarrow 16's ``_is_array_like``): 0.3-0.5 s and 39 MB per cold
+    worker on a 4-CPU host.  Any other type is a ``TypeError`` here,
+    when the UDF is built."""
+    t = arrow_type
+    if pa.types.is_string(t):
+
+        def convert(values: list) -> pa.Array:
+            validity, nulls = _validity(values)
+            parts = [b"" if v is None else str.encode(v) for v in values]
+            offsets = int32_offsets(map(len, parts))
+            data = pa.py_buffer(b"".join(parts))
+            return pa.Array.from_buffers(t, len(values), [validity, offsets, data], nulls)
+
+    elif pa.types.is_int64(t):
+
+        def convert(values: list) -> pa.Array:
+            validity, nulls = _validity(values)
+            data = pa.py_buffer(array("q", [0 if v is None else v for v in values]))
+            return pa.Array.from_buffers(t, len(values), [validity, data], nulls)
+
+    elif pa.types.is_boolean(t):
+
+        def convert(values: list) -> pa.Array:
+            validity, nulls = _validity(values)
+            return pa.Array.from_buffers(t, len(values), [validity, _bitmap(values)], nulls)
+
+    elif pa.types.is_list(t):
+        element = arrow_converter(t.value_type)
+
+        def convert(values: list) -> pa.Array:
+            validity, nulls = _validity(values)
+            offsets = int32_offsets([0 if v is None else len(v) for v in values])
+            child = element(list(chain.from_iterable(v for v in values if v is not None)))
+            return pa.Array.from_buffers(
+                t, len(values), [validity, offsets], nulls, children=[child]
+            )
+
+    elif pa.types.is_struct(t):
+        fields = [(f.name, arrow_converter(f.type)) for f in t]
+
+        def convert(values: list) -> pa.Array:
+            validity, nulls = _validity(values)
+            children = [
+                conv([None if v is None else v.get(name) for v in values])
+                for name, conv in fields
+            ]
+            return pa.Array.from_buffers(t, len(values), [validity], nulls, children=children)
+
+    else:
+        raise TypeError(f"arrow_map cannot build results of Arrow type {t}")
+    return convert
+
+
 def arrow_map(return_type: DataType, make: Callable[[], Callable]):
     """The one tokenizer UDF kernel: an iterator Arrow UDF that calls
     ``make()`` once per task on the worker, for a per-value function ``f``,
-    and maps ``f`` over each batch's Python values.  The result's Arrow type
-    is always given, so an all-null batch keeps the declared type.  No
-    pandas is imported on either side."""
-    arrow_type = to_arrow_type(return_type)
+    and maps ``f`` over each batch's Python values.  Each result batch is
+    built by ``arrow_converter`` for the declared type, so an all-null
+    batch keeps it and the kernel imports no pandas."""
+    convert = arrow_converter(to_arrow_type(return_type))
 
     def _map(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         f = make()
         for arr in batches:
-            yield pa.array([f(v) for v in arr.to_pylist()], arrow_type)
+            yield convert([f(v) for v in arr.to_pylist()])
 
     return arrow_udf(_map, return_type)
 

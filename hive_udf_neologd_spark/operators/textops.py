@@ -1327,6 +1327,23 @@ T21_SQL = __import__(
 ).t21_values_sql()
 
 
+def parity_scorer(axis: str):
+    """``parity_query``'s ``arrow_map`` kernel: a corpus row index → the
+    axis metric's count columns (``struct<long...>``), resolved and
+    scored on the worker by ``parity_harness.score``."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    cols = list(METRICS[AXES[axis].metric].columns)
+
+    def _scorer():
+        from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, score
+
+        ax = AXES[axis]
+        return lambda i: dict(zip(cols, score(ax, ax.corpus[i])))
+
+    return arrow_map(StructType([StructField(c, LongType()) for c in cols]), _scorer)
+
+
 def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXTERNAL parity metric for one axis of tokenizer/parity_harness.py
     (t22 spans, t25 modes, t27 lemmas, t28 readings, t29 user dict, t30
@@ -1343,8 +1360,6 @@ def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the recorded aggregates as a VALUES table with the same IEEE
     metric expression (``parity_harness.values_sql``) — full hash check."""
     prepare(spark)
-    from pyspark.sql.types import LongType, StructField, StructType
-
     a = AXES[axis]
     metric = METRICS[a.metric]
     cols = list(metric.columns)
@@ -1353,15 +1368,7 @@ def parity_query(axis: str, spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, row[1]) for i, row in enumerate(a.corpus)],
         "row long, register string",
     )
-
-    def _scorer():
-        from hive_udf_neologd_spark.tokenizer.parity_harness import AXES, score
-
-        ax = AXES[axis]
-        return lambda i: dict(zip(cols, score(ax, ax.corpus[i])))
-
-    _score = arrow_map(StructType([StructField(c, LongType()) for c in cols]), _scorer)
-    per = df.select("register", _score("row").alias("s"))
+    per = df.select("register", parity_scorer(axis)("row").alias("s"))
     # rollup: per-register rows AND the grand total from ONE aggregation
     # over ONE ArrowEvalPython pass (a by_reg/total unionByName would embed
     # the scoring subtree twice and re-tokenize the corpus; NULL register =

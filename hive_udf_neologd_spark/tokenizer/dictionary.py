@@ -21,13 +21,11 @@ listed segments as separate tokens (日本経済新聞 → 日本/経済/新聞 
 
 from __future__ import annotations
 
-import gzip
 import hashlib
 import io
 import marshal
 import os
 import re
-import urllib.request
 from dataclasses import dataclass, field
 from functools import lru_cache
 from itertools import starmap
@@ -44,10 +42,10 @@ SNAPSHOT_PATH = os.path.join(os.path.dirname(__file__), "data", "mecab_core_snap
 # Kuromoji ships compiled FST/cost binaries for the same reason the CSV
 # alone is not the runtime asset (build.sh:249) — parsing 59k CSV rows cost
 # a measured 0.27 s per Python worker process (VERDICT r5 'What's wrong'
-# #2: the t01 bench regression); the marshal load is ~20 ms and is
-# digest-guarded so a regenerated/edited CSV can never be shadowed by a
-# stale binary (falls back to parsing, same entries either way —
-# tests/test_dictionary_asset.py).
+# #2: the t01 bench regression); the marshal load takes 57-89 ms on a
+# 4-CPU host and is digest-guarded so a regenerated/edited CSV can never
+# be shadowed by a stale binary (falls back to parsing, same entries
+# either way — tests/test_dictionary_asset.py).
 SNAPSHOT_BIN_PATH = SNAPSHOT_PATH[:-4] + ".marshal"
 
 # Reference parity constants (KuromojiNEologdUDF.java:71-73).
@@ -61,9 +59,10 @@ _ASCII_SURFACE_RE = re.compile(r"[A-Za-z0-9 ]+")
 
 class DictEntry(NamedTuple):
     """One lexicon row.  A NamedTuple (not a dataclass) deliberately:
-    58k entries are materialized per worker process, and NamedTuple
-    construction is ~3× cheaper than a frozen dataclass while staying
-    directly buildable from the marshal-precompiled snapshot rows."""
+    65,017 entries (over 64,482 surfaces) are materialized per worker
+    process, and NamedTuple construction is ~3× cheaper than a frozen
+    dataclass while staying directly buildable from the
+    marshal-precompiled snapshot rows."""
 
     surface: str
     pos: str
@@ -291,15 +290,15 @@ def snapshot_digest(csv_bytes: bytes) -> str:
 
 @lru_cache(maxsize=1)
 def snapshot_entries() -> tuple[DictEntry, ...]:
-    """Load the packaged MeCab snapshot once per process (59k rows).
+    """Load the packaged MeCab snapshot once per process (63,938 rows).
 
-    Preferentially from the marshal-precompiled binary (~20 ms), guarded
-    by a digest of the CSV + connection.py (see snapshot_digest) so a
-    regenerated CSV — or an edited class mapping — with a stale binary
-    falls back to parsing the CSV itself (~0.3 s) — identical entries
-    either way.  Missing asset → empty (the hand-built lexicon alone
-    still passes every reference golden; the snapshot only widens
-    coverage)."""
+    Preferentially from the marshal-precompiled binary (57-89 ms on a
+    4-CPU host), guarded by a digest of the CSV + connection.py (see
+    snapshot_digest) so a regenerated CSV — or an edited class mapping —
+    with a stale binary falls back to parsing the CSV itself (~0.3 s) —
+    identical entries either way.  Missing asset → empty (the hand-built
+    lexicon alone still passes every reference golden; the snapshot only
+    widens coverage)."""
     if not os.path.exists(SNAPSHOT_PATH):
         return ()
     with open(SNAPSHOT_PATH, "rb") as f:
@@ -557,6 +556,13 @@ def fetch_user_dict_url(url: str) -> list[str]:
     (KuromojiNEologdUDF.java:251-304).  The reference bounds connect at
     10 s and read at 60 s; urllib takes one timeout for both, and it is
     the looser 60 s ``READ_TIMEOUT_SEC``, so a connect may take up to 60 s."""
+    # Imported here, not at module level: only the driver fetches, and
+    # urllib.request pulls http.client, ssl and email into every worker
+    # that imports the tokenizer (0.09-0.13 s per cold worker on a 4-CPU
+    # host).
+    import gzip
+    import urllib.request
+
     if not (url.startswith("http://") or url.startswith("https://")):
         raise UserDictionaryError(f"unsupported user dictionary URL scheme: {url!r}")
     req = urllib.request.Request(url, headers={"Accept-Encoding": "gzip"})

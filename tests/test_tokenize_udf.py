@@ -5,13 +5,31 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import textwrap
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+)
 from pyspark.util import PythonEvalType
 
 from hive_udf_neologd_spark import register_udfs, tokenize_ja, tokenize_ja_version
-from hive_udf_neologd_spark.functions.tokenize import RICH_TOKENS, tokenize_ja_rich
+from hive_udf_neologd_spark.functions.tokenize import (
+    RICH_TOKENS,
+    arrow_converter,
+    arrow_map,
+    int32_offsets,
+    tokenize_ja_rich,
+)
+from hive_udf_neologd_spark.operators.textops import parity_scorer
 from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionaryError
 from hive_udf_neologd_spark.version import VERSION
 
@@ -98,15 +116,107 @@ def test_all_null_and_empty_batches_keep_declared_type(spark, factory, type_stri
 
 
 def test_udf_module_imports_without_pandas():
+    """One batch through each ``arrow_map`` kernel (``tokenize_ja``,
+    ``tokenize_ja_rich``, the parity scorer) in a fresh interpreter loads
+    no pandas, ssl or urllib.request.  Inputs are built from buffers:
+    ``pa.array`` itself imports pandas."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = (
-        "import sys\n"
-        "import hive_udf_neologd_spark.functions.tokenize\n"
-        "loaded = sorted(m for m in sys.modules if m.split('.')[0] == 'pandas')\n"
-        "assert not loaded, loaded\n"
+    code = textwrap.dedent(
+        """
+        import sys
+        from array import array
+        from itertools import accumulate
+
+        import pyarrow as pa
+
+        from hive_udf_neologd_spark.functions.tokenize import tokenize_ja, tokenize_ja_rich
+        from hive_udf_neologd_spark.operators.textops import parity_scorer
+
+        lines = ["日本語".encode(), b"", b"abc"]
+        offsets = pa.py_buffer(array("i", accumulate(map(len, lines), initial=0)))
+        validity = pa.py_buffer(bytes([0b101]))
+        text = pa.Array.from_buffers(
+            pa.string(), 3, [validity, offsets, pa.py_buffer(b"".join(lines))], 1
+        )
+        rows = pa.Array.from_buffers(pa.int64(), 2, [None, pa.py_buffer(array("q", [0, 1]))])
+
+        toks = next(tokenize_ja().func(iter([text])))
+        assert toks.to_pylist() == [["日本語"], None, ["abc"]], toks
+        rich = next(tokenize_ja_rich().func(iter([text])))
+        assert [t["term"] for t in rich[0].as_py()] == ["日本語"] and rich[1].as_py() is None
+        scores = next(parity_scorer("t22").func(iter([rows])))
+        assert len(scores) == 2 and scores.null_count == 0, scores
+
+        loaded = sorted(
+            m for m in sys.modules if m.split(".")[0] == "pandas" or m in ("ssl", "urllib.request")
+        )
+        assert not loaded, loaded
+        """
     )
     env = {**os.environ, "PYTHONPATH": root}
     subprocess.run([sys.executable, "-c", code], cwd=root, env=env, check=True, timeout=120)
+
+
+def _values(t):
+    """A hypothesis strategy for one Python value of Arrow type ``t``,
+    null included: ``''`` and multibyte text, empty lists, dict rows
+    with null and missing fields."""
+    from hypothesis import strategies as st
+
+    if pa.types.is_string(t):
+        leaf = st.text(st.sampled_from("aあ漢ー😀") | st.characters(), max_size=6)
+    elif pa.types.is_int64(t):
+        leaf = st.integers(-(2**63), 2**63 - 1)
+    elif pa.types.is_boolean(t):
+        leaf = st.booleans()
+    elif pa.types.is_list(t):
+        leaf = st.lists(_values(t.value_type), max_size=4)
+    else:
+        leaf = st.fixed_dictionaries({}, optional={f.name: _values(f.type) for f in t})
+    return st.none() | leaf
+
+
+# The three callers' declared types, then the leaves on their own.
+@pytest.mark.parametrize(
+    "spark_type",
+    [
+        tokenize_ja().returnType,
+        tokenize_ja_rich().returnType,
+        parity_scorer("t22").returnType,
+        StringType(),
+        LongType(),
+        BooleanType(),
+    ],
+    ids=lambda t: t.simpleString(),
+)
+def test_arrow_converter_equals_pa_array(spark_type):
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    t = to_arrow_type(spark_type)
+    convert = arrow_converter(t)
+
+    @settings(max_examples=150, deadline=None)
+    @given(st.lists(_values(t), max_size=12))
+    @example([])
+    @example([None, None])
+    def check(values):
+        out = convert(values)
+        out.validate(full=True)
+        assert str(out.type) == str(t)  # field names included: list<element: ...>
+        assert out.equals(pa.array(values, t))
+
+    check()
+
+
+def test_arrow_converter_refuses_other_types_and_2gib_batches():
+    with pytest.raises(TypeError):
+        arrow_map(DoubleType(), lambda: float)
+    with pytest.raises(TypeError):
+        arrow_map(ArrayType(IntegerType()), lambda: list)
+    assert int32_offsets([2**31 - 1]).size == 8
+    with pytest.raises(OverflowError):
+        int32_offsets([2**30, 2**30])
 
 
 def test_sql_registration(spark, docs):

@@ -91,13 +91,15 @@ class TestGoldens:
 
 
 def test_tokenizer_imports_without_spark():
-    """The tokenizer loads without pandas or pyspark; the package's UDF
-    exports still resolve, on first access."""
+    """The tokenizer loads without pandas, pyspark, ssl or urllib.request
+    (only the driver fetches a user-dict URL); the package's UDF exports
+    still resolve, on first access."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
         "import sys\n"
         "import hive_udf_neologd_spark.tokenizer.analyzer\n"
-        "loaded = sorted(m for m in sys.modules if m.split('.')[0] in ('pandas', 'pyspark'))\n"
+        "loaded = sorted(m for m in sys.modules if m.split('.')[0] in ('pandas', 'pyspark')\n"
+        "                or m in ('ssl', 'urllib.request'))\n"
         "assert not loaded, loaded\n"
         "from hive_udf_neologd_spark import register_udfs, tokenize_ja, tokenize_ja_version\n"
         "from hive_udf_neologd_spark.functions import tokenize\n"
